@@ -21,15 +21,14 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * across `salt` tasks instead of serializing on one writer thread.
   *
   * The parquet schemas are constructed to be byte-compatible with
-  * what Spark itself would write for `instanceSchema` (INT32 +
+  * what Spark itself writes for the same typed columns (INT32 +
   * int(8/16) logical annotations for byte/short, plain INT32 for
   * char/int, INT64 for object refs/longs), so readers — Spark,
-  * DuckDB, the reference's analysis scripts — see identical types to
-  * the previous per-class DataFrame writes.
+  * DuckDB, the reference's analysis scripts — see the Spark types.
   */
 object ClassTableWriter extends Serializable {
 
-  /** Parquet message type mirroring HeapDump.instanceSchema. */
+  /** Parquet message type of one class table: `obj_id` + the layout. */
   def parquetSchema(layout: Seq[LayoutField]): MessageType = {
     val b = Types.buildMessage()
     b.addField(Types.required(PrimitiveTypeName.INT64).named("obj_id"))

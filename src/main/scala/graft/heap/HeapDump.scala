@@ -1,18 +1,19 @@
 package graft.heap
 
 import HprofModel._
-import HprofParser.{Cursor, SubVisitor}
+import HprofParser.SubVisitor
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-import org.apache.spark.sql.types._
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
 
-/** Byte-range reads through the Hadoop FileSystem API so the same
-  * code path serves file:// in tests and hdfs://;s3:// on a cluster.
+/** File access through the Hadoop FileSystem API so the same code
+  * path serves file:// in tests and hdfs://;s3:// on a cluster.
   */
 object HeapIO {
   def withFs[T](pathStr: String)(f: (FileSystem, Path) => T): T = {
@@ -20,18 +21,43 @@ object HeapIO {
     f(p.getFileSystem(new Configuration()), p)
   }
 
-  def fileLength(pathStr: String): Long =
-    withFs(pathStr)((fs, p) => fs.getFileStatus(p).getLen)
+  def withReader[T](pathStr: String)(f: HprofReader => T): T = {
+    val r = new HprofReader(pathStr)
+    try f(r) finally r.close()
+  }
+}
 
-  def readRange(pathStr: String, offset: Long, length: Int): Array[Byte] =
-    withFs(pathStr) { (fs, p) =>
-      val in = fs.open(p)
-      try {
-        val buf = new Array[Byte](length)
-        in.readFully(offset, buf)
-        buf
-      } finally in.close()
-    }
+/** ONE open handle on a dump for a sequence of reads — a per-record
+  * open/seek/close would cost more than the parse, above all for the
+  * many small metadata records and on remote filesystems. Every reader
+  * of the format goes through here: the header + record walk at
+  * planning time and the executors' record-body reads.
+  */
+final class HprofReader(pathStr: String) extends java.io.Closeable {
+  private val path = new Path(pathStr)
+  private val fs = path.getFileSystem(new Configuration())
+  private val in = fs.open(path)
+
+  private def read(offset: Long, length: Int): Array[Byte] = {
+    val buf = new Array[Byte](length)
+    in.readFully(offset, buf)
+    buf
+  }
+
+  /** Header parse + the sequential 9-byte record-header walk. */
+  def index(): (HprofParser.Header, Vector[RecordPtr]) = {
+    val len = fs.getFileStatus(path).getLen
+    val header = HprofParser.parseHeader(read(0L, math.min(64L, len).toInt))
+    (header, HprofParser.indexRecords(read, len, header.bodyStart))
+  }
+
+  def body(r: RecordPtr): Array[Byte] = {
+    require(r.bodyLength <= Int.MaxValue,
+      s"record body ${r.bodyLength} exceeds 2 GiB buffer limit (tag ${r.tag})")
+    read(r.bodyOffset, r.bodyLength.toInt)
+  }
+
+  override def close(): Unit = in.close()
 }
 
 /** Driver-side metadata index built in pass 1 (SURVEY.md §2.A1-A3):
@@ -99,67 +125,46 @@ object HeapIndex {
 /** A parsed HPROF heap dump exposed as Spark DataFrames (SURVEY.md
   * §2.A). Ingestion is two-pass: pass 1 walks record headers
   * sequentially (9 bytes per record) and parses class/string metadata
-  * with distributed tasks; pass 2 parses heap segments fully in
-  * parallel, keyed by (offset, length) ranges — elastic to cluster
-  * size, same shape as the reference's rayon parallelism
-  * (dump_to_parquet.rs:193) but not bound to one machine.
+  * with distributed tasks; pass 2 (`writeParquet`) parses every heap
+  * segment exactly once, fully in parallel, keyed by (offset, length)
+  * ranges — elastic to cluster size, same shape as the reference's
+  * rayon parallelism (dump_to_parquet.rs:193) but not bound to one
+  * machine.
   *
-  * All reference columns are "robo mode": object references are bare
-  * longs; the id→type view is a join against `objectIndex` (SURVEY.md
-  * §3 — lazy join beats materializing a string per reference cell).
+  * The one pass has two output modes. Robo mode (default) keeps object
+  * references as bare longs; the id→type view is a join against
+  * `_object_index` (SURVEY.md §3 — lazy join beats materializing a
+  * string per reference cell). Resolved mode rewrites the written
+  * robo tables with STRUCT{id,type} references.
   */
 final class HeapDump(spark: SparkSession, path: String) {
   import HprofModel.Tag
 
-  val header: HprofParser.Header =
-    HprofParser.parseHeader(HeapIO.readRange(path, 0L, math.min(64L, HeapIO.fileLength(path)).toInt))
+  val (header, records) = HeapIO.withReader(path)(_.index())
   val idSize: Int = header.idSize
-
-  /** Sequential header walk with ONE open handle (9 bytes + seek per
-    * record; a per-record open would cost more than the parse).
-    */
-  val records: Vector[RecordPtr] = HeapIO.withFs(path) { (fs, p) =>
-    val len = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-    try HprofParser.indexRecords((off, n) => {
-      val buf = new Array[Byte](n)
-      in.readFully(off, buf)
-      buf
-    }, len, header.bodyStart)
-    finally in.close()
-  }
 
   private val segPtrs = records.filter(r => Tag.isHeapSegment(r.tag))
 
   private def parallelism(n: Int): Int =
     math.max(1, math.min(n, spark.sparkContext.defaultParallelism))
 
-  /** Parse a set of records on executors; `f` runs per record body.
-    * One file handle per partition — a per-record open/seek/close
-    * would dominate for the many small metadata records (UTF8 etc.).
+  /** Parse a set of records on executors; `f` runs per record body,
+    * one file handle per partition.
     */
-  private def recordRdd[T: ClassTag](ptrs: Seq[RecordPtr])(f: (RecordPtr, Array[Byte]) => Iterator[T]): RDD[T] = {
+  private def recordRdd[T: ClassTag](ptrs: Seq[RecordPtr])(f: Array[Byte] => Iterator[T]): RDD[T] = {
     val p = path
     spark.sparkContext.parallelize(ptrs, parallelism(ptrs.size))
       .mapPartitions { it =>
-        HeapIO.withFs(p) { (fs, hp) =>
-          val in = fs.open(hp)
-          try it.flatMap { r =>
-            require(r.bodyLength <= Int.MaxValue,
-              s"record body ${r.bodyLength} exceeds 2 GiB buffer limit (tag ${r.tag})")
-            val buf = new Array[Byte](r.bodyLength.toInt)
-            in.readFully(r.bodyOffset, buf)
-            f(r, buf)
-          }.toVector.iterator
-          finally in.close()
-        }
+        HeapIO.withReader(p)(rd => it.flatMap(r => f(rd.body(r))).toVector.iterator)
       }
   }
 
-  /** Pass 2 workhorse: scan every heap segment with a visitor. */
+  /** Scan every heap segment with a visitor (pass-1 class dumps,
+    * `renderObjects`).
+    */
   private def segmentRdd[T: ClassTag](mk: mutable.ArrayBuffer[T] => SubVisitor): RDD[T] = {
     val idSz = idSize
-    recordRdd(segPtrs) { (_, body) =>
+    recordRdd(segPtrs) { body =>
       val buf = mutable.ArrayBuffer.empty[T]
       HprofParser.scanSegment(body, idSz, mk(buf))
       buf.iterator
@@ -169,16 +174,16 @@ final class HeapDump(spark: SparkSession, path: String) {
   /** Pass 1: distributed metadata parse, collected to the driver. */
   val index: HeapIndex = {
     val idSz = idSize
-    val utf8 = recordRdd(records.filter(_.tag == Tag.Utf8)) { (_, b) =>
+    val utf8 = recordRdd(records.filter(_.tag == Tag.Utf8)) { b =>
       Iterator.single(HprofParser.parseUtf8(b, idSz))
     }.collect().toMap
-    val loads = recordRdd(records.filter(_.tag == Tag.LoadClass)) { (_, b) =>
+    val loads = recordRdd(records.filter(_.tag == Tag.LoadClass)) { b =>
       Iterator.single(HprofParser.parseLoadClass(b, idSz))
     }.collect()
-    val frames = recordRdd(records.filter(_.tag == Tag.StackFrame)) { (_, b) =>
+    val frames = recordRdd(records.filter(_.tag == Tag.StackFrame)) { b =>
       Iterator.single(HprofParser.parseStackFrame(b, idSz))
     }.collect()
-    val traces = recordRdd(records.filter(_.tag == Tag.StackTrace)) { (_, b) =>
+    val traces = recordRdd(records.filter(_.tag == Tag.StackTrace)) { b =>
       Iterator.single(HprofParser.parseStackTrace(b, idSz))
     }.collect()
     val classDumps = segmentRdd[ClassDumpInfo] { buf =>
@@ -207,24 +212,6 @@ final class HeapDump(spark: SparkSession, path: String) {
   def countRecords: DataFrame =
     records.groupBy(r => Tag.name(r.tag)).map { case (k, v) => (k, v.size.toLong) }
       .toSeq.sortBy(-_._2).toDF("record_type", "count")
-
-  // -- A9: robo-style object index ------------------------------------
-  def objectIndex: DataFrame = {
-    val names = bcClassNames
-    segmentRdd[(Long, String)] { buf =>
-      new SubVisitor {
-        override def onInstance(ev: InstanceEv): Unit =
-          buf += ev.objId -> names.value.getOrElse(ev.classObjId, "(unresolved)")
-        override def onPrimArray(ev: PrimArrayEv): Unit =
-          buf += ev.objId -> s"${BasicType.javaName(ev.elemType)}[]"
-        override def onObjArray(ev: ObjArrayEv): Unit =
-          buf += ev.objId -> names.value.get(ev.arrayClassObjId)
-            .map(HeapIndex.normalizeArrayName).getOrElse("(unresolved)[]")
-        override def onClassDump(cd: ClassDumpInfo): Unit =
-          buf += cd.classObjId -> s"class ${names.value.getOrElse(cd.classObjId, "(unresolved)")}"
-      }
-    }.toDF("obj_id", "type_name")
-  }
 
   // -- A9: class hierarchy (driver-side, tiny) ------------------------
   /** instance_size (the class dump's declared per-instance field
@@ -258,45 +245,6 @@ final class HeapDump(spark: SparkSession, path: String) {
       }
     }.toDF("class_obj_id", "class_name", "slot_idx", "field_name", "field_type")
 
-  // -- A6: object arrays ----------------------------------------------
-  def objectArrays: DataFrame = {
-    val names = bcClassNames
-    segmentRdd[(Long, String, Seq[Long])] { buf =>
-      new SubVisitor {
-        override def onObjArray(ev: ObjArrayEv): Unit =
-          buf += ((ev.objId, names.value.getOrElse(ev.arrayClassObjId, "(unresolved)"), ev.elements))
-      }
-    }.toDF("obj_id", "class_name", "elements")
-  }
-
-  // -- A5: primitive arrays -------------------------------------------
-  /** All primitive arrays in one pass (one non-null values column per
-    * row). Persist this and derive the 8 typed tables to avoid 8
-    * segment re-parses.
-    */
-  def primitiveArraysAll: DataFrame =
-    spark.createDataFrame(segmentRdd[PrimArrayEv] { buf =>
-      new SubVisitor { override def onPrimArray(ev: PrimArrayEv): Unit = buf += ev }
-    })
-
-  private[heap] val primCols = Map(
-    BasicType.Boolean -> "booleans", BasicType.Byte -> "bytes",
-    BasicType.Char -> "chars", BasicType.Short -> "shorts",
-    BasicType.Int -> "ints", BasicType.Long -> "longs",
-    BasicType.Float -> "floats", BasicType.Double -> "doubles")
-
-  def primitiveArrays(typeTag: Int, from: DataFrame = null): DataFrame = {
-    val src = if (from == null) primitiveArraysAll else from
-    src.filter(src("elemType") === typeTag)
-      .select(src("objId").as("obj_id"), src(primCols(typeTag)).as("values"))
-  }
-
-  // -- A8: GC roots ---------------------------------------------------
-  def gcRoots: DataFrame =
-    segmentRdd[GcRootEv] { buf =>
-      new SubVisitor { override def onGcRoot(ev: GcRootEv): Unit = buf += ev }
-    }.toDF("root_type", "obj_id", "thread_serial", "frame_index")
-
   // -- A7: static fields (driver-side from class dumps) ---------------
   /** slot_idx = the slot's position in the CLASS DUMP's declaration
     * order — the order `dump-objects` renders statics in, which a
@@ -329,54 +277,6 @@ final class HeapDump(spark: SparkSession, path: String) {
   def stackTraces: DataFrame =
     index.stackTraces.map(t => (t.serial, t.threadSerial, t.frameIds))
       .toDF("stack_trace_serial", "thread_serial", "frame_ids")
-
-  // -- A4: per-class typed instance tables ----------------------------
-  private[heap] def instancesEvents: RDD[InstanceEv] =
-    segmentRdd[InstanceEv] { buf =>
-      new SubVisitor { override def onInstance(ev: InstanceEv): Unit = buf += ev }
-    }
-
-  def instancesRaw: DataFrame = spark.createDataFrame(instancesEvents)
-
-  private def sparkType(tag: Int): DataType = tag match {
-    case BasicType.Object => LongType
-    case BasicType.Boolean => BooleanType
-    case BasicType.Char => IntegerType
-    case BasicType.Float => FloatType
-    case BasicType.Double => DoubleType
-    case BasicType.Byte => ByteType
-    case BasicType.Short => ShortType
-    case BasicType.Int => IntegerType
-    case BasicType.Long => LongType
-  }
-
-  def instanceSchema(classId: Long): StructType =
-    StructType(StructField("obj_id", LongType, nullable = false) +:
-      index.classes(classId).layout.map(f => StructField(f.name, sparkType(f.typeTag), nullable = false)))
-
-  /** Typed instance table for one class id; field columns decoded on
-    * executors from the raw bytes against the broadcast layout.
-    */
-  def instances(classId: Long, from: DataFrame = null): DataFrame = {
-    val layout = index.classes(classId).layout
-    val idSz = idSize
-    val src = if (from == null) instancesRaw else from
-    val rows = src.filter(src("classObjId") === classId)
-      .select("objId", "fields").rdd.map { r =>
-        Row.fromSeq(r.getLong(0) +: HprofParser.decodeInstance(r.getAs[Array[Byte]](1), idSz, layout))
-      }
-    spark.createDataFrame(rows, instanceSchema(classId))
-  }
-
-  /** Typed instance table by class name (first matching class id when
-    * several loaders define the name — reference writes one file per
-    * (name, id) and its analysis globs them together).
-    */
-  def instancesByName(name: String, from: DataFrame = null): Option[DataFrame] =
-    index.classes.values.filter(_.name == name).map(_.objId).toSeq.sorted match {
-      case Seq() => None
-      case ids => Some(ids.map(id => instances(id, from)).reduce(_ unionByName _))
-    }
 
   // -- A13: human-readable object rendering ---------------------------
   /** Behavior-parallel to the reference's `dump-objects`
@@ -443,42 +343,51 @@ final class HeapDump(spark: SparkSession, path: String) {
     * (16-way chunking falls out of partition count instead of a
     * writer-thread pool).
     *
-    * `resolveRefs = true` is the reference's DEFAULT (non-robo) mode:
-    * every reference field in a per-class table is materialized as
-    * STRUCT{id,type} by joining the object index — one shuffle join
-    * per ref column. Default stays robo (bare longs + `_object_index`):
-    * at 100 TB the lazy-join view costs the join only for the columns
-    * a query actually touches.
+    * Both modes share ONE pass 2 (`writeTablesSinglePass`): one job
+    * parses every heap segment once, writing the system tables from
+    * the scan and the per-class tables from the clustered exchange it
+    * feeds, while the index-derived metadata tables are written
+    * concurrently.
+    *
+    * Default is robo mode: references stay bare longs and the id→type
+    * view is a lazy join against `_object_index` — at 100 TB that
+    * costs the join only for the columns a query actually touches.
+    * `resolveRefs = true` is the reference's DEFAULT (non-robo) mode
+    * and adds only two steps over the written parquet, never a heap
+    * re-parse: `_static_fields` gains `ref_type`, and every class
+    * table with reference fields is rewritten with STRUCT{id,type}
+    * refs (`HeapTables.resolveRef`, one join per ref column against
+    * `_object_index`). The pass writes the robo class tables to a
+    * hidden stage directory for that rewrite; tables without
+    * reference fields are moved out of it unchanged.
     */
   def writeParquet(outDir: String, resolveRefs: Boolean = false): Unit = {
-    def w(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite").parquet(s"$outDir/$name")
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def w(df: DataFrame, name: String): Unit = save(df, outDir, name)
 
-    if (!resolveRefs) {
-      // The five driver-derived metadata tables are KB-sized: their
-      // wall-clock is five job-launch + commit round-trips, not data
-      // (~1 s of the ~3.5 s bench-dump export when sequential).
+    val stage = s"$outDir/${HeapDump.ResolveStage}"
+    def dropStage(): Unit = HeapIO.withFs(stage)((fs, p) => { fs.delete(p, true); () })
+    dropExistingClassTables(outDir)
+    dropStage()
+    try {
+      // The index-derived metadata tables are KB-sized: their
+      // wall-clock is job-launch + commit round-trips, not data.
       // Submit them from worker threads so their latency hides behind
       // the heap-scanning job — concurrent job submission is the
-      // supported Spark pattern for independent outputs.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
+      // supported Spark pattern for independent outputs. Resolved
+      // `_static_fields` joins `_object_index`, so it waits for the pass.
       val metadataWrites = Future.sequence(Seq(
         Future(w(classHierarchy, "_class_hierarchy")),
         Future(w(fieldsTable, "_fields")),
         Future(w(stackFrames, "_stack_frames")),
-        Future(w(stackTraces, "_stack_traces")),
-        Future(w(staticFields, "_static_fields"))))
-      // ONE pass-2 job writes everything else: the system tables
-      // multiplexed from the segment scan itself, the per-class
-      // tables from the clustered shuffle fed by the same scan.
+        Future(w(stackTraces, "_stack_traces"))) ++
+        (if (resolveRefs) Nil else Seq(Future(w(staticFields, "_static_fields")))))
       // If the scan throws, the background metadata writes must still
       // be drained before surfacing the failure — otherwise they keep
       // running into outDir after the caller has already seen the
       // export fail (orphaned jobs, partially-populated directory).
       try {
-        writeRoboTablesSinglePass(outDir)
+        writeTablesSinglePass(outDir, if (resolveRefs) stage else outDir)
         Await.result(metadataWrites, Duration.Inf)
       } catch {
         case scanFailure: Throwable =>
@@ -489,49 +398,19 @@ final class HeapDump(spark: SparkSession, path: String) {
           catch { case _: InterruptedException => Thread.currentThread().interrupt() }
           throw scanFailure
       }
-    } else {
-      // driver-side tables come from the pass-1 index: no heap re-scan
-      w(classHierarchy, "_class_hierarchy")
-      w(fieldsTable, "_fields")
-      w(stackFrames, "_stack_frames")
-      w(stackTraces, "_stack_traces")
-      // resolved mode (the reference's non-robo default) keeps the
-      // DataFrame writes: it re-reads _object_index for the ref
-      // struct joins, so the tables must exist as plans anyway
-      w(objectIndex, "_object_index")
-      w(objectArrays, "_object_arrays")
-      w(gcRoots, "_gc_roots")
-      // resolved mode adds a ref_type column to static fields
-      // (reference build_static_fields_batch: "" for primitives,
-      // "null" for null refs, type name otherwise)
-      val oi = objectIndex.select(col("obj_id").as("__ref"), col("type_name"))
-      val sfOut = staticFields.join(oi, col("ref_id") === col("__ref"), "left")
-        .withColumn("ref_type",
-          when(col("field_type") =!= "object", "")
-            .when(col("ref_id") === 0, "null")
-            .otherwise(coalesce(col("type_name"), lit("(unresolved)"))))
-        .drop("__ref", "type_name")
-      w(sfOut, "_static_fields")
-      val prim = primitiveArraysAll.persist()
-      try {
-        primCols.foreach { case (tag, _) =>
-          w(primitiveArrays(tag, prim), s"_primitive_arrays_${BasicType.javaName(tag)}")
-        }
-      } finally prim.unpersist()
-      writeClassTablesResolved(outDir)
-    }
+      if (resolveRefs) writeResolved(outDir, stage)
+    } finally dropStage()
   }
 
-  /** Robo-mode pass 2 as ONE job over ONE parse: each segment task
-    * writes its slice of the system tables directly (SystemTableWriter
+  /** Pass 2 as ONE job over ONE parse: each segment task writes its
+    * slice of the system tables to `outDir` directly (SystemTableWriter
     * side files, deterministic names — retry-safe) while streaming
     * instance events into the (class, salt) exchange that feeds the
-    * clustered per-class writers. Total dump reads: pass-1 metadata +
-    * this — the same two-pass budget as the reference's rayon
-    * pipeline, where the previous layout re-parsed the full dump once
-    * per system-table family (~5× read amplification at 100 TB).
+    * clustered per-class writers under `classDir`. Total dump reads:
+    * pass-1 metadata + this — the same two-pass budget as the
+    * reference's rayon pipeline.
     */
-  private[heap] def writeRoboTablesSinglePass(outDir: String): Unit = {
+  private def writeTablesSinglePass(outDir: String, classDir: String): Unit = {
     HeapIO.withFs(outDir) { (fs, p) =>
       SystemTableWriter.tableNames.foreach { t =>
         val tp = new Path(p, t)
@@ -541,28 +420,22 @@ final class HeapDump(spark: SparkSession, path: String) {
     val names = bcClassNames
     val idSz = idSize
     val p = path
-    val od = outDir
     val evRdd: RDD[InstanceEv] = spark.sparkContext
       .parallelize(segPtrs, parallelism(segPtrs.size))
       .mapPartitionsWithIndex { (pid, it) =>
         val out = mutable.ArrayBuffer.empty[InstanceEv]
-        val writers = new SystemTableWriter(od, pid, names.value)
+        val writers = new SystemTableWriter(outDir, pid, names.value)
         try {
-          HeapIO.withFs(p) { (fs, hp) =>
-            val in = fs.open(hp)
-            try it.foreach { r =>
-              require(r.bodyLength <= Int.MaxValue,
-                s"record body ${r.bodyLength} exceeds 2 GiB buffer limit (tag ${r.tag})")
-              val buf = new Array[Byte](r.bodyLength.toInt)
-              in.readFully(r.bodyOffset, buf)
-              HprofParser.scanSegment(buf, idSz, new SubVisitor {
+          HeapIO.withReader(p) { rd =>
+            it.foreach { r =>
+              HprofParser.scanSegment(rd.body(r), idSz, new SubVisitor {
                 override def onInstance(ev: InstanceEv): Unit = { writers.onInstance(ev); out += ev }
                 override def onPrimArray(ev: PrimArrayEv): Unit = writers.onPrimArray(ev)
                 override def onObjArray(ev: ObjArrayEv): Unit = writers.onObjArray(ev)
                 override def onGcRoot(ev: GcRootEv): Unit = writers.onGcRoot(ev)
                 override def onClassDump(cd: ClassDumpInfo): Unit = writers.onClassDump(cd)
               })
-            } finally in.close()
+            }
           }
           writers.close()
         } catch {
@@ -570,47 +443,41 @@ final class HeapDump(spark: SparkSession, path: String) {
         }
         out.iterator
       }
-    writeClassTablesSinglePass(outDir, evRdd)
+    writeClassTables(classDir, evRdd)
   }
 
-  /** Robo-mode per-class tables in ONE job: segment parse →
-    * hash-cluster by (class, salt) → class-sorted partitions →
-    * executor-side parquet writers (ClassTableWriter). Read volume is
-    * O(heap) regardless of class count — the former job-per-class
-    * loop rescanned the instance set once per class.
+  /** Per-class tables from the pass's instance stream: hash-cluster by
+    * (class, salt) → class-sorted partitions → executor-side parquet
+    * writers (ClassTableWriter). Read volume is O(heap) regardless of
+    * class count, and the job count does not depend on it.
     *
     * The salt is SIZE-ADAPTIVE, assigned map-side from a per-task
     * running count: a class contributes one salt bucket per
-    * `rowsPerBucket` rows it has IN THAT TASK (capped at
-    * `saltBuckets`). Small classes — the overwhelming majority of a
+    * `RowsPerBucket` rows it has IN THAT TASK (capped at
+    * `SaltBuckets`). Small classes — the overwhelming majority of a
     * real dump's ~10k classes — land in a single bucket and produce
     * one file; only classes that are actually big (java.lang.String)
-    * spread across up to `saltBuckets` writer tasks. A uniform salt
+    * spread across up to `SaltBuckets` writer tasks. A uniform salt
     * costs classes × salt parquet footers (measured 6× slower on the
     * 200-class bench dump); per-class pre-counts would cost an extra
     * full parse. Zero extra passes, adaptive, deterministic table
     * CONTENT (file boundaries vary with partitioning, row data does
     * not).
     */
-  private[heap] def writeClassTablesSinglePass(outDir: String,
-      src: RDD[InstanceEv] = null): Unit = {
-    dropExistingClassTables(outDir)
+  private def writeClassTables(classDir: String, events: RDD[InstanceEv]): Unit = {
     val tables: Map[Long, (String, Seq[LayoutField])] =
-      index.classes.map { case (cid, ci) => cid -> (s"${ci.name}_$cid", ci.layout) }
+      index.classes.map { case (cid, ci) => cid -> (tableName(ci), ci.layout) }
     val bcTables = spark.sparkContext.broadcast(tables)
     val idSz = idSize
-    val saltBuckets = spark.conf.getOption("spark.graft.heap.saltBuckets")
-      .map(_.toInt).getOrElse(16)
-    val rowsPerBucket = spark.conf.getOption("spark.graft.heap.rowsPerBucket")
-      .map(_.toInt).getOrElse(1 << 16)
     val numParts = math.max(spark.sparkContext.defaultParallelism,
       spark.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32))
-    val salted = (if (src == null) instancesEvents else src).mapPartitions { it =>
+    val salted = events.mapPartitions { it =>
       val seen = mutable.HashMap.empty[Long, Long]
       it.map { ev =>
         val c = seen.getOrElse(ev.classObjId, 0L)
         seen(ev.classObjId) = c + 1
-        (ev.classObjId, ((c / rowsPerBucket) % saltBuckets).toInt, ev.objId, ev.fields)
+        (ev.classObjId, ((c / HeapDump.RowsPerBucket) % HeapDump.SaltBuckets).toInt,
+          ev.objId, ev.fields)
       }
     }
     spark.createDataFrame(salted)
@@ -620,48 +487,62 @@ final class HeapDump(spark: SparkSession, path: String) {
       .select("classObjId", "objId", "fields")
       .foreachPartition { (rows: Iterator[Row]) =>
         ClassTableWriter.writePartition(rows,
-          org.apache.spark.TaskContext.getPartitionId(), outDir, bcTables.value, idSz)
+          org.apache.spark.TaskContext.getPartitionId(), classDir, bcTables.value, idSz)
       }
   }
 
-  /** Resolved-mode (the reference's non-robo default): every ref field
-    * becomes STRUCT{id,type} via joins against the object index, which
-    * forces per-class DataFrame plans. Scale shape: the raw instances
-    * are staged ONCE as class-partitioned parquet, so each class job
-    * reads only its own partition directory (pruned scan, not a full
-    * rescan), the index side comes from the already-written
-    * `_object_index` parquet, and class jobs run concurrently.
+  /** Resolved mode's additions over the written robo tables: static
+    * fields gain `ref_type` (reference build_static_fields_batch: ""
+    * for primitives, "null" for null refs, type name otherwise), and
+    * each staged class table with reference fields is rewritten with
+    * STRUCT{id,type} refs. The jobs run concurrently; the index side
+    * of every join is the `_object_index` parquet the pass just wrote.
     */
-  private def writeClassTablesResolved(outDir: String): Unit = {
-    dropExistingClassTables(outDir)
-    val stage = s"$outDir/.instances_staged"
-    instancesRaw.write.mode("overwrite").partitionBy("classObjId").parquet(stage)
-    val staged = spark.read.parquet(stage)
+  private def writeResolved(outDir: String, stage: String): Unit = {
     val oi = spark.read.parquet(s"$outDir/_object_index")
-    val classIds = HeapIO.withFs(stage) { (fs, p) =>
-      fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("classObjId=")).map(_.stripPrefix("classObjId=").toLong)
+    val staged = HeapIO.withFs(stage) { (fs, p) =>
+      if (fs.exists(p)) fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSet
+      else Set.empty[String]
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(8, classIds.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val jobs = classIds.sorted.filter(index.classes.contains).map { cid =>
-        scala.concurrent.Future {
-          val base = instances(cid, staged)
-          val df = index.classes(cid).layout.filter(_.typeTag == BasicType.Object)
-            .foldLeft(base)((d, f) => HeapTables.resolveRef(d, f.name, oi))
-          df.write.mode("overwrite").parquet(s"$outDir/${index.className(cid)}_$cid")
-        }
+    val tables = index.classes.values.toSeq.sortBy(_.objId)
+      .map(ci => tableName(ci) -> ci.layout.filter(_.typeTag == BasicType.Object).map(_.name))
+      .filter { case (table, _) => staged.contains(table) }
+    // a table without reference fields is already final: move it out
+    tables.filter(_._2.isEmpty).foreach { case (table, _) =>
+      HeapIO.withFs(outDir) { (fs, p) =>
+        if (!fs.rename(new Path(s"$stage/$table"), new Path(p, table)))
+          throw new java.io.IOException(s"could not move $stage/$table into $outDir")
       }
-      import scala.concurrent.duration.Duration
-      jobs.foreach(scala.concurrent.Await.result(_, Duration.Inf))
-    } finally {
-      pool.shutdown()
-      HeapIO.withFs(stage)((fs, p) => fs.delete(p, true))
     }
+    val staticFieldsResolved = {
+      val ix = oi.select(col("obj_id").as("__ref"), col("type_name"))
+      staticFields.join(ix, col("ref_id") === col("__ref"), "left")
+        .withColumn("ref_type",
+          when(col("field_type") =!= "object", "")
+            .when(col("ref_id") === 0, "null")
+            .otherwise(coalesce(col("type_name"), lit("(unresolved)"))))
+        .drop("__ref", "type_name")
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    def write(df: => DataFrame, table: String): Future[Unit] = Future(save(df, outDir, table))
+    try {
+      val jobs = write(staticFieldsResolved, "_static_fields") +: tables.collect {
+        case (table, refs) if refs.nonEmpty =>
+          write(refs.foldLeft(spark.read.parquet(s"$stage/$table"))(
+            (d, r) => HeapTables.resolveRef(d, r, oi)), table)
+      }
+      // drain every job before surfacing the first failure, so none
+      // is still writing when the caller sees the export fail
+      jobs.foreach(Await.ready(_, Duration.Inf))
+      jobs.foreach(Await.result(_, Duration.Inf))
+    } finally pool.shutdown()
   }
+
+  private def save(df: DataFrame, outDir: String, table: String): Unit =
+    df.write.mode("overwrite").parquet(s"$outDir/$table")
+
+  private def tableName(ci: ClassInfo): String = s"${ci.name}_${ci.objId}"
 
   /** Metadata-only cleanup so a re-export to the same directory can't
     * leave stale part files from a previous layout behind.
@@ -669,7 +550,7 @@ final class HeapDump(spark: SparkSession, path: String) {
   private def dropExistingClassTables(outDir: String): Unit =
     HeapIO.withFs(outDir) { (fs, p) =>
       if (fs.exists(p)) {
-        val classDirs = index.classes.map { case (cid, ci) => s"${ci.name}_$cid" }.toSet
+        val classDirs = index.classes.values.map(tableName).toSet
         fs.listStatus(p).foreach { st =>
           if (st.isDirectory && classDirs.contains(st.getPath.getName))
             fs.delete(st.getPath, true)
@@ -679,6 +560,14 @@ final class HeapDump(spark: SparkSession, path: String) {
 }
 
 object HeapDump {
+  /** Hidden directory under a resolved export's outDir holding the
+    * pass's robo class tables until they are rewritten.
+    */
+  private val ResolveStage = ".robo_class_tables"
+  /** Class-table salting of `writeClassTables`. */
+  private val SaltBuckets = 16
+  private val RowsPerBucket = 1 << 16
+
   /** Re-lay an export as FLAT chunked files — the reference robo-mode
     * naming convention (`<table>_chunk<N>.parquet`,
     * dump_to_parquet.rs chunked per-class files) — so glob-based

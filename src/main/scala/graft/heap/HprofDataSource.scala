@@ -129,34 +129,18 @@ final class HprofScan(path: String, required: StructType,
     * bottleneck, so it must not run twice per query. Metadata records
     * (Utf8/LoadClass) are parsed in the same open-handle pass.
     */
-  private lazy val indexed: (HprofParser.Header, Vector[RecordPtr], Map[Long, String]) = {
-    val header = HprofParser.parseHeader(
-      HeapIO.readRange(path, 0L, math.min(64L, HeapIO.fileLength(path)).toInt))
-    HeapIO.withFs(path) { (fs, p) =>
-      val len = fs.getFileStatus(p).getLen
-      val in = fs.open(p)
-      try {
-        val records = HprofParser.indexRecords((off, n) => {
-          val buf = new Array[Byte](n)
-          in.readFully(off, buf)
-          buf
-        }, len, header.bodyStart)
-        def body(r: RecordPtr): Array[Byte] = {
-          val buf = new Array[Byte](r.bodyLength.toInt)
-          in.readFully(r.bodyOffset, buf)
-          buf
-        }
-        val idSz = header.idSize
-        val utf8 = records.filter(_.tag == Tag.Utf8)
-          .map(r => HprofParser.parseUtf8(body(r), idSz)).toMap
-        val classNames = records.filter(_.tag == Tag.LoadClass)
-          .map(lc => HprofParser.parseLoadClass(body(lc), idSz))
-          .map(lc => lc.classObjId ->
-            utf8.getOrElse(lc.nameId, "(missing utf8)").replace('/', '.')).toMap
-        (header, records, classNames)
-      } finally in.close()
+  private lazy val indexed: (HprofParser.Header, Vector[RecordPtr], Map[Long, String]) =
+    HeapIO.withReader(path) { rd =>
+      val (header, records) = rd.index()
+      val idSz = header.idSize
+      val utf8 = records.filter(_.tag == Tag.Utf8)
+        .map(r => HprofParser.parseUtf8(rd.body(r), idSz)).toMap
+      val classNames = records.filter(_.tag == Tag.LoadClass)
+        .map(lc => HprofParser.parseLoadClass(rd.body(lc), idSz))
+        .map(lc => lc.classObjId ->
+          utf8.getOrElse(lc.nameId, "(missing utf8)").replace('/', '.')).toMap
+      (header, records, classNames)
     }
-  }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val (header, records, _) = indexed
@@ -232,20 +216,14 @@ final class HprofPartitionReader(path: String, part: HprofSegmentsPartition,
   private def arrayName(id: Long): String =
     HeapIndex.normalizeArrayName(className(id))
 
-  // ONE open handle for the whole partition — a per-segment
-  // open/seek/close would dominate on remote filesystems (same
-  // rationale as HeapDump.recordRdd)
-  private val in = HeapIO.withFs(path)((fs, p) => fs.open(p))
+  // ONE open handle for the whole partition
+  private val in = new HprofReader(path)
 
   private val rows: Iterator[InternalRow] = {
     val idSz = part.idSize
     part.ptrs.iterator.flatMap { r =>
-      require(r.bodyLength <= Int.MaxValue,
-        s"record body ${r.bodyLength} exceeds 2 GiB buffer limit (tag ${r.tag})")
-      val body = new Array[Byte](r.bodyLength.toInt)
-      in.readFully(r.bodyOffset, body)
       val buf = mutable.ArrayBuffer.empty[Array[Any]]
-      HprofParser.scanSegment(body, idSz, new SubVisitor {
+      HprofParser.scanSegment(in.body(r), idSz, new SubVisitor {
         override def onInstance(ev: InstanceEv): Unit =
           if (keep("instance", className(ev.classObjId)))
             buf += Array[Any](ev.objId, "instance", className(ev.classObjId),

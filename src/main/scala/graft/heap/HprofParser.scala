@@ -45,7 +45,9 @@ object HprofParser {
 
   /** Sequential walk of record headers (tag u1, time u4, length u4) —
     * the only intrinsically sequential part of ingestion; reads 9
-    * bytes + seek per record.
+    * bytes + seek per record. A record whose body runs past the end of
+    * the file fails here, before any task runs, rather than as an
+    * executor read error later.
     */
   def indexRecords(readAt: (Long, Int) => Array[Byte], fileLength: Long, bodyStart: Long): Vector[RecordPtr] = {
     val out = Vector.newBuilder[RecordPtr]
@@ -55,6 +57,8 @@ object HprofParser {
       val tag = hdr.u1()
       hdr.u4() // microsecond delta, unused
       val len = hdr.u4()
+      if (off + 9 + len > fileLength) throw new IllegalArgumentException(
+        s"truncated HPROF: record at offset $off claims $len bytes, file has $fileLength")
       out += RecordPtr(tag, off + 9, len)
       off += 9 + len
     }
@@ -228,7 +232,7 @@ object HprofParser {
   /** Decode one instance's field bytes against a hierarchy layout
     * (class's own fields first, then superclass chain — the HPROF
     * instance-dump value order). Returns JVM-boxed values aligned
-    * with HeapSchema.instanceSchema.
+    * with the layout (ClassTableWriter.addRow's input).
     */
   def decodeInstance(fields: Array[Byte], idSize: Int, layout: Seq[LayoutField]): Seq[Any] = {
     import BasicType._

@@ -29,10 +29,6 @@ object Profile {
     spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count()
       .write.format("noop").mode("overwrite").save()
 
-    if (sys.env.contains("PROFILE_HEAP")) {
-      graft.heap.HeapProfile.run(spark)
-      spark.stop(); return
-    }
     if (sys.env.contains("PROFILE_EDITDIST")) {
       import graft.operators.Dedup
       val docs = Tables(spark, sfDir, "documents")

@@ -2,11 +2,16 @@ package graft.heap
 
 import graft.SparkTestSession
 import HprofModel._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parser → tables pipeline against a synthetic heap with known
   * answers (SURVEY.md §2.A). The heap is written with the test-scope
-  * HprofWriter, read back through the full distributed path.
+  * HprofWriter, read back through the full distributed path: heap
+  * tables are checked in the export `writeParquet` ships, in both
+  * modes.
   */
 class HeapDumpSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -19,6 +24,17 @@ class HeapDumpSpec extends AnyFunSuite {
     w.writeTo(path, segments = 3)
     (new HeapDump(spark, path), f)
   }
+
+  private def export(resolveRefs: Boolean): String = {
+    val out = java.nio.file.Files.createTempDirectory("heap_pq").toString
+    fixture._1.writeParquet(out, resolveRefs)
+    out
+  }
+  private lazy val roboDir = export(resolveRefs = false)
+  private lazy val resolvedDir = export(resolveRefs = true)
+  private lazy val robo = new HeapTables(spark, roboDir)
+
+  private def table(name: String): DataFrame = robo.system(name).get
 
   final class Fixture(w: HprofWriter) {
     val objectCls = w.defineClass("java.lang.Object")
@@ -82,6 +98,25 @@ class HeapDumpSpec extends AnyFunSuite {
     assert(byTag(Tag.StackTrace).size === 1)
   }
 
+  test("a dump cut mid-segment fails in the record walk with the record's claim") {
+    val (hd, _) = fixture
+    val w = new HprofWriter()
+    new Fixture(w)
+    val bytes = w.build(segments = 3)
+    val seg = hd.records.filter(r => Tag.isHeapSegment(r.tag))(1)
+    val cutLen = seg.bodyOffset + seg.bodyLength / 2
+    val cut = java.nio.file.Files.createTempDirectory("heap_cut").resolve("cut.hprof")
+    java.nio.file.Files.write(cut, bytes.take(cutLen.toInt))
+    val expected = s"truncated HPROF: record at offset ${seg.bodyOffset - 9} " +
+      s"claims ${seg.bodyLength} bytes, file has $cutLen"
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+    val viaHeapDump = intercept[IllegalArgumentException](new HeapDump(spark, cut.toString))
+    assert(viaHeapDump.getMessage === expected)
+    val viaSource = intercept[Exception](spark.read.format("hprof").load(cut.toString).count())
+    assert(messages(viaSource).contains(expected), messages(viaSource))
+  }
+
   test("countRecords tallies record types") {
     val (hd, _) = fixture
     val counts = hd.countRecords.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -112,8 +147,8 @@ class HeapDumpSpec extends AnyFunSuite {
   }
 
   test("objectIndex covers instances, arrays and classes") {
-    val (hd, f) = fixture
-    val idx = hd.objectIndex.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val (_, f) = fixture
+    val idx = table("_object_index").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(idx(f.str1) === "java.lang.String")
     assert(idx(f.boxed1) === "java.lang.Integer")
     assert(idx(f.helloBytes1) === "byte[]")
@@ -126,13 +161,13 @@ class HeapDumpSpec extends AnyFunSuite {
   }
 
   test("typed instance tables decode fields") {
-    val (hd, f) = fixture
-    val strings = hd.instances(f.stringCls).collect()
+    val (_, f) = fixture
+    val strings = robo.byClass("java.lang.String").get.collect()
       .map(r => r.getAs[Long]("obj_id") -> (r.getAs[Long]("value"), r.getAs[Int]("hash"))).toMap
     assert(strings(f.str1) === (f.helloBytes1, 99))
     assert(strings(f.str3) === (f.worldBytes, 7))
 
-    val emp = hd.instances(f.employeeCls).collect()
+    val emp = robo.byClass("com.acme.Employee").get.collect()
     assert(emp.length === 1)
     val r = emp.head
     assert(r.getAs[Long]("name") === f.str1)
@@ -142,31 +177,30 @@ class HeapDumpSpec extends AnyFunSuite {
   }
 
   test("instancesByName unions loaders") {
-    val (hd, f) = fixture
-    val df = hd.instancesByName("java.lang.String")
+    val df = robo.byClass("java.lang.String")
     assert(df.isDefined)
     assert(df.get.count() === 3)
   }
 
   test("primitive arrays round-trip per type") {
-    val (hd, f) = fixture
-    val bytes = hd.primitiveArrays(BasicType.Byte).collect()
+    val (_, f) = fixture
+    val bytes = table("_primitive_arrays_byte").collect()
       .map(r => r.getLong(0) -> r.getSeq[Byte](1).toArray).toMap
     assert(new String(bytes(f.helloBytes1), "UTF-8") === "hello")
     assert(new String(bytes(f.worldBytes), "UTF-8") === "world")
-    val ints = hd.primitiveArrays(BasicType.Int).collect()
+    val ints = table("_primitive_arrays_int").collect()
     assert(ints.length === 1 && ints.head.getSeq[Int](1) === Seq(0, 0, 0, 0))
-    val longs = hd.primitiveArrays(BasicType.Long).collect()
+    val longs = table("_primitive_arrays_long").collect()
     assert(longs.length === 1 && longs.head.getSeq[Long](1).isEmpty)
-    val floats = hd.primitiveArrays(BasicType.Float).collect()
+    val floats = table("_primitive_arrays_float").collect()
     assert(floats.head.getSeq[Float](1) === Seq(1.5f))
-    val chars = hd.primitiveArrays(BasicType.Char).collect()
+    val chars = table("_primitive_arrays_char").collect()
     assert(chars.head.getSeq[Int](1) === Seq('h'.toInt, 'i'.toInt))
   }
 
   test("object arrays with class names and null elements") {
-    val (hd, f) = fixture
-    val arrs = hd.objectArrays.collect()
+    val (_, f) = fixture
+    val arrs = table("_object_arrays").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](2)).toMap
     assert(arrs(f.emptyArr).isEmpty)
     assert(arrs(f.allNullArr) === Seq(0L, 0L, 0L))
@@ -174,8 +208,8 @@ class HeapDumpSpec extends AnyFunSuite {
   }
 
   test("gc roots typed and attributed") {
-    val (hd, f) = fixture
-    val roots = hd.gcRoots.collect()
+    val (_, f) = fixture
+    val roots = table("_gc_roots").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(roots === Set(
       ("ThreadObj", f.emp), ("SystemClass", f.stringCls),
@@ -216,9 +250,7 @@ class HeapDumpSpec extends AnyFunSuite {
     assert(loaders((("com.acme.Plugin"), f.pluginClsA)) === 0x7001L)
     assert(loaders((("com.acme.Plugin"), f.pluginClsB)) === 0x7002L)
     assert(loaders((("java.lang.Object"), f.objectCls)) === 0L, "default = bootstrap")
-    val out = java.nio.file.Files.createTempDirectory("heap_b26").toString
-    hd.writeParquet(out)
-    val census = new HeapAnalysis(new HeapTables(spark, out)).classloaderCensus.get
+    val census = new HeapAnalysis(robo).classloaderCensus.get
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
     assert(census.toSeq === Seq("com.acme.Plugin" ->
       ((2L, 2L, s"${0x7001L},${0x7002L}"))), "only the duplicated name surfaces")
@@ -234,9 +266,8 @@ class HeapDumpSpec extends AnyFunSuite {
   }
 
   test("writeParquet resolveRefs materializes STRUCT{id,type} refs (non-robo mode)") {
-    val (hd, f) = fixture
-    val out = java.nio.file.Files.createTempDirectory("heap_pq_res").toString
-    hd.writeParquet(out, resolveRefs = true)
+    val (_, f) = fixture
+    val out = resolvedDir
     val strs = spark.read.parquet(s"$out/java.lang.String_${f.stringCls}")
     val row = strs.filter(org.apache.spark.sql.functions.col("obj_id") === f.str1)
       .selectExpr("value.id", "value.type").collect().head
@@ -256,14 +287,46 @@ class HeapDumpSpec extends AnyFunSuite {
   }
 
   test("writeParquet exports all tables") {
-    val (hd, _) = fixture
-    val out = java.nio.file.Files.createTempDirectory("heap_pq").toString
-    hd.writeParquet(out)
+    val out = roboDir
     val dirs = new java.io.File(out).listFiles().map(_.getName).toSet
     assert(dirs.contains("_object_index"))
     assert(dirs.contains("_primitive_arrays_byte"))
     assert(dirs.exists(_.startsWith("java.lang.String_")))
     val idx = spark.read.parquet(s"$out/_object_index")
     assert(idx.count() === 23)
+  }
+
+  test("resolved and robo exports agree table by table, and no stage dir is left") {
+    val resolved = new HeapTables(spark, resolvedDir)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    def tables(dir: String): Set[String] =
+      new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    assert(tables(resolvedDir) === tables(roboDir))
+    assert(!tables(resolvedDir).exists(_.startsWith(".")), tables(resolvedDir))
+
+    val (system, classTables) = tables(roboDir).partition(_.startsWith("_"))
+    assert(system.size === 16)
+    system.foreach { t =>
+      val res = resolved.system(t).get
+      // resolved mode's one system-table difference is the added ref_type
+      val resRows = if (t == "_static_fields") res.drop("ref_type") else res
+      assert(rows(resRows) === rows(table(t)), t)
+    }
+
+    def refFields(t: String): Seq[String] =
+      fixture._1.index.classes(t.substring(t.lastIndexOf('_') + 1).toLong)
+        .layout.filter(_.typeTag == BasicType.Object).map(_.name)
+    assert(classTables.filter(refFields(_).nonEmpty) === Set(
+      s"java.lang.String_${fixture._2.stringCls}", s"com.acme.Employee_${fixture._2.employeeCls}"))
+    classTables.foreach { t =>
+      val r = spark.read.parquet(s"$resolvedDir/$t")
+      val b = spark.read.parquet(s"$roboDir/$t")
+      assert(r.columns.toSeq === b.columns.toSeq, t)
+      val structs = r.schema.fields.filter(_.dataType.isInstanceOf[StructType]).map(_.name).toSeq
+      assert(structs === refFields(t), t)
+      // every STRUCT ref's id is the robo column, every other column as is
+      val ids = r.columns.map(c => if (structs.contains(c)) col(s"`$c`.id").as(c) else col(s"`$c`"))
+      assert(rows(r.select(ids: _*)) === rows(b), t)
+    }
   }
 }

@@ -40,10 +40,13 @@ class HeapScaleSpec extends AnyFunSuite {
 
     val t1 = System.nanoTime()
     val hd = new HeapDump(spark, path)
-    val counts = hd.objectIndex.groupBy("type_name").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val out = java.nio.file.Files.createTempDirectory("heap_scale_pq").toString
+    hd.writeParquet(out)
     val tIngest = (System.nanoTime() - t1) / 1e9
-    info(f"heap $sizeMb%.1f MB: write $tWrite%.1f s, index+count $tIngest%.1f s")
+    val tables = new HeapTables(spark, out)
+    val counts = tables.system("_object_index").get.groupBy("type_name").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    info(f"heap $sizeMb%.1f MB: write $tWrite%.1f s, index+export $tIngest%.1f s")
 
     assert(counts("java.lang.String") === nStrings.toLong)
     assert(counts("java.lang.Integer") === nBoxes.toLong)
@@ -52,14 +55,12 @@ class HeapScaleSpec extends AnyFunSuite {
     assert(hd.records.count(r => Tag.isHeapSegment(r.tag)) === 32)
 
     // typed decode at volume: every string's hash field survives
-    val hashSum = hd.instances(str).agg(org.apache.spark.sql.functions.sum("hash"))
+    val hashSum = tables.byClass("java.lang.String").get.agg(org.apache.spark.sql.functions.sum("hash"))
       .collect()(0).getLong(0)
     assert(hashSum === (0L until nStrings).sum)
 
     // duplicate-string analysis finds the planted 1000-value clusters
-    val out = java.nio.file.Files.createTempDirectory("heap_scale_pq").toString
-    hd.writeParquet(out)
-    val dup = new HeapAnalysis(new HeapTables(spark, out)).checkDuplicateStrings().get
+    val dup = new HeapAnalysis(tables).checkDuplicateStrings().get
     assert(dup.affectedCount > 15000) // 40k draws over 50k payload keys → ~22k in dup groups
   }
 

@@ -48,9 +48,11 @@ class HprofDataSourceSpec extends AnyFunSuite {
     assert(intArr.getAs[Long]("n_bytes") === 12L)
     assert(intArr.getAs[Long]("n_elems") === 3L)
 
-    // cross-check the whole stream against the RDD ingestion path
-    val viaHeapDump = new HeapDump(spark, path).objectIndex.count()
-    // objectIndex covers instances + arrays + classes (same universe)
+    // cross-check the whole stream against the export's object index
+    // (instances + arrays + classes: the same universe)
+    val out = java.nio.file.Files.createTempDirectory("hprof_ds_pq").toString
+    new HeapDump(spark, path).writeParquet(out)
+    val viaHeapDump = spark.read.parquet(s"$out/_object_index").count()
     assert(df.count() === viaHeapDump)
   }
 

@@ -53,28 +53,31 @@ class HprofRoundTripSpec extends AnyFunSuite {
 
     val path = java.nio.file.Files.createTempDirectory("rt").resolve("h.hprof").toString
     w.writeTo(path, segments = segs)
-    val hd = new HeapDump(spark, path)
+    val out = java.nio.file.Files.createTempDirectory("rt_pq").toString
+    new HeapDump(spark, path).writeParquet(out)
+    val tables = new HeapTables(spark, out)
 
-    val idx = hd.objectIndex.collect().map(r => r.getLong(0) -> r.getString(1))
+    val idx = tables.system("_object_index").get.collect().map(r => r.getLong(0) -> r.getString(1))
     assert(idx.count(_._2 == "java.lang.Integer") === nInts)
     assert(idx.count(_._2 == "java.lang.String") === nStrings)
     assert(idx.count(_._2 == "java.lang.Object[]") === nArrays)
     assert(idx.length === 3 + nInts + 2 * nStrings + nArrays + prims.size)
 
     // primitive arrays: type and length survive exactly
-    val gotPrims = hd.primitiveArraysAll.collect()
-      .map(r => r.getAs[Long]("objId") -> r.getAs[Int]("elemType")).toMap
+    def primTable(t: Int) = tables.system(s"_primitive_arrays_${BasicType.javaName(t)}").get
+    val gotPrims = SystemTableWriter.primitiveTags
+      .flatMap(t => primTable(t).collect().map(r => r.getAs[Long]("obj_id") -> t)).toMap
     primIds.zip(prims).foreach { case (id, (t, _)) => assert(gotPrims(id) === t) }
 
     // typed decode: integer values sum correctly
-    val sum = hd.instances(box).agg(org.apache.spark.sql.functions.sum("value"))
+    val sum = tables.byClass("java.lang.Integer").get.agg(org.apache.spark.sql.functions.sum("value"))
       .collect()(0).getLong(0)
     assert(sum === (0L until nInts).sum)
 
     // long arrays round-trip values bit-exactly
     prims.zip(primIds).filter(_._1._1 == BasicType.Long).foreach { case ((_, vals), id) =>
-      val got = hd.primitiveArraysAll.filter(s"objId = $id")
-        .collect()(0).getAs[scala.collection.Seq[Long]]("longs")
+      val got = primTable(BasicType.Long).filter(s"obj_id = $id")
+        .collect()(0).getAs[scala.collection.Seq[Long]]("values")
       assert(got.toSeq === vals)
     }
   }

@@ -1,7 +1,7 @@
 package graft.heap
 
 import graft.SparkTestSession
-import HprofModel.{BasicType, Tag}
+import HprofModel.Tag
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RealHprofSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+
+  private def export(hd: HeapDump): HeapTables = {
+    val out = java.nio.file.Files.createTempDirectory("realheap_pq").toString
+    hd.writeParquet(out)
+    new HeapTables(spark, out)
+  }
 
   private def makeRealDump(jvmFlags: Seq[String] = Seq.empty): Option[String] = {
     val dir = java.nio.file.Files.createTempDirectory("realheap")
@@ -56,14 +62,15 @@ class RealHprofSpec extends AnyFunSuite {
         assert(hm.get.layout.map(_.name).contains("size"))
 
         // object index sees real strings
-        val idx = hd.objectIndex
+        val tables = export(hd)
+        val idx = tables.system("_object_index").get
         val nStrings = idx.filter(col("type_name") === "java.lang.String").count()
         assert(nStrings > 1000)
 
         // typed decode of real String instances + content via byte[]
-        val strs = hd.instancesByName("java.lang.String").get
+        val strs = tables.byClass("java.lang.String").get
         assert(strs.columns.contains("value"))
-        val bytes = hd.primitiveArrays(BasicType.Byte)
+        val bytes = tables.system("_primitive_arrays_byte").get
         val decode = udf((v: scala.collection.Seq[Byte]) =>
           new String(v.toArray, java.nio.charset.StandardCharsets.ISO_8859_1))
         val contents = strs.select(col("value").as("bid"))
@@ -73,7 +80,7 @@ class RealHprofSpec extends AnyFunSuite {
         assert(contents.count() >= 2)
 
         // real GC roots of several kinds
-        val rootKinds = hd.gcRoots.select("root_type").distinct().count()
+        val rootKinds = tables.system("_gc_roots").get.select("root_type").distinct().count()
         assert(rootKinds >= 3)
 
         // hierarchy: HashMap extends AbstractMap
@@ -102,8 +109,9 @@ class RealHprofSpec extends AnyFunSuite {
         // with compact strings DISABLED every String's byte[] holds
         // UTF-16 code units (2 bytes/char, platform order) instead of
         // Latin-1 — the payload layout the first fixture never shows
-        val strs = hd.instancesByName("java.lang.String").get
-        val bytes = hd.primitiveArrays(BasicType.Byte)
+        val tables = export(hd)
+        val strs = tables.byClass("java.lang.String").get
+        val bytes = tables.system("_primitive_arrays_byte").get
         val decodeUtf16 = udf((v: scala.collection.Seq[Byte]) =>
           new String(v.toArray, java.nio.charset.StandardCharsets.UTF_16LE))
         val contents = strs.select(col("value").as("bid"))
@@ -117,7 +125,7 @@ class RealHprofSpec extends AnyFunSuite {
         val counts = hd.countRecords.collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
         assert(counts.getOrElse("HeapDumpSegment", 0L) + counts.getOrElse("HeapDump", 0L) >= 1L)
-        val rootKinds = hd.gcRoots.select("root_type").distinct().count()
+        val rootKinds = tables.system("_gc_roots").get.select("root_type").distinct().count()
         assert(rootKinds >= 3)
     }
   }
@@ -159,15 +167,16 @@ class RealHprofSpec extends AnyFunSuite {
       assert(hd.index.classes.size > 500)
       // the -all dump carries the garbage the live fixtures never
       // show; the live keys are still present among it
-      val strs = hd.instancesByName("java.lang.String").get
-      val bytes = hd.primitiveArrays(BasicType.Byte)
+      val tables = export(hd)
+      val strs = tables.byClass("java.lang.String").get
+      val bytes = tables.system("_primitive_arrays_byte").get
       val decode = udf((v: scala.collection.Seq[Byte]) =>
         new String(v.toArray, java.nio.charset.StandardCharsets.ISO_8859_1))
       val contents = strs.select(col("value").as("bid"))
         .join(bytes.withColumnRenamed("obj_id", "bid"), "bid")
         .select(decode(col("values")).as("text"))
       assert(contents.filter(col("text") === "live499").count() >= 1)
-      val rootKinds = hd.gcRoots.select("root_type").distinct().count()
+      val rootKinds = tables.system("_gc_roots").get.select("root_type").distinct().count()
       assert(rootKinds >= 3)
     } finally proc.destroyForcibly()
   }
@@ -204,9 +213,10 @@ class RealHprofSpec extends AnyFunSuite {
     assert(hd.index.classes.values.exists(_.name.startsWith("org.apache.spark.")))
     // live threads with real stacks
     assert(hd.stackTraces.count() > 5)
-    val rootKinds = hd.gcRoots.select("root_type").distinct().count()
+    val tables = export(hd)
+    val rootKinds = tables.system("_gc_roots").get.select("root_type").distinct().count()
     assert(rootKinds >= 4, s"root kinds: $rootKinds")
     // the census machinery holds at real heterogeneity
-    assert(hd.objectIndex.count() > 50000L)
+    assert(tables.system("_object_index").get.count() > 50000L)
   }
 }

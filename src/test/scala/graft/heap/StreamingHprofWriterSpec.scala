@@ -55,27 +55,34 @@ class StreamingHprofWriterSpec extends AnyFunSuite {
     (pBuf, pStr)
   }
 
-  private def census(path: String): Map[String, Long] =
-    new HeapDump(spark, path).objectIndex.groupBy("type_name").count()
+  private def export(path: String): HeapTables = {
+    val out = java.nio.file.Files.createTempDirectory("stream_pq").toString
+    new HeapDump(spark, path).writeParquet(out)
+    new HeapTables(spark, out)
+  }
+
+  private def census(tables: HeapTables): Map[String, Long] =
+    tables.system("_object_index").get.groupBy("type_name").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("streamed dump parses to the same census and field values as the buffered writer's") {
     val (pBuf, pStr) = buildBoth(segmentBytes = 24 << 20) // one tail segment
-    val cBuf = census(pBuf)
-    val cStr = census(pStr)
+    val (tBuf, tStr) = (export(pBuf), export(pStr))
+    val cBuf = census(tBuf)
+    val cStr = census(tStr)
     assert(cStr === cBuf)
     assert(cStr("java.lang.String") === 500L)
     // typed decode parity: the String hash field sums identically
-    def hashSum(path: String): Long =
-      new HeapDump(spark, path).instancesByName("java.lang.String").get
+    def hashSum(tables: HeapTables): Long =
+      tables.byClass("java.lang.String").get
         .agg(org.apache.spark.sql.functions.sum("hash")).collect()(0).getLong(0)
-    assert(hashSum(pStr) === hashSum(pBuf))
+    assert(hashSum(tStr) === hashSum(tBuf))
   }
 
   test("a tiny segment buffer (many mid-stream flushes) still parses whole") {
     val (_, pStr) = buildBoth(segmentBytes = 2048) // hundreds of segments
     val hd = new HeapDump(spark, pStr)
-    val c = census(pStr)
+    val c = census(export(pStr))
     assert(c("java.lang.String") === 500L)
     assert(c("byte[]") === 500L)
     assert(c("java.lang.Integer") === 300L)
