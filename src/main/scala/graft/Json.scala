@@ -1,9 +1,11 @@
 package graft
 
-/** Minimal JSON emitters shared by the mains and the heap analysis
-  * (no external deps allowed in this build). The escape covers quote,
-  * backslash, and ALL control chars — one copy, so a future escaping
-  * fix can't miss a duplicate.
+/** The one JSON reader and writer of the build (no external deps
+  * allowed): the mains, the heap analysis and both heap front ends
+  * encode through these emitters and decode through [[parse]]. The
+  * escape covers quote, backslash, and ALL control chars, and result
+  * cells have one encoder ([[cell]]) — one copy each, so a future
+  * escaping fix can't miss a duplicate.
   */
 object Json {
   def str(s: String): String =
@@ -20,11 +22,34 @@ object Json {
   def obj(fields: Seq[(String, String)]): String =
     fields.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
 
+  /** One result cell: only types whose toString IS valid JSON pass
+    * through raw; anything else (timestamp, date, array, struct) is
+    * quoted and escaped instead of corrupting the document.
+    */
+  def cell(v: Any): String = v match {
+    case null => "null"
+    case s: String => str(s)
+    case d: java.math.BigDecimal => d.toPlainString
+    case d: java.lang.Double => if (d.isInfinite || d.isNaN) str(d.toString) else d.toString
+    case f: java.lang.Float => if (f.isInfinite || f.isNaN) str(f.toString) else f.toString
+    case n: java.lang.Number => n.toString
+    case b: java.lang.Boolean => b.toString
+    case other => str(other.toString)
+  }
+
+  /** One result row as an object keyed by column name. */
+  def rowJson(columns: Seq[String], r: org.apache.spark.sql.Row): String =
+    obj(columns.zipWithIndex.map { case (c, i) => c -> cell(r.get(i)) })
+
+  def rowsJson(columns: Seq[String], rows: Seq[org.apache.spark.sql.Row]): String =
+    arr(rows.map(rowJson(columns, _)))
+
   /** Full recursive JSON parser — objects become insertion-ordered
     * Map[String, Any], arrays Vector[Any], numbers Long (integral) or
     * Double, plus String/Boolean/null. Zero-dependency by the build's
-    * design; the JSON-RPC framing of the MCP transport needs nested
-    * values, which HeapServer's flat parser deliberately rejects.
+    * design. The MCP transport parses its JSON-RPC frames with it, and
+    * the HTTP front end its request bodies (through
+    * [[graft.heap.HeapRequest.decodeBody]], which refuses nesting).
     */
   def parse(s: String): Any = {
     val p = new Parser(s)

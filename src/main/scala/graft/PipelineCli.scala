@@ -27,17 +27,7 @@ import org.apache.spark.sql.functions._
   */
 object PipelineCli {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  import SparkFactory.session
 
   /** Read-or-write the (width, depth) params row of a CountSketch
     * grid dir: `requested` Some on build (first build records, later

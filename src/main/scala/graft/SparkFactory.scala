@@ -1,0 +1,23 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one SparkSession builder of the mains (Bench, Verify, the CLIs,
+  * HeapServer, HeapMcp and the dev tools), so they all run the config
+  * the bench measures: master `SPARK_MASTER` when set, else
+  * `local[SPARK_GRAFT_CPUS]` (default 32) with one shuffle partition
+  * per cpu; UTC session time zone, UI off, log level WARN.
+  */
+object SparkFactory {
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val b = SparkSession.builder()
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = sys.env.get("SPARK_MASTER")
+      .fold(b.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus))(b.master)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -1587,28 +1587,13 @@ final class HeapAnalysis(t: HeapTables) {
     */
   def analyzeJson(topN: Int = 30, waste: Boolean = true, maxTier: Int = 2,
       sessionId: String = "", graph: Boolean = true): String = {
-    import graft.Json.{arr => jArr, obj => jObj, str => jStr}
-    // only types whose toString IS valid JSON pass through raw; any
-    // future column type (timestamp, date, array, struct) gets quoted
-    // and escaped instead of corrupting the document
-    def cell(v: Any): String = v match {
-      case null => "null"
-      case s: String => jStr(s)
-      case v: java.math.BigDecimal => v.toPlainString
-      case d: java.lang.Double => if (d.isInfinite || d.isNaN) jStr(d.toString) else d.toString
-      case f: java.lang.Float => if (f.isInfinite || f.isNaN) jStr(f.toString) else f.toString
-      case n: java.lang.Number => n.toString
-      case b: java.lang.Boolean => b.toString
-      case other => jStr(other.toString)
-    }
-    def rowObj(df: DataFrame, r: org.apache.spark.sql.Row): String =
-      jObj(df.columns.zipWithIndex.map { case (c, i) => c -> cell(r.get(i)) }.toSeq)
-    def dfRows(dfOpt: Option[DataFrame]): String = jArr(
-      dfOpt.toSeq.flatMap(df => df.collect().toSeq.map(rowObj(df, _))))
+    import graft.Json.{arr => jArr, obj => jObj, rowJson, rowsJson, str => jStr}
+    def dfRows(dfOpt: Option[DataFrame]): String =
+      dfOpt.fold("[]")(df => rowsJson(df.columns.toSeq, df.collect().toSeq))
     // reference shape (server.py analyze_heap): summary is ONE object,
     // not a row array, next to session/dir metadata
     def dfRow(dfOpt: Option[DataFrame]): String =
-      dfOpt.flatMap(df => df.collect().headOption.map(rowObj(df, _))).getOrElse("null")
+      dfOpt.flatMap(df => df.collect().headOption.map(rowJson(df.columns.toSeq, _))).getOrElse("null")
     // independent sections run concurrently (guide §2.6 — same move
     // as runWasteAnalysis, r16): each section is a few tiny
     // driver-blocking jobs, so sequential assembly paid one

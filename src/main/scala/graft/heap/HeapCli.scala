@@ -1,7 +1,5 @@
 package graft.heap
 
-import org.apache.spark.sql.SparkSession
-
 /** Command-line surface mirroring the reference binary + analysis
   * script (`dump-objects-to-parquet`, `count-records`, `dump-objects`,
   * `analyze_heap_parquet.py`, `query_heap`):
@@ -17,17 +15,7 @@ import org.apache.spark.sql.SparkSession
   */
 object HeapCli {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (sys.env.contains("SPARK_MASTER")) b
-      else b.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  import graft.SparkFactory.session
 
   def main(args: Array[String]): Unit = args.toList match {
     case "convert" :: hprof :: out :: rest =>

@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * stdin/stdout (the MCP stdio framing), so a stock MCP client can
   * list and call the tools directly:
   *
-  *   initialize / notifications/initialized / ping
+  *   initialize / ping
+  *   notifications (initialized, cancelled): acknowledged by silence;
+  *     a cancel stops nothing yet — requests run to completion
   *   tools/list, tools/call:
   *     convert_heap_dump   (server.py:239)
   *     open_session        (server.py:317)
@@ -27,11 +29,15 @@ import org.apache.spark.sql.SparkSession
   * text is a JSON document; tool-execution failures come back as
   * `isError: true` results (protocol errors use JSON-RPC error
   * envelopes). Every behavior behind a tool is the library call the
-  * specs and driver gates already prove — this file is framing only.
+  * specs and driver gates already prove — this file is framing only:
+  * arguments are checked and results encoded by [[HeapRequest]], the
+  * layer HeapServer uses too, so a wrongly typed argument or a
+  * `limit`/`top_n` over [[HeapSessions.MaxRows]] is an `isError`
+  * result naming the key.
   */
 final class HeapMcp(spark: SparkSession) {
   import HeapMcp._
-  import HeapServer.rowsJson
+  import HeapRequest._
 
   private val sessions = new HeapSessions(spark)
 
@@ -49,17 +55,8 @@ final class HeapMcp(spark: SparkSession) {
       case Some(m: String) => m
       case _ => return id.map(errorEnvelope(_, InvalidRequest, "missing method"))
     }
-    val params = msg.get("params") match {
-      case Some(p: Map[String, Any] @unchecked) => p
-      case _ => Map.empty[String, Any]
-    }
-    if (id.isEmpty) { // notification: act silently, never respond
-      method match {
-        case "notifications/initialized" | "notifications/cancelled" => ()
-        case _ => ()
-      }
-      return None
-    }
+    val params = objMember(msg, "params")
+    if (id.isEmpty) return None // notification: act silently, never respond
     val rid = id.get
     try {
       val result = method match {
@@ -107,23 +104,11 @@ final class HeapMcp(spark: SparkSession) {
       case Some(n: String) if n.nonEmpty => n
       case _ => throw new IllegalArgumentException("tools/call requires 'name'")
     }
-    val args = params.get("arguments") match {
-      case Some(a: Map[String, Any] @unchecked) => a
-      case _ => Map.empty[String, Any]
-    }
-    toolDefs.find(_.name == name) match {
-      case None =>
-        toolResult(Json.obj(Seq("error" -> Json.str(
-          s"unknown tool '$name' (available: ${toolDefs.map(_.name).mkString(", ")})"))),
-          isError = true)
-      case Some(t) =>
-        try toolResult(t.run(args), isError = false)
-        catch {
-          case e: Exception =>
-            toolResult(Json.obj(Seq("error" ->
-              Json.str(Option(e.getMessage).getOrElse(e.getClass.getName)))), isError = true)
-        }
-    }
+    try {
+      val tool = toolDefs.find(_.name == name).getOrElse(throw new NoSuchElementException(
+        s"unknown tool '$name' (available: ${toolDefs.map(_.name).mkString(", ")})"))
+      toolResult(tool.run(objMember(params, "arguments")), isError = false)
+    } catch { case e: Exception => toolResult(errorJson(e), isError = true) }
   }
 
   private def toolResult(text: String, isError: Boolean): String =
@@ -132,40 +117,6 @@ final class HeapMcp(spark: SparkSession) {
         "type" -> Json.str("text"),
         "text" -> Json.str(text))))),
       "isError" -> isError.toString))
-
-  private def optStr(p: Map[String, Any], key: String): Option[String] =
-    p.get(key).collect { case s: String if s.nonEmpty => s }
-
-  private def reqStr(p: Map[String, Any], key: String): String =
-    optStr(p, key).getOrElse(throw new IllegalArgumentException(s"'$key' (string) required"))
-
-  private def optBool(p: Map[String, Any], key: String, default: Boolean): Boolean =
-    p.get(key) match {
-      case Some(b: Boolean) => b
-      case Some(other) => throw new IllegalArgumentException(s"'$key' must be a boolean, got $other")
-      case None => default
-    }
-
-  private def optInt(p: Map[String, Any], key: String, default: Int): Int = {
-    val v = optLong(p, key, default.toLong)
-    // explicit range check: Long.toInt silently wraps (offset 2^33 -> 0
-    // would re-serve page one instead of erroring)
-    if (v < Int.MinValue || v > Int.MaxValue)
-      throw new IllegalArgumentException(s"'$key' out of int range: $v")
-    v.toInt
-  }
-
-  private def optLong(p: Map[String, Any], key: String, default: Long): Long =
-    p.get(key) match {
-      case Some(n: Long) => n
-      case Some(n: Double) =>
-        // a fractional offset/limit is a caller bug, not a page address
-        if (n != Math.rint(n) || n < Long.MinValue.toDouble || n > Long.MaxValue.toDouble)
-          throw new IllegalArgumentException(s"'$key' must be an integer, got $n")
-        n.toLong
-      case Some(other) => throw new IllegalArgumentException(s"'$key' must be a number, got $other")
-      case None => default
-    }
 
   /** Reference parity: an omitted session_id means "the only active
     * session" (server.py's manager.get(None)).
@@ -178,11 +129,6 @@ final class HeapMcp(spark: SparkSession) {
       case many => throw new IllegalArgumentException(
         s"session_id required: ${many.size} sessions open (${many.map(_.id).mkString(", ")})")
     })
-
-  private def sessionJson(s: sessions.Session): String = Json.obj(Seq(
-    "session_id" -> Json.str(s.id),
-    "parquet_dir" -> Json.str(s.dir),
-    "tables" -> Json.arr(s.tables.map(Json.str))))
 
   private val toolDefs: Seq[Tool] = Seq(
     Tool("convert_heap_dump",
@@ -222,7 +168,7 @@ final class HeapMcp(spark: SparkSession) {
           sessions.open(reqStr(p, "parquet_dir"), optStr(p, "session_id").getOrElse(""))))),
     ),
     Tool("list_sessions", "List all heap dump sessions.", Nil, Nil,
-      _ => Json.obj(Seq("sessions" -> Json.arr(sessions.list.map(sessionJson))))),
+      _ => sessionsJson(sessions.list)),
     Tool("close_session", "Close an analysis session (keeps the Parquet files).",
       Seq(("session_id", "string", "Session to close")), Seq("session_id"),
       { p => sessions.close(reqStr(p, "session_id")); """{"closed":true}""" }),
@@ -239,13 +185,7 @@ final class HeapMcp(spark: SparkSession) {
     Tool("list_parquet_files",
       "List the exported tables of a session with file counts and bytes.",
       Seq(("session_id", "string", "Session to inspect (optional if only one open)")), Nil,
-      { p =>
-        val sid = resolveSid(p)
-        val df = sessions.listTables(sid)
-        Json.obj(Seq(
-          "session_id" -> Json.str(sid),
-          "tables" -> rowsJson(df.columns.toSeq, df.collect().toSeq)))
-      }),
+      p => tablesJson(resolveSid(p), sessions)),
     Tool("query_heap",
       "Run Spark SQL against the heap tables. Tables are named after their " +
         "directory (e.g. `java.lang.String_123`, `_object_index`). Results are " +
@@ -257,26 +197,10 @@ final class HeapMcp(spark: SparkSession) {
         ("offset", "integer", "Rows to skip (default 0)")),
       Seq("sql"),
       { p =>
-        // validate the pure params before touching session state so a
-        // bad page address errors the same way with 0 or many sessions
-        val limit = optInt(p, "limit", 1000)
-        val offset = optLong(p, "offset", 0L) // no silent Long->Int wrap
-        // Spark's OFFSET literal must be int-typed — past Int.MaxValue
-        // the page is unservable, which must be a loud error, not a
-        // wrapped address quietly re-serving page one
-        if (offset < 0 || offset > Int.MaxValue)
-          throw new IllegalArgumentException(s"'offset' out of pageable range: $offset")
+        val (limit, offset) = pageArgs(p, defaultLimit = 1000)
         val sid = resolveSid(p)
-        val page = sessions.queryPage(sid, reqStr(p, "sql"), limit = limit, offset = offset)
-        Json.obj(Seq(
-          "session_id" -> Json.str(sid),
-          "columns" -> Json.arr(page.columns.map(Json.str)),
-          "rows" -> rowsJson(page.columns, page.rows.toSeq),
-          "row_count" -> page.rows.length.toString,
-          "offset" -> offset.toString,
-          "limit" -> limit.toString,
-          "has_more" -> page.hasMore.toString,
-          "next_offset" -> page.nextOffset.toString))
+        pageJson(sid, sessions.queryPage(sid, reqStr(p, "sql"), limit, offset),
+          echo = Seq("offset" -> offset.toString, "limit" -> limit.toString))
       }),
     Tool("analyze_heap",
       "Run the automated heap analysis: summary, top types, and the tiered " +
@@ -292,7 +216,7 @@ final class HeapMcp(spark: SparkSession) {
           "the reference analyze_heap shape)")),
       Nil,
       p => sessions.analyze(resolveSid(p),
-        topN = optInt(p, "top_n", 30),
+        topN = optRows(p, "top_n", 30),
         waste = optBool(p, "waste", default = true),
         maxTier = optInt(p, "waste_tier", 2),
         // default matches mcp_server/server.py's analyze_heap result
@@ -365,6 +289,12 @@ object HeapMcp {
     s"""{"jsonrpc":"2.0","id":$id,"error":${Json.obj(Seq(
       "code" -> code.toString, "message" -> Json.str(message)))}}"""
 
+  /** A nested object member (`params`, `arguments`); anything else = none. */
+  private def objMember(m: Map[String, Any], key: String): Map[String, Any] = m.get(key) match {
+    case Some(o: Map[String, Any] @unchecked) => o
+    case _ => Map.empty
+  }
+
   private def renderId(v: Any): String = v match {
     case s: String => Json.str(s)
     case null => "null"
@@ -383,19 +313,14 @@ object HeapMcp {
         mcp.handle(line).foreach { resp => out.println(resp); out.flush() }
       }
 
-  /** Stdio entry point: `runMain graft.heap.HeapMcp`. One JSON-RPC
-    * message per stdin line, one response per stdout line — stdout
-    * carries ONLY protocol frames (Spark logs go to stderr/log4j).
+  /** Stdio entry point: `sbt --error "runMain graft.heap.HeapMcp"`
+    * (not -batch, which closes stdin). One JSON-RPC message per stdin
+    * line, one response per stdout line — stdout carries ONLY protocol
+    * frames (Spark logs go to stderr; --error keeps sbt's own lines off
+    * stdout).
     */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (sys.env.contains("SPARK_MASTER")) b
-      else b.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkFactory.session()
     serve(new HeapMcp(spark),
       new java.io.BufferedReader(new java.io.InputStreamReader(System.in)), System.out)
     spark.stop()

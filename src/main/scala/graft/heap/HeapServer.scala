@@ -5,7 +5,6 @@ import graft.Json
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.SparkSession
-import scala.collection.mutable
 
 /** Long-running serving layer over the heap library — the transport
   * counterpart of the reference's MCP server (mcp_server/server.py):
@@ -24,13 +23,22 @@ import scala.collection.mutable
   *   GET  /tables?session_id= (list_parquet_files)
   *   POST /query              (query_heap, LIMIT n+1 OFFSET pagination)
   *   POST /analyze            (analyze_heap)
+  *   POST /diff               (growth census between two sessions)
   *   GET  /guides, /guides/<name>  (guide resources)
   *
   * The server is a thin adapter: every behavior behind a route is the
   * library call the specs and driver gates already prove; nothing
-  * here re-implements analysis or query semantics.
+  * here re-implements analysis or query semantics. Request bodies are
+  * decoded, checked and answered through [[HeapRequest]], the layer
+  * HeapMcp uses too: a body is one JSON object of scalar values (empty
+  * = no parameters), and arguments are strict — a nested value, a
+  * wrongly typed one (a quoted `"true"` or `"7"` included) or a
+  * `limit`/`top_n` over [[HeapSessions.MaxRows]] is a 400 naming the
+  * key, never a silent default. Unknown route, session or guide is a
+  * 404; other failures are 500s.
   */
 final class HeapServer(spark: SparkSession, port: Int) {
+  import HeapRequest._
   import HeapServer._
 
   private val sessions = new HeapSessions(spark)
@@ -48,20 +56,14 @@ final class HeapServer(spark: SparkSession, port: Int) {
   /** Bound port (differs from the requested one when port = 0). */
   def boundPort: Int = server.getAddress.getPort
 
-  private def sessionJson(s: sessions.Session): String = Json.obj(Seq(
-    "session_id" -> Json.str(s.id),
-    "parquet_dir" -> Json.str(s.dir),
-    "tables" -> Json.arr(s.tables.map(Json.str))))
-
   server.createContext("/", (ex: HttpExchange) => {
     val path = ex.getRequestURI.getPath
     val method = ex.getRequestMethod
     try {
-      val (code, body, ctype) = route(method, path, ex) match {
-        case Text(t) => (200, t, "text/markdown; charset=utf-8")
-        case JsonBody(j) => (200, j, "application/json")
+      route(method, path, ex) match {
+        case Text(t) => respond(ex, 200, t, "text/markdown; charset=utf-8")
+        case JsonBody(j) => respond(ex, 200, j, "application/json")
       }
-      respond(ex, code, body, ctype)
     } catch {
       case e: NoSuchElementException => respondErr(ex, 404, e)
       case e: IllegalArgumentException => respondErr(ex, 400, e)
@@ -70,99 +72,81 @@ final class HeapServer(spark: SparkSession, port: Int) {
     } finally ex.close()
   })
 
-  private def route(method: String, path: String, ex: HttpExchange): Reply = (method, path) match {
-    case ("GET", "/health") => JsonBody(Json.obj(Seq("ok" -> "true")))
+  private def route(method: String, path: String, ex: HttpExchange): Reply = {
+    lazy val p = decodeBody(new String(ex.getRequestBody.readAllBytes(), UTF_8))
+    (method, path) match {
+      case ("GET", "/health") => JsonBody(Json.obj(Seq("ok" -> "true")))
 
-    case ("POST", "/convert") =>
-      val p = parseFlat(readBody(ex))
-      val hprof = reqStr(p, "hprof_path")
-      val out = reqStr(p, "output_dir")
-      val resolve = p.get("resolve_refs").exists(_ == true)
-      new HeapDump(spark, hprof).writeParquet(out, resolveRefs = resolve)
-      val tables = new HeapTables(spark, out)
-      JsonBody(Json.obj(Seq(
-        "parquet_dir" -> Json.str(out),
-        "resolve_refs" -> resolve.toString,
-        "n_tables" -> tables.list.count().toString)))
+      case ("POST", "/convert") =>
+        val hprof = reqStr(p, "hprof_path")
+        val out = reqStr(p, "output_dir")
+        val resolve = optBool(p, "resolve_refs", default = false)
+        new HeapDump(spark, hprof).writeParquet(out, resolveRefs = resolve)
+        JsonBody(Json.obj(Seq(
+          "parquet_dir" -> Json.str(out),
+          "resolve_refs" -> resolve.toString,
+          "n_tables" -> new HeapTables(spark, out).list.count().toString)))
 
-    case ("POST", "/sessions/open") =>
-      val p = parseFlat(readBody(ex))
-      JsonBody(sessionJson(
-        sessions.open(reqStr(p, "parquet_dir"), p.get("session_id").fold("")(_.toString))))
+      case ("POST", "/sessions/open") =>
+        JsonBody(sessionJson(
+          sessions.open(reqStr(p, "parquet_dir"), optStr(p, "session_id").getOrElse(""))))
 
-    case ("GET", "/sessions") =>
-      JsonBody(Json.obj(Seq("sessions" -> Json.arr(sessions.list.map(sessionJson)))))
+      case ("GET", "/sessions") => JsonBody(sessionsJson(sessions.list))
 
-    case ("POST", "/sessions/close") =>
-      val p = parseFlat(readBody(ex))
-      sessions.close(reqStr(p, "session_id"))
-      JsonBody(Json.obj(Seq("closed" -> "true")))
+      case ("POST", "/sessions/close") =>
+        sessions.close(reqStr(p, "session_id"))
+        JsonBody(Json.obj(Seq("closed" -> "true")))
 
-    case ("POST", "/sessions/cleanup") =>
-      val p = parseFlat(readBody(ex))
-      sessions.cleanup(reqStr(p, "session_id"), p.get("confirm").exists(_ == true))
-      JsonBody(Json.obj(Seq("cleaned" -> "true")))
+      case ("POST", "/sessions/cleanup") =>
+        sessions.cleanup(reqStr(p, "session_id"), optBool(p, "confirm", default = false))
+        JsonBody(Json.obj(Seq("cleaned" -> "true")))
 
-    case ("GET", "/tables") =>
-      val sid = queryParam(ex, "session_id")
-        .getOrElse(throw new IllegalArgumentException("session_id query parameter required"))
-      val df = sessions.listTables(sid)
-      JsonBody(Json.obj(Seq(
-        "session_id" -> Json.str(sid),
-        "tables" -> rowsJson(df.columns.toSeq, df.collect().toSeq))))
+      case ("GET", "/tables") =>
+        JsonBody(tablesJson(queryParam(ex, "session_id")
+          .getOrElse(throw new IllegalArgumentException("session_id query parameter required")), sessions))
 
-    case ("POST", "/query") =>
-      val p = parseFlat(readBody(ex))
-      val sid = reqStr(p, "session_id")
-      val page = sessions.queryPage(sid, reqStr(p, "sql"),
-        limit = p.get("limit").fold(100)(_.toString.toInt),
-        offset = p.get("offset").fold(0L)(_.toString.toLong))
-      JsonBody(Json.obj(Seq(
-        "session_id" -> Json.str(sid),
-        "columns" -> Json.arr(page.columns.map(Json.str)),
-        "rows" -> rowsJson(page.columns, page.rows.toSeq),
-        "row_count" -> page.rows.length.toString,
-        "has_more" -> page.hasMore.toString,
-        "next_offset" -> page.nextOffset.toString)))
+      case ("POST", "/query") =>
+        val (limit, offset) = pageArgs(p, defaultLimit = 100)
+        val sid = reqStr(p, "session_id")
+        JsonBody(pageJson(sid, sessions.queryPage(sid, reqStr(p, "sql"), limit, offset)))
 
-    case ("POST", "/analyze") =>
-      val p = parseFlat(readBody(ex))
-      JsonBody(sessions.analyze(reqStr(p, "session_id"),
-        topN = p.get("top_n").fold(30)(_.toString.toInt),
-        waste = p.get("waste").forall(_ == true),
-        maxTier = p.get("max_tier").fold(2)(_.toString.toInt),
-        graph = p.get("graph").forall(_ == true)))
+      case ("POST", "/analyze") =>
+        JsonBody(sessions.analyze(reqStr(p, "session_id"),
+          topN = optRows(p, "top_n", 30),
+          waste = optBool(p, "waste", default = true),
+          maxTier = optInt(p, "max_tier", 2),
+          graph = optBool(p, "graph", default = true)))
 
-    case ("POST", "/diff") =>
-      val p = parseFlat(readBody(ex))
-      // mode=retained switches the census from shallow deltas (B25)
-      // to retained-size deltas (B29) — same request/response shape
-      val retained = p.get("mode").exists(_.toString == "retained")
-      val df =
-        if (retained) sessions.diffRetained(
-          reqStr(p, "session_before"), reqStr(p, "session_after"))
-        else sessions.diff(reqStr(p, "session_before"), reqStr(p, "session_after"))
-      val rows = df.limit(p.get("top_n").fold(100)(_.toString.toInt)).collect()
-      JsonBody(Json.obj(Seq(
-        "session_before" -> Json.str(reqStr(p, "session_before")),
-        "session_after" -> Json.str(reqStr(p, "session_after")),
-        "columns" -> Json.arr(df.columns.toSeq.map(Json.str)),
-        "rows" -> rowsJson(df.columns, rows.toSeq),
-        "row_count" -> rows.length.toString)))
+      case ("POST", "/diff") =>
+        val (before, after) = (reqStr(p, "session_before"), reqStr(p, "session_after"))
+        val topN = optRows(p, "top_n", 100)
+        // mode=retained switches the census from shallow deltas (B25)
+        // to retained-size deltas (B29) — same request/response shape
+        val df =
+          if (optStr(p, "mode").contains("retained")) sessions.diffRetained(before, after)
+          else sessions.diff(before, after)
+        val rows = df.limit(topN).collect()
+        JsonBody(Json.obj(Seq(
+          "session_before" -> Json.str(before),
+          "session_after" -> Json.str(after),
+          "columns" -> Json.arr(df.columns.toSeq.map(Json.str)),
+          "rows" -> Json.rowsJson(df.columns.toSeq, rows.toSeq),
+          "row_count" -> rows.length.toString)))
 
-    case ("GET", "/guides") =>
-      JsonBody(Json.obj(Seq("guides" -> Json.arr(HeapGuide.guides.keys.toSeq.sorted.map(Json.str)))))
+      case ("GET", "/guides") =>
+        JsonBody(Json.obj(Seq("guides" -> Json.arr(HeapGuide.guides.keys.toSeq.sorted.map(Json.str)))))
 
-    case ("GET", g) if g.startsWith("/guides/") =>
-      val name = g.stripPrefix("/guides/")
-      Text(HeapGuide.guides.getOrElse(name,
-        throw new NoSuchElementException(
-          s"no guide '$name' (available: ${HeapGuide.guides.keys.toSeq.sorted.mkString(", ")})")))
+      case ("GET", g) if g.startsWith("/guides/") =>
+        val name = g.stripPrefix("/guides/")
+        Text(HeapGuide.guides.getOrElse(name,
+          throw new NoSuchElementException(
+            s"no guide '$name' (available: ${HeapGuide.guides.keys.toSeq.sorted.mkString(", ")})")))
 
-    case ("GET" | "POST", _) =>
-      throw new NoSuchElementException(s"no route $method $path")
-    case (m, _) =>
-      throw new UnsupportedOperationException(s"method $m not supported")
+      case ("GET" | "POST", _) =>
+        throw new NoSuchElementException(s"no route $method $path")
+      case (m, _) =>
+        throw new UnsupportedOperationException(s"method $m not supported")
+    }
   }
 
   def start(): HeapServer = { server.start(); this }
@@ -175,9 +159,6 @@ object HeapServer {
   private[heap] final case class JsonBody(json: String) extends Reply
   private[heap] final case class Text(text: String) extends Reply
 
-  private def readBody(ex: HttpExchange): String =
-    new String(ex.getRequestBody.readAllBytes(), UTF_8)
-
   private def respond(ex: HttpExchange, code: Int, body: String, ctype: String): Unit = {
     val bytes = body.getBytes(UTF_8)
     ex.getResponseHeaders.set("Content-Type", ctype)
@@ -186,15 +167,7 @@ object HeapServer {
   }
 
   private def respondErr(ex: HttpExchange, code: Int, e: Exception): Unit =
-    respond(ex, code,
-      Json.obj(Seq("error" -> Json.str(Option(e.getMessage).getOrElse(e.getClass.getName)))),
-      "application/json")
-
-  private def reqStr(p: Map[String, Any], key: String): String =
-    p.get(key) match {
-      case Some(s: String) if s.nonEmpty => s
-      case _ => throw new IllegalArgumentException(s"'$key' (string) required")
-    }
+    respond(ex, code, HeapRequest.errorJson(e), "application/json")
 
   private def queryParam(ex: HttpExchange, key: String): Option[String] =
     Option(ex.getRequestURI.getRawQuery).flatMap(_.split('&').collectFirst {
@@ -202,117 +175,12 @@ object HeapServer {
         java.net.URLDecoder.decode(kv.dropWhile(_ != '=').drop(1), UTF_8)
     })
 
-  /** One result cell as JSON — types whose toString IS valid JSON pass
-    * through raw, everything else is quoted and escaped (same rule as
-    * HeapAnalysis.analyzeJson).
-    */
-  private[heap] def cell(v: Any): String = v match {
-    case null => "null"
-    case s: String => Json.str(s)
-    case d: java.math.BigDecimal => d.toPlainString
-    case d: java.lang.Double => if (d.isInfinite || d.isNaN) Json.str(d.toString) else d.toString
-    case f: java.lang.Float => if (f.isInfinite || f.isNaN) Json.str(f.toString) else f.toString
-    case n: java.lang.Number => n.toString
-    case b: java.lang.Boolean => b.toString
-    case other => Json.str(other.toString)
-  }
-
-  private[heap] def rowsJson(columns: Seq[String], rows: Seq[org.apache.spark.sql.Row]): String =
-    Json.arr(rows.map(r =>
-      Json.obj(columns.zipWithIndex.map { case (c, i) => c -> cell(r.get(i)) })))
-
-  /** Minimal FLAT JSON object parser (strings, integers, doubles,
-    * booleans, null) — exactly the payload shapes the tool routes
-    * take; nested objects/arrays are rejected loudly. Zero-dependency
-    * by design: the build allows nothing beyond Spark + scalatest.
-    */
-  def parseFlat(s: String): Map[String, Any] = {
-    var i = 0
-    def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    def expect(c: Char): Unit = {
-      ws()
-      if (i >= s.length || s(i) != c)
-        throw new IllegalArgumentException(s"malformed JSON: expected '$c' at offset $i")
-      i += 1
-    }
-    def parseString(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (i < s.length && s(i) != '"') {
-        if (s(i) == '\\') {
-          i += 1
-          if (i >= s.length) throw new IllegalArgumentException("malformed JSON: dangling escape")
-          s(i) match {
-            case '"' => sb += '"'
-            case '\\' => sb += '\\'
-            case '/' => sb += '/'
-            case 'n' => sb += '\n'
-            case 't' => sb += '\t'
-            case 'r' => sb += '\r'
-            case 'b' => sb += '\b'
-            case 'f' => sb += '\f'
-            case 'u' =>
-              if (i + 4 >= s.length) throw new IllegalArgumentException("malformed \\u escape")
-              sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar
-              i += 4
-            case c => throw new IllegalArgumentException(s"bad escape \\$c")
-          }
-          i += 1
-        } else { sb += s(i); i += 1 }
-      }
-      expect('"')
-      sb.toString
-    }
-    def parseValue(): Any = {
-      ws()
-      if (i >= s.length) throw new IllegalArgumentException("malformed JSON: missing value")
-      s(i) match {
-        case '"' => parseString()
-        case '{' | '[' =>
-          throw new IllegalArgumentException("nested JSON values are not supported by this API")
-        case 't' if s.startsWith("true", i) => i += 4; true
-        case 'f' if s.startsWith("false", i) => i += 5; false
-        case 'n' if s.startsWith("null", i) => i += 4; null
-        case _ =>
-          val st = i
-          while (i < s.length && "+-.eE0123456789".indexOf(s(i).toInt) >= 0) i += 1
-          val tok = s.substring(st, i)
-          if (tok.isEmpty) throw new IllegalArgumentException(s"malformed JSON at offset $i")
-          if (tok.exists(c => c == '.' || c == 'e' || c == 'E')) tok.toDouble else tok.toLong
-      }
-    }
-    val out = mutable.LinkedHashMap.empty[String, Any]
-    ws()
-    if (i >= s.length) return out.toMap // empty body == empty params
-    expect('{')
-    ws()
-    if (i < s.length && s(i) == '}') return out.toMap
-    var done = false
-    while (!done) {
-      val k = parseString()
-      expect(':')
-      out(k) = parseValue()
-      ws()
-      if (i < s.length && s(i) == ',') { i += 1; ws() }
-      else { expect('}'); done = true }
-    }
-    out.toMap
-  }
-
   /** Standalone entry point: `runMain graft.heap.HeapServer [port]`
     * (or spark-submit on a cluster with SPARK_MASTER set).
     */
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8765)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (sys.env.contains("SPARK_MASTER")) b
-      else b.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val srv = new HeapServer(spark, port).start()
+    val srv = new HeapServer(graft.SparkFactory.session(), port).start()
     println(s"""{"serving":true,"port":${srv.boundPort}}""")
     // block: the HTTP executor threads are non-daemon, but keep the
     // main thread alive explicitly so Ctrl-C is the only way out

@@ -94,6 +94,7 @@ final class HeapSessions(spark: SparkSession) {
   def queryPage(sessionId: String, sql: String, limit: Int = 100,
       offset: Long = 0L): QueryPage = {
     require(limit > 0, s"limit must be positive, got $limit")
+    HeapSessions.checkRows("limit", limit) // keeps LIMIT limit+1 from wrapping
     require(offset >= 0, s"offset must be non-negative, got $offset")
     // Spark rejects a BIGINT-typed OFFSET literal, so past Int.MaxValue
     // the page is unservable — surface that as a parameter error here
@@ -121,7 +122,6 @@ final class HeapSessions(spark: SparkSession) {
       .analyzeJson(topN, waste, maxTier, sess.id, graph)
   }
 
-  /** Drop the session's views; parquet files stay on disk. */
   /** B25 across two open sessions: the per-type growth census between
     * the dump behind `beforeId` and the one behind `afterId` — the
     * two-session question (take a dump, wait, take another) the
@@ -149,6 +149,7 @@ final class HeapSessions(spark: SparkSession) {
       .orderBy(col("delta_retained").desc, col("type_name"))
   }
 
+  /** Drop the session's views; parquet files stay on disk. */
   def close(sessionId: String): Unit = catalogLock.synchronized {
     val sess = get(sessionId)
     sess.tables.foreach(v => spark.catalog.dropTempView(s"${sess.id}__$v"))
@@ -182,6 +183,17 @@ final class HeapSessions(spark: SparkSession) {
 }
 
 object HeapSessions {
+  /** Cap on a caller-picked row count (page `limit`, `top_n`): 10x the
+    * largest default, MCP's page of 1000. It bounds the driver
+    * `collect()` behind every page, census and report section, and
+    * keeps `limit + 1` and `topN * 8` far from Int overflow.
+    */
+  val MaxRows = 10000
+
+  /** `n` if within [[MaxRows]], else a parameter error naming `key`. */
+  def checkRows(key: String, n: Int): Int =
+    if (n <= MaxRows) n else throw new IllegalArgumentException(s"'$key' must be at most $MaxRows, got $n")
+
   /** Bare temp-view names are global to the SparkSession catalog, so
     * registration races are guarded JVM-wide, across HeapSessions
     * instances.

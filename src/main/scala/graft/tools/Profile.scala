@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc stage profiler: times labelled plan fragments through the
@@ -18,13 +18,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkFactory.session()
     // warmup
     spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count()
       .write.format("noop").mode("overwrite").save()

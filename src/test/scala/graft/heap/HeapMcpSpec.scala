@@ -87,6 +87,14 @@ class HeapMcpSpec extends AnyFunSuite {
     assert(big.contains("out of pageable range"))
   }
 
+  test("a page limit over the row cap is a tool error, not an internal error") {
+    // in int range, but LIMIT limit+1 would wrap to a negative literal
+    val (capped, cappedErr) = toolCall("query_heap",
+      """{"sql":"SELECT 1 AS x","limit":2147483647}""")
+    assert(cappedErr, capped)
+    assert(capped.contains(s"'limit' must be at most ${HeapSessions.MaxRows}"), capped)
+  }
+
   test("stdio loop replays a stock client's verbatim byte stream") {
     // the exact line-delimited frames a standard MCP client emits on
     // connect (initialize -> initialized notification -> tools/list ->

@@ -177,13 +177,29 @@ class HeapServerSpec extends AnyFunSuite {
   }
 
   test("flat JSON parser round-trips types and rejects nesting") {
-    val p = HeapServer.parseFlat("""{"a":"x\n\"y","n":42,"d":1.5,"b":true,"z":null}""")
+    val p = HeapRequest.decodeBody("""{"a":"x\n\"y","n":42,"d":1.5,"b":true,"z":null}""")
     assert(p("a") === "x\n\"y")
     assert(p("n") === 42L)
     assert(p("d") === 1.5)
     assert(p("b") === true)
     assert(p("z") === null)
-    assert(HeapServer.parseFlat("") === Map.empty)
-    intercept[IllegalArgumentException](HeapServer.parseFlat("""{"a":{"b":1}}"""))
+    assert(HeapRequest.decodeBody("") === Map.empty)
+    intercept[IllegalArgumentException](HeapRequest.decodeBody("""{"a":{"b":1}}"""))
+  }
+
+  test("wrongly typed and oversized arguments are a 400 naming the key") {
+    // each was once accepted: a quoted boolean turned the waste checks
+    // off, and the sizes reached Spark (LIMIT n+1 wraps negative) or a
+    // driver collect() unchecked
+    val cases = Seq(
+      ("/analyze", """{"session_id":"ghost","waste":"true"}""", "'waste'"),
+      ("/query", """{"session_id":"ghost","sql":"SELECT 1","limit":"7"}""", "'limit'"),
+      ("/query", """{"session_id":"ghost","sql":"SELECT 1","limit":2147483647}""", "'limit'"),
+      ("/diff", """{"session_before":"a","session_after":"b","top_n":2147483647}""", "'top_n'"))
+    cases.foreach { case (route, body, key) =>
+      val r = post(route, body)
+      assert(r.statusCode() === 400, s"$route $body -> ${r.body()}")
+      assert(r.body().contains(key), r.body())
+    }
   }
 }
