@@ -19,13 +19,21 @@ import scala.collection.mutable
   * ones too, if it owns them — and keeps the files; cleanup also
   * deletes the directory and requires `confirm = true`, mirroring the
   * reference's destructive-op guard.
+  *
+  * A session resolves its tables once, at open, into a [[HeapTables]]
+  * it keeps: views, analyses, table listings, diffs and the
+  * owner-switch re-registration all reuse those DataFrames, so the
+  * files must not change while the session is open. Reopening builds
+  * a new one.
   */
 final class HeapSessions(spark: SparkSession) {
   import HeapSessions.catalogLock
 
   final case class Session(id: String, dir: String, tables: Seq[String])
 
-  private val sessions = mutable.LinkedHashMap.empty[String, Session]
+  private final class Opened(val session: Session, val heap: HeapTables)
+
+  private val sessions = mutable.LinkedHashMap.empty[String, Opened]
 
   /** Open (or reopen) a session over an exported heap directory. The
     * default id is the directory basename; since exports commonly end
@@ -40,26 +48,27 @@ final class HeapSessions(spark: SparkSession) {
       val base = f.getName
       Iterator.from(0)
         .map(i => if (i == 0) base else s"${base}_$i")
-        .find(c => sessions.get(c).forall(_.dir == parquetDir)).get
+        .find(c => sessions.get(c).forall(_.session.dir == parquetDir)).get
     }
     dropBareViews() // a previous owner's tables must not survive the switch
-    val views = HeapSql.register(spark, parquetDir)
+    val heap = new HeapTables(spark, parquetDir)
+    val views = HeapSql.register(heap)
     views.keys.foreach { v =>
       spark.table(v).createOrReplaceTempView(s"${id}__$v")
     }
     val sess = Session(id, parquetDir, views.keys.toSeq.sorted)
-    sessions(id) = sess
+    sessions(id) = new Opened(sess, heap)
     HeapSessions.bareOwners(spark) = (id, sess.tables)
     sess
   }
 
-  def list: Seq[Session] = catalogLock.synchronized(sessions.values.toSeq)
+  def list: Seq[Session] = catalogLock.synchronized(sessions.values.map(_.session).toSeq)
+
+  /** The tables the session resolved at open. */
+  private[heap] def heapTables(sessionId: String): HeapTables = get(sessionId).heap
 
   /** Per-table file/row/schema listing (reference list_parquet_files). */
-  def listTables(sessionId: String): DataFrame = {
-    val sess = get(sessionId)
-    new HeapTables(spark, sess.dir).list
-  }
+  def listTables(sessionId: String): DataFrame = heapTables(sessionId).list
 
   /** SQL against one session's tables (bare table names resolve to the
     * addressed session). Registration + analysis are atomic under the
@@ -67,15 +76,17 @@ final class HeapSessions(spark: SparkSession) {
     * session's relations even if another thread re-registers after.
     */
   def query(sessionId: String, sql: String): DataFrame = catalogLock.synchronized {
-    val sess = get(sessionId)
+    val opened = get(sessionId)
+    val sess = opened.session
     // re-register only on OWNER CHANGE: the owner marker is written
     // under this same lock, so if this session already owns the bare
     // names every view still points at its directory — repeated pages
-    // of one session (the dominant serving pattern) skip ~20 parquet
-    // footer reads per call
+    // of one session (the dominant serving pattern) skip the catalog
+    // writes; a switch re-points the views at the DataFrames the
+    // session resolved at open, reading no parquet footer
     if (!HeapSessions.bareOwners.get(spark).contains((sess.id, sess.tables))) {
       dropBareViews() // stale tables of the previous owner must not linger
-      HeapSql.register(spark, sess.dir)
+      HeapSql.register(opened.heap)
       HeapSessions.bareOwners(spark) = (sess.id, sess.tables)
     }
     spark.sql(sql)
@@ -117,9 +128,8 @@ final class HeapSessions(spark: SparkSession) {
     */
   def analyze(sessionId: String, topN: Int = 30, waste: Boolean = true,
       maxTier: Int = 2, graph: Boolean = true): String = {
-    val sess = get(sessionId)
-    new HeapAnalysis(new HeapTables(spark, sess.dir))
-      .analyzeJson(topN, waste, maxTier, sess.id, graph)
+    val opened = get(sessionId)
+    new HeapAnalysis(opened.heap).analyzeJson(topN, waste, maxTier, opened.session.id, graph)
   }
 
   /** B25 across two open sessions: the per-type growth census between
@@ -130,7 +140,7 @@ final class HeapSessions(spark: SparkSession) {
   def diff(beforeId: String, afterId: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val (a, b) = catalogLock.synchronized((get(beforeId), get(afterId)))
-    HeapDiff.typeDelta(new HeapTables(spark, a.dir), new HeapTables(spark, b.dir))
+    HeapDiff.typeDelta(a.heap, b.heap)
       .getOrElse(throw new IllegalStateException(
         s"sessions '$beforeId'/'$afterId' lack _object_index exports"))
       .orderBy(col("delta_bytes").desc, col("type_name"))
@@ -143,7 +153,7 @@ final class HeapSessions(spark: SparkSession) {
   def diffRetained(beforeId: String, afterId: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val (a, b) = catalogLock.synchronized((get(beforeId), get(afterId)))
-    HeapDiff.retainedDelta(new HeapTables(spark, a.dir), new HeapTables(spark, b.dir))
+    HeapDiff.retainedDelta(a.heap, b.heap)
       .getOrElse(throw new IllegalStateException(
         s"sessions '$beforeId'/'$afterId' lack the exports the retained census needs"))
       .orderBy(col("delta_retained").desc, col("type_name"))
@@ -151,7 +161,7 @@ final class HeapSessions(spark: SparkSession) {
 
   /** Drop the session's views; parquet files stay on disk. */
   def close(sessionId: String): Unit = catalogLock.synchronized {
-    val sess = get(sessionId)
+    val sess = get(sessionId).session
     sess.tables.foreach(v => spark.catalog.dropTempView(s"${sess.id}__$v"))
     if (HeapSessions.bareOwners.get(spark).exists(_._1 == sessionId)) dropBareViews()
     sessions.remove(sessionId)
@@ -162,7 +172,7 @@ final class HeapSessions(spark: SparkSession) {
     */
   def cleanup(sessionId: String, confirm: Boolean = false): Unit = {
     require(confirm, "destructive operation - pass confirm = true to delete files")
-    val dir = get(sessionId).dir
+    val dir = get(sessionId).session.dir
     close(sessionId)
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm))
@@ -175,7 +185,7 @@ final class HeapSessions(spark: SparkSession) {
     HeapSessions.bareOwners.remove(spark)
       .foreach(_._2.foreach(v => spark.catalog.dropTempView(v)))
 
-  private def get(sessionId: String): Session = catalogLock.synchronized {
+  private def get(sessionId: String): Opened = catalogLock.synchronized {
     sessions.getOrElse(sessionId,
       throw new NoSuchElementException(
         s"no session '$sessionId' (open sessions: ${sessions.keys.mkString(", ")})"))

@@ -14,32 +14,22 @@ object HeapSql {
   def viewName(table: String): String =
     table.replaceAll("[^A-Za-z0-9_]", "_")
 
-  /** Register all tables under `dir`; returns view-name → table-dir.
-    * Class tables with multiple loader copies union under one view.
-    */
-  def register(spark: SparkSession, dir: String): Map[String, String] = {
-    val f = new java.io.File(dir)
-    val dirs = Option(f.listFiles()).map(_.toSeq.filter(_.isDirectory).map(_.getName)).getOrElse(Nil)
-    val (system, classes) = dirs.partition(_.startsWith("_"))
+  /** Register all tables under `dir`; returns view-name → table-dir. */
+  def register(spark: SparkSession, dir: String): Map[String, String] =
+    register(new HeapTables(spark, dir))
 
-    val systemViews = system.map { d =>
-      val v = viewName(d)
-      spark.read.parquet(s"$dir/$d").createOrReplaceTempView(v)
-      v -> d
-    }
-    // group loader copies: "java.lang.String_4242" -> "java.lang.String"
-    val classViews = classes.groupBy(d => d.replaceAll("_\\d+$", "")).map {
-      case (cls, copies) =>
-        val v = viewName(cls)
-        // Same-named classes from different loaders can have different
-        // field layouts; allowMissingColumns keeps one mismatched copy
-        // from failing registration of the whole SQL surface.
-        copies.map(c => spark.read.parquet(s"$dir/$c"))
-          .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-          .createOrReplaceTempView(v)
-        v -> copies.mkString(",")
-    }
-    (systemViews ++ classViews).toMap
+  /** Register every table of `t` as a view over the DataFrame `t`
+    * resolves it to; returns view-name → table-dir. Class tables with
+    * multiple loader copies union under one view (comma-joined dirs).
+    */
+  def register(t: HeapTables): Map[String, String] = {
+    val views = t.systemNames.map(d => (d, d, t.system(d))) ++
+      t.classCopies.map { case (cls, copies) => (cls, copies.mkString(","), t.byClass(cls)) }
+    views.map { case (table, dirs, df) =>
+      val v = viewName(table)
+      df.get.createOrReplaceTempView(v)
+      v -> dirs
+    }.toMap
   }
 
   def query(spark: SparkSession, dir: String, sql: String): DataFrame = {

@@ -663,4 +663,83 @@ class HeapAnalysisSpec extends AnyFunSuite {
     val resolved = resolvedAnalysis.runWasteAnalysis(maxTier = 3)
     assert(resolved === robo)
   }
+
+  /** Exports the dump `w` describes to a fresh directory. */
+  private def exportOf(w: HprofWriter, tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(tag)
+    val hp = dir.resolve("h.hprof").toString
+    w.writeTo(hp)
+    val out = dir.resolve("parquet").toString
+    new HeapDump(spark, hp).writeParquet(out)
+    out
+  }
+
+  test("loader copies with different field layouts: every copy counts") {
+    val w = new HprofWriter()
+    val obj = w.defineClass("java.lang.Object")
+    val loader = w.instance(w.defineClass("java.net.URLClassLoader", obj), Nil)
+    // the second loader's ArrayList has no elementData, its Integer no value
+    val alBoot = w.defineClass("java.util.ArrayList", obj,
+      instanceFields = Seq("size" -> BasicType.Int, "elementData" -> BasicType.Object))
+    val alApp = w.defineClass("java.util.ArrayList", obj,
+      instanceFields = Seq("size" -> BasicType.Int), loaderId = loader)
+    val intBoot = w.defineClass("java.lang.Integer", obj,
+      instanceFields = Seq("value" -> BasicType.Int))
+    val intApp = w.defineClass("java.lang.Integer", obj, loaderId = loader)
+    w.instance(alBoot, Seq(BasicType.Int -> 0, BasicType.Object -> 0L))
+    w.instance(alApp, Seq(BasicType.Int -> 0))
+    w.instance(alApp, Seq(BasicType.Int -> 1))
+    w.instance(alApp, Seq(BasicType.Int -> 5))
+    w.instance(intBoot, Seq(BasicType.Int -> 7))
+    w.instance(intApp, Nil)
+    w.instance(intApp, Nil)
+    val t = new HeapTables(spark, exportOf(w, "heapan_loaders"))
+    assert(t.classCopies("java.util.ArrayList").size === 2)
+    assert(t.classCopies("java.lang.Integer").size === 2)
+    val an = new HeapAnalysis(t)
+
+    // 2 empty (one per copy) + 1 single: 2 x 96 + 92
+    val bc = an.checkBadCollections().get
+    assert(bc.affectedCount === 3L)
+    assert(bc.estimatedWasteBytes === 2 * 96L + 92L)
+    assert(an.boxedCounts.get.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ===
+      Seq("Integer" -> 3L))
+    assert(an.checkBoxedNumbers().get.affectedCount === 3L)
+  }
+
+  test("a failed section cancels its analysis's job group") {
+    val w = new HprofWriter()
+    val obj = w.defineClass("java.lang.Object")
+    val box = w.defineClass("java.lang.Integer", obj, instanceFields = Seq("value" -> BasicType.Int))
+    (1 to 5).foreach(i => w.instance(box, Seq(BasicType.Int -> i)))
+    w.gcRoot(Sub.RootStickyClass, box)
+    val out = exportOf(w, "heapan_unreadable")
+    // the gc-roots table is unreadable: its parquet files are garbage
+    new java.io.File(out, "_gc_roots").listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.write(f.toPath, "not parquet".getBytes))
+
+    val groups = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(HeapAnalysis.JobGroupPrefix))
+          .foreach(g => groups.put(g, js.properties.getProperty("spark.job.interruptOnCancel")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      intercept[Exception](new HeapAnalysis(new HeapTables(spark, out)).analyzeJson(maxTier = 2, graph = false))
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+
+    import scala.jdk.CollectionConverters._
+    assert(!groups.isEmpty, "the analysis ran no job under its job group")
+    assert(groups.values.asScala.forall(_ == "true"), groups)
+    def running: Seq[Int] = groups.keySet.asScala.toSeq.flatMap(sc.statusTracker.getJobIdsForGroup(_))
+      .filter(id => sc.statusTracker.getJobInfo(id)
+        .exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (running.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(running.isEmpty, s"jobs still running after the failure: $running")
+  }
 }

@@ -12,17 +12,37 @@ class HeapSessionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private def export(tag: String, n: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"sess_$tag")
+    exportTo(dir.resolve("pq").toString, n)
+  }
+
+  /** A dump of `n` Integers exported to `out`, replacing what is there. */
+  private def exportTo(out: String, n: Int): String = {
     val w = new HprofWriter()
     val obj = w.defineClass("java.lang.Object")
     val box = w.defineClass("java.lang.Integer", obj,
       instanceFields = Seq("value" -> BasicType.Int))
     (1 to n).foreach(i => w.instance(box, Seq(BasicType.Int -> i)))
-    val dir = java.nio.file.Files.createTempDirectory(s"sess_$tag")
-    val hp = dir.resolve("t.hprof").toString
+    val hp = java.nio.file.Files.createTempFile("sess", ".hprof").toString
     w.writeTo(hp)
-    val out = dir.resolve("pq").toString
     new HeapDump(spark, hp).writeParquet(out)
     out
+  }
+
+  /** Names of the first stage of every job `body` starts; a parquet
+    * read's schema inference shows up as `parquet at <file>:<line>`.
+    */
+  private def jobNames(body: => Unit): Seq[String] = {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        names.add(js.stageInfos.map(_.name).headOption.getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerDrain(sc) } finally sc.removeSparkListener(listener)
+    names.toArray(Array.empty[String]).toSeq
   }
 
   test("open/list/query/close across two concurrent sessions") {
@@ -120,5 +140,57 @@ class HeapSessionsSpec extends AnyFunSuite {
     hs.cleanup("dump_c", confirm = true)
     assert(!new java.io.File(s.dir).exists)
     assert(hs.list.isEmpty)
+  }
+
+  test("a session resolves each table once, from any thread") {
+    val hs = new HeapSessions(spark)
+    val dir = export("memo", 3)
+    hs.open(dir, "dump_memo")
+    val t = hs.heapTables("dump_memo")
+    assert(hs.heapTables("dump_memo") eq t)
+    assert(t.system("_object_index").get eq t.system("_object_index").get)
+    assert(t.byClass("java.lang.Integer").get eq t.byClass("java.lang.Integer").get)
+    // a fresh instance asked by 8 threads at once still reads once
+    val fresh = new HeapTables(spark, dir)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val fs = (1 to 8).map(_ => pool.submit(() => fresh.system("_object_index").get))
+      val dfs = fs.map(_.get())
+      assert(dfs.forall(_ eq dfs.head))
+    } finally pool.shutdown()
+    hs.close("dump_memo")
+  }
+
+  test("analyze on an open session reads no parquet footer; open reads each table once") {
+    val hs = new HeapSessions(spark)
+    val dir = export("jobs", 5)
+    var sess: HeapSessions#Session = null
+    val openJobs = jobNames { sess = hs.open(dir, "dump_jobs") }
+    val nDirs = new java.io.File(dir).listFiles().count(_.isDirectory)
+    assert(openJobs.count(_.startsWith("parquet at")) === nDirs, openJobs)
+    val first = jobNames(hs.analyze("dump_jobs", maxTier = 1, graph = false))
+    assert(!first.exists(_.startsWith("parquet at")), first)
+    val second = jobNames(hs.analyze("dump_jobs", maxTier = 1, graph = false))
+    assert(second.size <= first.size, (first, second))
+    assert(!second.exists(_.startsWith("parquet at")), second)
+    hs.close(sess.id)
+  }
+
+  test("a reopen after a re-export sees the new dump through query and analyze") {
+    val hs = new HeapSessions(spark)
+    val dir = export("reexp", 3)
+    def boxed(json: String): Long = graft.Json.parse(json).asInstanceOf[Map[String, Any]]("waste_findings")
+      .asInstanceOf[Seq[Map[String, Any]]].find(_("check_name") == "Boxed Primitives")
+      .map(_("affected_count").toString.toDouble.toLong).getOrElse(0L)
+    def count(): Long = hs.query("dump_reexp", "SELECT COUNT(*) FROM java_lang_Integer")
+      .collect()(0).getLong(0)
+    hs.open(dir, "dump_reexp")
+    assert(count() === 3L)
+    assert(boxed(hs.analyze("dump_reexp", maxTier = 1, graph = false)) === 3L)
+    exportTo(dir, 6)
+    hs.open(dir, "dump_reexp")
+    assert(count() === 6L)
+    assert(boxed(hs.analyze("dump_reexp", maxTier = 1, graph = false)) === 6L)
+    hs.close("dump_reexp")
   }
 }
