@@ -1,6 +1,11 @@
 package graft.heap
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** Resolves the tables of an exported heap-parquet directory — the
@@ -9,13 +14,15 @@ import org.apache.spark.sql.functions._
   * by `<class>_<id>` prefix (all loader copies unioned).
   *
   * Each table resolves at most once per instance: the first `system`
-  * or `byClass` call reads it (a file listing plus, on Spark 4, a
-  * schema-inference job) and every later call returns the same
-  * DataFrame, from any thread. The files must therefore not change
-  * while the instance is in use; a re-export needs a new instance.
+  * or `byClass` call reads it ([[HeapTables.read]]: a file listing and
+  * one footer read on the driver, no Spark job) and every later call
+  * returns the same DataFrame, from any thread. The files must
+  * therefore not change while the instance is in use; a re-export
+  * needs a new instance.
   */
 final class HeapTables(val spark: SparkSession, val dir: String) {
-  private val entries: Seq[String] = {
+  /** The table directories under `dir`, system and class tables. */
+  val entries: Seq[String] = {
     val f = new java.io.File(dir)
     Option(f.listFiles()).map(_.toSeq.filter(_.isDirectory).map(_.getName)).getOrElse(Nil)
   }
@@ -35,13 +42,13 @@ final class HeapTables(val spark: SparkSession, val dir: String) {
     entries.filterNot(_.startsWith("_")).groupBy(_.replaceAll("_\\d+$", ""))
 
   private val systemTables: Map[String, Resolved] =
-    systemNames.map(n => n -> new Resolved(spark.read.parquet(s"$dir/$n"))).toMap
+    systemNames.map(n => n -> new Resolved(HeapTables.read(spark, s"$dir/$n"))).toMap
 
   // Same-named classes from different loaders can have different field
   // layouts; allowMissingColumns gives a copy's missing fields nulls
   // instead of failing every check that reads the class.
   private val classTables: Map[String, Resolved] = classCopies.map { case (cls, copies) =>
-    cls -> new Resolved(copies.map(c => spark.read.parquet(s"$dir/$c"))
+    cls -> new Resolved(copies.map(c => HeapTables.read(spark, s"$dir/$c"))
       .reduce((a, b) => a.unionByName(b, allowMissingColumns = true)))
   }
 
@@ -75,6 +82,32 @@ final class HeapTables(val spark: SparkSession, val dir: String) {
 
 object HeapTables {
   import org.apache.spark.sql.functions._
+
+  /** `spark.read.parquet(tableDir)` with the schema taken on the
+    * driver from one data file's footer. Spark's own inference
+    * (`mergeSchema` off) converts the same footer the same way, but in
+    * a Spark job per read: a fixed cost per table that every session
+    * open paid. A missing directory, or one without a data file,
+    * keeps Spark's inference, and so its error.
+    */
+  def read(spark: SparkSession, tableDir: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(tableDir)
+    val fs = p.getFileSystem(conf)
+    // a data file is one Spark's listing keeps: not `_SUCCESS`, not a `.crc`
+    val dataFile = if (!fs.exists(p)) None else
+      fs.listStatus(p).filter(st => st.isFile && !Seq("_", ".").exists(st.getPath.getName.startsWith))
+        .minByOption(_.getPath.getName)
+    dataFile match {
+      case None => spark.read.parquet(tableDir)
+      case Some(st) =>
+        val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf),
+          ParquetMetadataConverter.NO_FILTER)
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(tableDir)
+    }
+  }
 
   /** Reference-parity ref-field dispatch (analyze_heap_parquet.py's
     * ref_field, :129-133): a reference column is a bare long in a

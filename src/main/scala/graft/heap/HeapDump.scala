@@ -145,15 +145,26 @@ final class HeapDump(spark: SparkSession, path: String) {
 
   private val segPtrs = records.filter(r => Tag.isHeapSegment(r.tag))
 
-  private def parallelism(n: Int): Int =
-    math.max(1, math.min(n, spark.sparkContext.defaultParallelism))
+  /** Tasks for a scan of `ptrs`: one per core, but none that reads
+    * less than `spark.sql.files.openCostInBytes` (Spark's per-file scan
+    * charge, 4 MB by default). A pass-2 task writes its own file of
+    * every system table, and each file costs a scan task on every
+    * later read, so a 0.5 MB dump parses in one task and writes one
+    * file per table; a dump of cores × 4 MB or more keeps every core.
+    */
+  private def parallelism(ptrs: Seq[RecordPtr]): Int = {
+    val openCost = math.max(1L, spark.sessionState.conf.filesOpenCostInBytes)
+    val bytes = ptrs.iterator.map(_.bodyLength).sum
+    val byBytes = (bytes + openCost - 1) / openCost
+    math.max(1L, Seq(ptrs.size.toLong, spark.sparkContext.defaultParallelism.toLong, byBytes).min).toInt
+  }
 
   /** Parse a set of records on executors; `f` runs per record body,
     * one file handle per partition.
     */
   private def recordRdd[T: ClassTag](ptrs: Seq[RecordPtr])(f: Array[Byte] => Iterator[T]): RDD[T] = {
     val p = path
-    spark.sparkContext.parallelize(ptrs, parallelism(ptrs.size))
+    spark.sparkContext.parallelize(ptrs, parallelism(ptrs))
       .mapPartitions { it =>
         HeapIO.withReader(p)(rd => it.flatMap(r => f(rd.body(r))).toVector.iterator)
       }
@@ -363,7 +374,9 @@ final class HeapDump(spark: SparkSession, path: String) {
     */
   def writeParquet(outDir: String, resolveRefs: Boolean = false): Unit = {
     import scala.concurrent.ExecutionContext.Implicits.global
-    def w(df: DataFrame, name: String): Unit = save(df, outDir, name)
+    // the metadata tables are driver-built and sized by class count: one
+    // writer task each, so each is one file, like a small dump's scan tables
+    def w(df: DataFrame, name: String): Unit = save(df.coalesce(1), outDir, name)
 
     val stage = s"$outDir/${HeapDump.ResolveStage}"
     def dropStage(): Unit = HeapIO.withFs(stage)((fs, p) => { fs.delete(p, true); () })
@@ -404,7 +417,9 @@ final class HeapDump(spark: SparkSession, path: String) {
 
   /** Pass 2 as ONE job over ONE parse: each segment task writes its
     * slice of the system tables to `outDir` directly (SystemTableWriter
-    * side files, deterministic names — retry-safe) while streaming
+    * side files, deterministic names — retry-safe; `parallelism` sizes
+    * the tasks by bytes, so a small dump's system tables are one file
+    * each) while streaming
     * instance events into the (class, salt) exchange that feeds the
     * clustered per-class writers under `classDir`. Total dump reads:
     * pass-1 metadata + this — the same two-pass budget as the
@@ -421,7 +436,7 @@ final class HeapDump(spark: SparkSession, path: String) {
     val idSz = idSize
     val p = path
     val evRdd: RDD[InstanceEv] = spark.sparkContext
-      .parallelize(segPtrs, parallelism(segPtrs.size))
+      .parallelize(segPtrs, parallelism(segPtrs))
       .mapPartitionsWithIndex { (pid, it) =>
         val out = mutable.ArrayBuffer.empty[InstanceEv]
         val writers = new SystemTableWriter(outDir, pid, names.value)
@@ -497,9 +512,11 @@ final class HeapDump(spark: SparkSession, path: String) {
     * each staged class table with reference fields is rewritten with
     * STRUCT{id,type} refs. The jobs run concurrently; the index side
     * of every join is the `_object_index` parquet the pass just wrote.
+    * Both reads go through [[HeapTables.read]], so neither runs a
+    * schema-inference job.
     */
   private def writeResolved(outDir: String, stage: String): Unit = {
-    val oi = spark.read.parquet(s"$outDir/_object_index")
+    val oi = HeapTables.read(spark, s"$outDir/_object_index")
     val staged = HeapIO.withFs(stage) { (fs, p) =>
       if (fs.exists(p)) fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSet
       else Set.empty[String]
@@ -529,7 +546,7 @@ final class HeapDump(spark: SparkSession, path: String) {
     try {
       val jobs = write(staticFieldsResolved, "_static_fields") +: tables.collect {
         case (table, refs) if refs.nonEmpty =>
-          write(refs.foldLeft(spark.read.parquet(s"$stage/$table"))(
+          write(refs.foldLeft(HeapTables.read(spark, s"$stage/$table"))(
             (d, r) => HeapTables.resolveRef(d, r, oi)), table)
       }
       // drain every job before surfacing the first failure, so none

@@ -85,7 +85,7 @@ final class HeapServer(spark: SparkSession, port: Int) {
         JsonBody(Json.obj(Seq(
           "parquet_dir" -> Json.str(out),
           "resolve_refs" -> resolve.toString,
-          "n_tables" -> new HeapTables(spark, out).list.count().toString)))
+          "n_tables" -> new HeapTables(spark, out).entries.size.toString)))
 
       case ("POST", "/sessions/open") =>
         JsonBody(sessionJson(

@@ -21,7 +21,8 @@ import scala.collection.mutable
   * reference's destructive-op guard.
   *
   * A session resolves its tables once, at open, into a [[HeapTables]]
-  * it keeps: views, analyses, table listings, diffs and the
+  * it keeps. Resolving reads one footer per table on the driver, so an
+  * open runs no Spark job. Views, analyses, table listings, diffs and the
   * owner-switch re-registration all reuse those DataFrames, so the
   * files must not change while the session is open. Reopening builds
   * a new one.

@@ -397,4 +397,36 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(once === dup)
   }
+
+  /** The integer rank recurrence of [[Graph.pageRank]] (`seeds` empty)
+    * or [[Graph.personalizedPageRank]] replayed on the driver.
+    */
+  private def driverRanks(edges: Seq[(Long, Long)], seeds: Seq[Long], iters: Int): Map[Long, Long] = {
+    val e = edges.distinct
+    val outdeg = e.groupBy(_._1).map { case (u, es) => u -> es.size.toLong }
+    val nodes = e.flatMap { case (u, v) => Seq(u, v) }.distinct
+    val (init, restart) =
+      if (seeds.isEmpty) { val i = S / nodes.size; (nodes.map(_ -> i).toMap, nodes.map(_ -> i * 15 / 100).toMap) }
+      else (seeds.map(_ -> S / seeds.size).toMap, seeds.map(_ -> (S * 15 / 100) / seeds.size).toMap)
+    (1 to iters).foldLeft(nodes.map(v => v -> init.getOrElse(v, 0L)).toMap) { (r, _) =>
+      val in = e.groupBy(_._2).map { case (v, es) => v -> es.map { case (u, _) => r(u) / outdeg(u) }.sum }
+      nodes.map(v => v -> (restart.getOrElse(v, 0L) + 85L * in.getOrElse(v, 0L) / 100)).toMap
+    }
+  }
+
+  test("pageRank and personalizedPageRank past a lineage cut match the driver recurrence") {
+    val iters = 10
+    assert(Graph.checkpointEvery < iters, "the run must cross a lineage cut")
+    // a cycle with a chord, a dangling sink (6), a source-only node (7)
+    // and a duplicate edge
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L),
+      (2L, 5L), (5L, 6L), (7L, 1L), (1L, 2L))
+    for (parts <- Seq(1, 3)) {
+      val df = edges.toDF("src", "dst").repartition(parts)
+      def ranks(d: org.apache.spark.sql.DataFrame) = d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(ranks(Graph.pageRank(df, iters)) === driverRanks(edges, Nil, iters), s"parts=$parts")
+      assert(ranks(Graph.personalizedPageRank(df, Seq(1L, 4L), iters)) ===
+        driverRanks(edges, Seq(1L, 4L), iters), s"parts=$parts")
+    }
+  }
 }

@@ -329,4 +329,91 @@ class HeapDumpSpec extends AnyFunSuite {
       assert(rows(r.select(ids: _*)) === rows(b), t)
     }
   }
+
+  /** Every table of `dir` resolves through [[HeapTables.read]] to the
+    * schema Spark's own inference gives, nullability and metadata
+    * included; a class with loader copies unions to the same schema.
+    */
+  private def assertSparkSchemas(dir: String): Unit = {
+    val t = new HeapTables(spark, dir)
+    assert(t.entries.nonEmpty)
+    t.entries.foreach { e =>
+      assert(HeapTables.read(spark, s"$dir/$e").schema === spark.read.parquet(s"$dir/$e").schema, e)
+    }
+    t.classCopies.foreach { case (cls, copies) =>
+      val inferred = copies.map(c => spark.read.parquet(s"$dir/$c"))
+        .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+      assert(t.byClass(cls).get.schema === inferred.schema, cls)
+    }
+  }
+
+  test("tables resolve to Spark's inferred schemas in robo, resolved and loader-copy exports") {
+    assertSparkSchemas(roboDir)
+    assertSparkSchemas(resolvedDir)
+    val w = new HprofWriter()
+    val obj = w.defineClass("java.lang.Object")
+    val loader = w.instance(w.defineClass("java.net.URLClassLoader", obj), Nil)
+    val boot = w.defineClass("java.util.ArrayList", obj,
+      instanceFields = Seq("size" -> BasicType.Int, "elementData" -> BasicType.Object))
+    val app = w.defineClass("java.util.ArrayList", obj,
+      instanceFields = Seq("size" -> BasicType.Int), loaderId = loader)
+    w.instance(boot, Seq(BasicType.Int -> 0, BasicType.Object -> 0L))
+    w.instance(app, Seq(BasicType.Int -> 3))
+    val hp = java.nio.file.Files.createTempFile("heap_copies", ".hprof").toString
+    w.writeTo(hp)
+    for (resolve <- Seq(false, true)) {
+      val out = java.nio.file.Files.createTempDirectory("heap_copies_pq").toString
+      new HeapDump(spark, hp).writeParquet(out, resolveRefs = resolve)
+      val t = new HeapTables(spark, out)
+      assert(t.classCopies("java.util.ArrayList").size === 2)
+      assert(t.byClass("java.util.ArrayList").get.count() === 2L)
+      assertSparkSchemas(out)
+    }
+  }
+
+  test("a table with a garbage footer fails open with an error naming the file") {
+    val out = java.nio.file.Files.createTempDirectory("heap_garbage").toString
+    fixture._1.writeParquet(out)
+    val bad = new java.io.File(out, "_gc_roots").listFiles().filter(_.getName.endsWith(".parquet"))
+    bad.foreach(f => java.nio.file.Files.write(f.toPath, "not parquet".getBytes))
+    val e = intercept[Exception](new HeapSessions(spark).open(out, "garbage"))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(x => Option(x.getMessage)).toSeq
+    assert(messages.exists(m => bad.exists(f => m.contains(s"_gc_roots/${f.getName}"))), messages)
+  }
+
+  test("a small dump writes one file per system table; a lowered open cost, one per core") {
+    val cores = spark.sparkContext.defaultParallelism
+    val path = java.nio.file.Files.createTempDirectory("heap_cores").resolve("t.hprof").toString
+    // the fixture's records over `cores` segments, so the scan can use every core
+    val w = new HprofWriter()
+    new Fixture(w)
+    w.writeTo(path, segments = cores)
+    /** System table -> its parquet file count. */
+    def exportFiles(): (String, Map[String, Int]) = {
+      val out = java.nio.file.Files.createTempDirectory("heap_files").toString
+      new HeapDump(spark, path).writeParquet(out)
+      out -> new java.io.File(out).listFiles().filter(_.getName.startsWith("_")).map { t =>
+        t.getName -> t.listFiles().count(_.getName.endsWith(".parquet"))
+      }.toMap
+    }
+    val (small, oneEach) = exportFiles()
+    assert(oneEach.size === 16)
+    assert(oneEach.values.toSet === Set(1), oneEach)
+    val key = "spark.sql.files.openCostInBytes"
+    val before = spark.conf.getOption(key)
+    val (spread, perCore) = try {
+      spark.conf.set(key, "1")
+      exportFiles()
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // the scan's tables follow the scan; the driver-built metadata tables stay one file
+    val (scanned, metadata) = perCore.partition { case (t, _) => SystemTableWriter.tableNames.contains(t) }
+    assert(scanned.size === SystemTableWriter.tableNames.size)
+    assert(scanned.values.toSet === Set(cores), perCore)
+    assert(metadata.values.toSet === Set(1), perCore)
+    def rows(dir: String, t: String): Seq[String] =
+      spark.read.parquet(s"$dir/$t").collect().map(_.toString).sorted.toSeq
+    oneEach.keys.foreach(t => assert(rows(small, t) === rows(spread, t), t))
+    assert(rows(small, "_object_index") === rows(roboDir, "_object_index"))
+  }
 }

@@ -166,8 +166,8 @@ class HeapSessionsSpec extends AnyFunSuite {
     val dir = export("jobs", 5)
     var sess: HeapSessions#Session = null
     val openJobs = jobNames { sess = hs.open(dir, "dump_jobs") }
-    val nDirs = new java.io.File(dir).listFiles().count(_.isDirectory)
-    assert(openJobs.count(_.startsWith("parquet at")) === nDirs, openJobs)
+    // each table's footer is read on the driver: open runs no Spark job
+    assert(openJobs.isEmpty, openJobs)
     val first = jobNames(hs.analyze("dump_jobs", maxTier = 1, graph = false))
     assert(!first.exists(_.startsWith("parquet at")), first)
     val second = jobNames(hs.analyze("dump_jobs", maxTier = 1, graph = false))
