@@ -7,6 +7,13 @@ import org.apache.spark.sql.SparkSession
   * the bench measures: master `SPARK_MASTER` when set, else
   * `local[SPARK_GRAFT_CPUS]` (default 32) with one shuffle partition
   * per cpu; UTC session time zone, UI off, log level WARN.
+  *
+  * Spark keeps compiled whole-stage and projection classes in one LRU
+  * cache, sized once per JVM by `spark.sql.codegen.cache.maxEntries`
+  * (default 100) when the first query compiles. A heap server's mix
+  * of analyses, page templates, conversions and id lookups needs more
+  * than 100, and every class evicted is compiled again on its next
+  * use, so the mains size the cache at 1000.
   */
 object SparkFactory {
   def session(): SparkSession = {
@@ -14,6 +21,7 @@ object SparkFactory {
     val b = SparkSession.builder()
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
     val spark = sys.env.get("SPARK_MASTER")
       .fold(b.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus))(b.master)
       .getOrCreate()

@@ -1,12 +1,17 @@
 package graft.heap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Resolves the tables of an exported heap-parquet directory — the
   * Spark counterpart of the reference's ParquetResolver
@@ -16,9 +21,10 @@ import org.apache.spark.sql.functions._
   * Each table resolves at most once per instance: the first `system`
   * or `byClass` call reads it ([[HeapTables.read]]: a file listing and
   * one footer read on the driver, no Spark job) and every later call
-  * returns the same DataFrame, from any thread. The files must
-  * therefore not change while the instance is in use; a re-export
-  * needs a new instance.
+  * returns the same DataFrame, from any thread. [[rowCount]] is
+  * memoized the same way, from the footers of all the table's files.
+  * The files must therefore not change while the instance is in use;
+  * a re-export needs a new instance.
   */
 final class HeapTables(val spark: SparkSession, val dir: String) {
   /** The table directories under `dir`, system and class tables. */
@@ -27,10 +33,18 @@ final class HeapTables(val spark: SparkSession, val dir: String) {
     Option(f.listFiles()).map(_.toSeq.filter(_.isDirectory).map(_.getName)).getOrElse(Nil)
   }
 
-  /** A table read on first use; `lazy val` makes the read happen once
-    * even when several analysis threads ask at the same time.
+  /** A table read on first use from its directories (a class's loader
+    * copies); `lazy val` makes each read happen once even when several
+    * analysis threads ask at the same time. Same-named classes from
+    * different loaders can have different field layouts;
+    * allowMissingColumns gives a copy's missing fields nulls instead of
+    * failing every check that reads the class.
     */
-  private final class Resolved(read: => DataFrame) { lazy val df: DataFrame = read }
+  private final class Resolved(dirs: Seq[String]) {
+    lazy val df: DataFrame = dirs.map(d => HeapTables.read(spark, s"$dir/$d"))
+      .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+    lazy val rows: Long = dirs.map(d => HeapTables.footerRows(spark, s"$dir/$d")).sum
+  }
 
   /** Exported system tables (`_object_index`, `_fields`, ...). */
   val systemNames: Seq[String] = entries.filter(_.startsWith("_"))
@@ -42,15 +56,10 @@ final class HeapTables(val spark: SparkSession, val dir: String) {
     entries.filterNot(_.startsWith("_")).groupBy(_.replaceAll("_\\d+$", ""))
 
   private val systemTables: Map[String, Resolved] =
-    systemNames.map(n => n -> new Resolved(HeapTables.read(spark, s"$dir/$n"))).toMap
+    systemNames.map(n => n -> new Resolved(Seq(n))).toMap
 
-  // Same-named classes from different loaders can have different field
-  // layouts; allowMissingColumns gives a copy's missing fields nulls
-  // instead of failing every check that reads the class.
-  private val classTables: Map[String, Resolved] = classCopies.map { case (cls, copies) =>
-    cls -> new Resolved(copies.map(c => HeapTables.read(spark, s"$dir/$c"))
-      .reduce((a, b) => a.unionByName(b, allowMissingColumns = true)))
-  }
+  private val classTables: Map[String, Resolved] =
+    classCopies.map { case (cls, copies) => cls -> new Resolved(copies) }
 
   def system(name: String): Option[DataFrame] = systemTables.get(name).map(_.df)
 
@@ -78,11 +87,16 @@ final class HeapTables(val spark: SparkSession, val dir: String) {
     }
 
   def byClass(className: String): Option[DataFrame] = classTables.get(className).map(_.df)
+
+  /** Rows of a system table, or of a class with all its loader copies,
+    * summed from the row counts in its data files' footers on the
+    * driver: no Spark job.
+    */
+  def rowCount(table: String): Option[Long] =
+    systemTables.get(table).orElse(classTables.get(table)).map(_.rows)
 }
 
 object HeapTables {
-  import org.apache.spark.sql.functions._
-
   /** `spark.read.parquet(tableDir)` with the schema taken on the
     * driver from one data file's footer. Spark's own inference
     * (`mergeSchema` off) converts the same footer the same way, but in
@@ -92,22 +106,35 @@ object HeapTables {
     */
   def read(spark: SparkSession, tableDir: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(tableDir)
-    val fs = p.getFileSystem(conf)
-    // a data file is one Spark's listing keeps: not `_SUCCESS`, not a `.crc`
-    val dataFile = if (!fs.exists(p)) None else
-      fs.listStatus(p).filter(st => st.isFile && !Seq("_", ".").exists(st.getPath.getName.startsWith))
-        .minByOption(_.getPath.getName)
-    dataFile match {
+    dataFiles(conf, tableDir).minByOption(_.getPath.getName) match {
       case None => spark.read.parquet(tableDir)
       case Some(st) =>
-        val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf),
-          ParquetMetadataConverter.NO_FILTER)
-        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer(conf, st)),
           new ParquetToSparkSchemaConverter(spark.sessionState.conf))
         spark.read.schema(schema).parquet(tableDir)
     }
   }
+
+  /** The rows of `tableDir`'s data files, summed from their footers'
+    * row-group counts on the driver; 0 for a missing directory.
+    */
+  private def footerRows(spark: SparkSession, tableDir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dataFiles(conf, tableDir).map(st => footer(conf, st).getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  /** The data files of a table directory, the ones Spark's listing
+    * keeps: not `_SUCCESS`, not a `.crc`. None for a missing directory.
+    */
+  private def dataFiles(conf: Configuration, tableDir: String): Seq[FileStatus] = {
+    val p = new Path(tableDir)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) Nil else
+      fs.listStatus(p).toSeq.filter(st => st.isFile && !Seq("_", ".").exists(st.getPath.getName.startsWith))
+  }
+
+  private def footer(conf: Configuration, st: FileStatus): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.NO_FILTER)
 
   /** Reference-parity ref-field dispatch (analyze_heap_parquet.py's
     * ref_field, :129-133): a reference column is a bare long in a
@@ -160,48 +187,91 @@ final case class WasteFinding(
   * Waste constants are public 64-bit-JVM layout facts (compressed
   * oops), matching analyze_heap_parquet.py:36-47.
   *
-  * A result with a constant-bounded row count (one row per pattern,
-  * wrapper, bucket or root kind) is coalesced to one partition before
-  * its sort: a global sort would plan a range exchange and a sampling
-  * job for it, two of the four jobs such a report otherwise costs.
+  * Every query an analysis runs is a Spark job and a few generated
+  * classes, so the report keeps their number down:
+  *  - `_object_index` is aggregated once per instance, one row per
+  *    class (the census); the summary, top types, categories, class
+  *    count and shallow-size top are derived from it on the driver;
+  *  - the boxed-wrapper counts and the duplicate-string sampling
+  *    threshold are footer row counts ([[HeapTables.rowCount]]);
+  *  - a tier-1 result with a constant-bounded row count (one row per
+  *    bucket, collection type or pattern) is collected unsorted and
+  *    sorted on the driver, under its aggregate's own schema.
+  * The DataFrame methods wrap those driver rows as local relations;
+  * the checks and [[analyzeJson]] read the rows directly. The other
+  * constant-bounded results are coalesced to one partition before
+  * their sort: a global sort would plan a range exchange and a
+  * sampling job for it.
   */
 final class HeapAnalysis(t: HeapTables) {
   import HeapAnalysis._
 
-  // -- B1-B5: report queries ------------------------------------------
-
-  def summary: Option[DataFrame] = t.system("_object_index").map(
-    _.agg(count(lit(1)).as("total_objects"),
-      countDistinct(col("type_name")).as("unique_classes")))
-
-  def topTypes(limit: Int = 30): Option[DataFrame] = t.system("_object_index").map(
-    _.groupBy("type_name").agg(count(lit(1)).as("obj_count"))
-      .orderBy(col("obj_count").desc, col("type_name")).limit(limit))
-
-  def categoryBreakdown: Option[DataFrame] = t.system("_object_index").map { oi =>
-    val cat = when(col("type_name").like("%kafka%") || col("type_name").like("%Kafka%"), "Kafka")
-      .when(col("type_name").like("%MBean%") || col("type_name").like("%javax.management%") ||
-        col("type_name").like("%jmx%"), "JMX/MBeans")
-      .when(col("type_name").like("%netty%") || col("type_name").like("%Netty%"), "Netty")
-      .when(col("type_name").like("%rocksdb%") || col("type_name").like("%RocksDB%"), "RocksDB")
-      .when(col("type_name").like("%grpc%") || col("type_name").like("%Grpc%"), "gRPC")
-      .when(col("type_name").like("%guava%") || col("type_name").like("%google.common%"), "Guava")
-      .when(col("type_name").like("java.%") || col("type_name").like("sun.%") ||
-        col("type_name").like("jdk.%"), "JDK")
-      .otherwise("Other")
-    oi.groupBy(cat.as("category")).agg(count(lit(1)).as("obj_count"))
-      .coalesce(1).orderBy(col("obj_count").desc)
+  /** A small result held on the driver: its rows in order and the
+    * schema of the DataFrame it stands for.
+    */
+  private final class Local(val schema: StructType, val rows: Seq[Row]) {
+    /** The rows as a local relation: reading it runs no Spark job. */
+    def frame: DataFrame = t.spark.createDataFrame(rows.asJava, schema)
   }
 
-  def byteArrayDistribution: Option[DataFrame] = t.system("_primitive_arrays_byte").map { b =>
+  /** `agg` collected unsorted and sorted on the driver by `ord`. */
+  private def sortedOnDriver(agg: DataFrame)(ord: Ordering[Row]): Local =
+    new Local(agg.schema, agg.collect().toSeq.sorted(ord))
+
+  // -- B1-B5: report queries ------------------------------------------
+
+  /** Object count per type name, one row per class (a null name is its
+    * own row, as in a GROUP BY), collected once per instance: driver
+    * state bounded by the class count, like the `_fields` and
+    * `_class_hierarchy` walks.
+    */
+  private lazy val census: Option[(StructField, Seq[(String, Long)])] =
+    t.system("_object_index").map { oi =>
+      (oi.schema("type_name"), oi.groupBy("type_name").agg(count(lit(1))).collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1))))
+    }
+
+  /** Census rows by count descending, then type name ascending. */
+  private val countThenName: Ordering[(String, Long)] =
+    Ordering.by((c: (String, Long)) => (-c._2, c._1))(Ordering.Tuple2(Ordering.Long, SparkStringOrder))
+
+  private def summaryLocal: Option[Local] = census.map { case (_, counts) =>
+    new Local(StructType(Seq(StructField("total_objects", LongType, nullable = false),
+        StructField("unique_classes", LongType, nullable = false))),
+      Seq(Row(counts.map(_._2).sum, counts.count(_._1 != null).toLong)))
+  }
+
+  def summary: Option[DataFrame] = summaryLocal.map(_.frame)
+
+  private def topTypesLocal(limit: Int): Option[Local] = census.map { case (f, counts) =>
+    new Local(StructType(Seq(f, StructField("obj_count", LongType, nullable = false))),
+      counts.sorted(countThenName).take(limit).map { case (n, c) => Row(n, c) })
+  }
+
+  def topTypes(limit: Int = 30): Option[DataFrame] = topTypesLocal(limit).map(_.frame)
+
+  /** Object counts per [[category]], largest first, ties by name. */
+  private def categoryBreakdownLocal: Option[Local] = census.map { case (_, counts) =>
+    new Local(StructType(Seq(StructField("category", StringType, nullable = false),
+        StructField("obj_count", LongType, nullable = false))),
+      counts.groupMapReduce(c => category(c._1))(_._2)(_ + _).toSeq.sorted(countThenName)
+        .map { case (c, n) => Row(c, n) })
+  }
+
+  def categoryBreakdown: Option[DataFrame] = categoryBreakdownLocal.map(_.frame)
+
+  private def byteArrayDistributionLocal: Option[Local] = t.system("_primitive_arrays_byte").map { b =>
     val n = size(col("values"))
     val bucket = when(n < 100, "0-99").when(n < 1000, "100-999")
       .when(n < 10000, "1K-10K").when(n < 100000, "10K-100K").otherwise("100K+")
-    b.groupBy(bucket.as("bucket"))
+    sortedOnDriver(b.groupBy(bucket.as("bucket"))
       .agg(count(lit(1)).as("count"),
-        round(sum(n) / 1048576.0, 2).as("total_mb"))
-      .coalesce(1).orderBy(col("total_mb").desc, col("bucket"))
+        round(sum(n) / 1048576.0, 2).as("total_mb")))(
+      Ordering.by((r: Row) => (-r.getDouble(2), r.getString(0)))(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, SparkStringOrder)))
   }
+
+  def byteArrayDistribution: Option[DataFrame] = byteArrayDistributionLocal.map(_.frame)
 
   def largeByteArrays(minBytes: Int = 102400, limit: Int = 20): Option[DataFrame] =
     t.system("_primitive_arrays_byte").map { b =>
@@ -253,14 +323,14 @@ final class HeapAnalysis(t: HeapTables) {
     * threshold (default 5M strings,
     * `spark.graft.heap.dupStringsSampleThreshold` for tests) the scan
     * is capped at 20% so a huge dump never pays the full join a naive
-    * caller didn't know to sample. The count is a parquet
-    * footer-metadata job — O(files), not O(rows).
+    * caller didn't know to sample. The count is summed from the
+    * parquet footers on the driver — O(files), not O(rows), no job.
     */
-  private def effectiveDupSamplePct(strs: DataFrame, samplePct: Double): Double = {
-    val threshold = strs.sparkSession.conf
+  private def effectiveDupSamplePct(samplePct: Double): Double = {
+    val threshold = t.spark.conf
       .getOption("spark.graft.heap.dupStringsSampleThreshold")
       .map(_.toLong).getOrElse(5000000L)
-    if (strs.count() > threshold) math.min(samplePct, 20.0) else samplePct
+    if (t.rowCount("java.lang.String").exists(_ > threshold)) math.min(samplePct, 20.0) else samplePct
   }
 
   /** B6 core with the sampling percent ACTUALLY applied (post
@@ -271,7 +341,7 @@ final class HeapAnalysis(t: HeapTables) {
       strs0 <- t.byClass("java.lang.String")
       bytes <- t.system("_primitive_arrays_byte")
     } yield {
-      val pct = effectiveDupSamplePct(strs0, samplePct)
+      val pct = effectiveDupSamplePct(samplePct)
       val strs = if (pct < 100) strs0.sample(pct / 100.0, 42L) else strs0
       val joined = strs.select(HeapTables.refField(strs, "value").as("byte_id"))
         .filter(col("byte_id") =!= 0)
@@ -348,7 +418,7 @@ final class HeapAnalysis(t: HeapTables) {
     * unioned first and aggregated in one exchange; each type's waste
     * constants ride along as grouping literals.
     */
-  def badCollectionStats: Option[DataFrame] = {
+  private def badCollectionStatsLocal: Option[Local] = {
     val dfs = collectionSpecs.flatMap { case (name, cls, sizeCol, kEmpty, kSingle) =>
       t.byClass(cls).filter(_.columns.contains(sizeCol)).map { df =>
         df.select(lit(name).as("coll_type"), lit(kEmpty).as("k_empty"),
@@ -356,18 +426,20 @@ final class HeapAnalysis(t: HeapTables) {
           .filter(col("n") === 0 || col("n") === 1)
       }
     }
-    if (dfs.isEmpty) None else Some(dfs.reduce(_ unionByName _)
+    if (dfs.isEmpty) None else Some(sortedOnDriver(dfs.reduce(_ unionByName _)
       .groupBy("coll_type", "k_empty", "k_single")
       .agg(count(when(col("n") === 0, 1)).as("empty_count"),
         count(when(col("n") === 1, 1)).as("single_count"))
       .select(col("coll_type"), col("empty_count"), col("single_count"),
-        (col("empty_count") * col("k_empty") + col("single_count") * col("k_single")).as("waste_bytes"))
-      .coalesce(1).orderBy("coll_type"))
+        (col("empty_count") * col("k_empty") + col("single_count") * col("k_single")).as("waste_bytes")))(
+      Ordering.by((r: Row) => r.getString(0))(SparkStringOrder)))
   }
 
+  def badCollectionStats: Option[DataFrame] = badCollectionStatsLocal.map(_.frame)
+
   def checkBadCollections(): Option[WasteFinding] =
-    badCollectionStats.flatMap { df =>
-      val found = df.collect().toSeq
+    badCollectionStatsLocal.flatMap { l =>
+      val found = l.rows
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       if (found.isEmpty) None else {
         val (empty, single, waste) = (found.map(_._2).sum, found.map(_._3).sum, found.map(_._4).sum)
@@ -384,25 +456,27 @@ final class HeapAnalysis(t: HeapTables) {
   /** B8 core: wasteful-object-array patterns (zero-length / all-null /
     * single-element / >70%-sparse) with counts and slot totals.
     */
-  def badObjectArrayPatterns: Option[DataFrame] = t.system("_object_arrays").map { oa =>
+  private def badObjectArrayPatternsLocal: Option[Local] = t.system("_object_arrays").map { oa =>
     val n = size(col("elements"))
     val nulls = size(filter(col("elements"), e => e === 0))
     val pattern = when(n === 0, "zero_length")
       .when(nulls === n, "all_null")
       .when(n === 1, "single_element")
       .when(n > 3 && nulls.cast("double") / n.cast("double") > 0.7, "sparse")
-    oa.select(pattern.as("pattern"), n.as("n"))
+    sortedOnDriver(oa.select(pattern.as("pattern"), n.as("n"))
       .filter(col("pattern").isNotNull)
       .groupBy("pattern")
-      .agg(count(lit(1)).as("n_arrays"), sum("n").cast("long").as("total_slots"))
-      .coalesce(1).orderBy("pattern")
+      .agg(count(lit(1)).as("n_arrays"), sum("n").cast("long").as("total_slots")))(
+      Ordering.by((r: Row) => r.getString(0))(SparkStringOrder))
   }
 
-  def checkBadObjectArrays(): Option[WasteFinding] = badObjectArrayPatterns.flatMap { df =>
-    val rows = df.collect()
+  def badObjectArrayPatterns: Option[DataFrame] = badObjectArrayPatternsLocal.map(_.frame)
+
+  def checkBadObjectArrays(): Option[WasteFinding] = badObjectArrayPatternsLocal.flatMap { l =>
+    val rows = l.rows
     if (rows.isEmpty) None else {
       var totalCount = 0L; var totalWaste = 0L
-      val sub = rows.toSeq.map { r =>
+      val sub = rows.map { r =>
         val (pat, cnt, slots) = (r.getString(0), r.getLong(1), r.getLong(2))
         totalCount += cnt
         val (waste, desc) = pat match {
@@ -428,36 +502,45 @@ final class HeapAnalysis(t: HeapTables) {
     * all-zero → data + header; single → header minus one element).
     * The patterned rows of all eight tables are unioned first and
     * aggregated in one exchange; the element size rides along as a
-    * grouping literal.
+    * grouping literal. A table whose footers count no rows adds no row
+    * to the aggregate, only a scan stage and its generated classes, so
+    * it is left out; one table stays when all are empty, and the result
+    * keeps its schema.
     */
-  def badPrimitiveArrayPatterns: Option[DataFrame] = {
+  private def badPrimitiveArrayPatternsLocal: Option[Local] = {
     val primTypes = Seq(("boolean", 1), ("byte", 1), ("char", 2), ("short", 2),
       ("int", 4), ("long", 8), ("float", 4), ("double", 8))
-    val dfs = primTypes.flatMap { case (pt, elemSize) =>
-      t.system(s"_primitive_arrays_$pt").map { df =>
-        val n = size(col("values"))
-        val allZero = if (pt == "boolean") !array_contains(col("values"), true)
-          else array_min(col("values")) === 0 && array_max(col("values")) === 0
-        val pattern = when(n === 0, "zero_length").when(n === 1, "single")
-          .when(n > 1 && allZero, "all_zero")
-        df.select(lit(pt).as("prim_type"), lit(elemSize.toLong).as("es"), pattern.as("pattern"),
-            (n * elemSize).cast("long").as("bytes"))
-          .filter(col("pattern").isNotNull)
-      }
+    val tables = primTypes.flatMap { case (pt, es) =>
+      val name = s"_primitive_arrays_$pt"
+      t.system(name).map(df => (pt, es, df, t.rowCount(name).exists(_ > 0)))
     }
-    if (dfs.isEmpty) None else Some(dfs.reduce(_ unionByName _)
+    val live = tables.filter(_._4)
+    val dfs = (if (live.isEmpty) tables.take(1) else live).map { case (pt, elemSize, df, _) =>
+      val n = size(col("values"))
+      val allZero = if (pt == "boolean") !array_contains(col("values"), true)
+        else array_min(col("values")) === 0 && array_max(col("values")) === 0
+      val pattern = when(n === 0, "zero_length").when(n === 1, "single")
+        .when(n > 1 && allZero, "all_zero")
+      df.select(lit(pt).as("prim_type"), lit(elemSize.toLong).as("es"), pattern.as("pattern"),
+          (n * elemSize).cast("long").as("bytes"))
+        .filter(col("pattern").isNotNull)
+    }
+    if (dfs.isEmpty) None else Some(sortedOnDriver(dfs.reduce(_ unionByName _)
       .groupBy("prim_type", "es", "pattern")
       .agg(count(lit(1)).as("n_arrays"), sum("bytes").as("data_bytes"))
       .select(col("prim_type"), col("pattern"), col("n_arrays"), col("data_bytes"),
         when(col("pattern") === "zero_length", col("n_arrays") * ArrayHeader)
           .when(col("pattern") === "all_zero", col("data_bytes") + col("n_arrays") * ArrayHeader)
-          .otherwise(col("n_arrays") * (lit(ArrayHeader) - col("es"))).as("waste_bytes"))
-      .coalesce(1).orderBy("prim_type", "pattern"))
+          .otherwise(col("n_arrays") * (lit(ArrayHeader) - col("es"))).as("waste_bytes")))(
+      Ordering.by((r: Row) => (r.getString(0), r.getString(1)))(
+        Ordering.Tuple2(SparkStringOrder, SparkStringOrder))))
   }
 
+  def badPrimitiveArrayPatterns: Option[DataFrame] = badPrimitiveArrayPatternsLocal.map(_.frame)
+
   def checkBadPrimitiveArrays(): Option[WasteFinding] =
-    badPrimitiveArrayPatterns.flatMap { df =>
-      val perType = df.collect().toSeq
+    badPrimitiveArrayPatternsLocal.flatMap { l =>
+      val perType = l.rows
         .groupBy(_.getString(0)).toSeq.sortBy(_._1)
         .map { case (pt, rows) =>
           (pt, rows.map(_.getLong(2)).sum, rows.map(_.getLong(4)).sum)
@@ -474,20 +557,24 @@ final class HeapAnalysis(t: HeapTables) {
 
   // -- B10: boxed primitives ------------------------------------------
 
-  /** B10 core: per-wrapper instance counts + header overhead, one
-    * exchange over the union of the wrapper tables.
+  /** B10 core: per-wrapper instance counts + header overhead, from
+    * the wrapper tables' footer row counts; a wrapper without
+    * instances has no row.
     */
-  def boxedCounts: Option[DataFrame] = {
-    val wrappers = Seq("Boolean", "Byte", "Character", "Double", "Float", "Integer", "Long", "Short")
-    val dfs = wrappers.flatMap(w => t.byClass(s"java.lang.$w").map(_.select(lit(w).as("wrapper"))))
-    if (dfs.isEmpty) None else Some(dfs.reduce(_ unionByName _)
-      .groupBy("wrapper").agg(count(lit(1)).as("n_objs"))
-      .select(col("wrapper"), col("n_objs"), (col("n_objs") * ObjectHeader).as("waste_bytes"))
-      .coalesce(1).orderBy("wrapper"))
+  private def boxedCountsLocal: Option[Local] = {
+    val counts = Seq("Boolean", "Byte", "Character", "Double", "Float", "Integer", "Long", "Short")
+      .flatMap(w => t.rowCount(s"java.lang.$w").map(w -> _))
+    if (counts.isEmpty) None else Some(new Local(
+      StructType(Seq(StructField("wrapper", StringType, nullable = false),
+        StructField("n_objs", LongType, nullable = false),
+        StructField("waste_bytes", LongType, nullable = false))),
+      counts.collect { case (w, n) if n > 0 => Row(w, n, n * ObjectHeader) }))
   }
 
+  def boxedCounts: Option[DataFrame] = boxedCountsLocal.map(_.frame)
+
   def checkBoxedNumbers(): Option[WasteFinding] = {
-    val perType = boxedCounts.toSeq.flatMap(_.collect().toSeq)
+    val perType = boxedCountsLocal.toSeq.flatMap(_.rows)
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     if (perType.isEmpty) None else {
       val (cnt, waste) = (perType.map(_._2).sum, perType.map(_._3).sum)
@@ -577,9 +664,11 @@ final class HeapAnalysis(t: HeapTables) {
 
   // -- B13: class count -----------------------------------------------
 
-  /** B13 core: distinct loaded-class count. */
-  def classCountStats: Option[DataFrame] = t.system("_object_index").map(
-    _.agg(countDistinct(col("type_name")).as("n_classes")))
+  /** B13 core: distinct loaded-class count (non-null type names). */
+  private def classCount: Option[Long] = census.map(_._2.count(_._1 != null).toLong)
+
+  def classCountStats: Option[DataFrame] = classCount.map(n =>
+    new Local(StructType(Seq(StructField("n_classes", LongType, nullable = false))), Seq(Row(n))).frame)
 
   /** B26 core: duplicate-class / classloader census — the classic
     * metaspace-leak signature B13's flat count can only hint at: the
@@ -617,8 +706,7 @@ final class HeapAnalysis(t: HeapTables) {
     }
   }
 
-  def checkClassCount(): Option[WasteFinding] = classCountStats.flatMap { df =>
-    val cnt = df.collect()(0).getLong(0)
+  def checkClassCount(): Option[WasteFinding] = classCount.flatMap { cnt =>
     if (cnt < 10000) None else {
       val severity = if (cnt > 50000) "HIGH" else if (cnt > 20000) "MEDIUM" else "INFO"
       Some(WasteFinding("Class Count / Leak Detection", 2, severity, cnt, cnt * 8192L,
@@ -1579,13 +1667,16 @@ final class HeapAnalysis(t: HeapTables) {
   /** B18 core: top-N types by instance count with the flat-estimate
     * shallow bytes (avg ObjectHeader+32 per object).
     */
-  def shallowSizeTop(limit: Int = 50): Option[DataFrame] = t.system("_object_index").map(
-    _.groupBy("type_name").agg(count(lit(1)).as("n_objs"))
-      .orderBy(col("n_objs").desc, col("type_name")).limit(limit)
-      .withColumn("est_bytes", col("n_objs") * (ObjectHeader + 32)))
+  private def shallowSizeTopLocal(limit: Int): Option[Local] = census.map { case (f, counts) =>
+    new Local(StructType(Seq(f, StructField("n_objs", LongType, nullable = false),
+        StructField("est_bytes", LongType, nullable = false))),
+      counts.sorted(countThenName).take(limit).map { case (n, c) => Row(n, c, c * (ObjectHeader + 32)) })
+  }
 
-  def checkEstimatedShallowSize(): Option[WasteFinding] = shallowSizeTop(50).flatMap { df =>
-    val rows = df.collect()
+  def shallowSizeTop(limit: Int = 50): Option[DataFrame] = shallowSizeTopLocal(limit).map(_.frame)
+
+  def checkEstimatedShallowSize(): Option[WasteFinding] = shallowSizeTopLocal(50).flatMap { l =>
+    val rows = l.rows
     if (rows.isEmpty) None else {
       val avgObj = ObjectHeader + 32
       val total = rows.map(_.getLong(1)).sum
@@ -1593,7 +1684,7 @@ final class HeapAnalysis(t: HeapTables) {
       Some(WasteFinding("Estimated Shallow Size (top 50 types)", 3, "INFO", total, 0L,
         s"Top 50 types estimated at ~${formatBytes(est)} (assuming avg ${avgObj}B per object)",
         "Use -XX:+PrintClassHistogram for exact shallow sizes. This is an approximation.",
-        rows.toSeq.take(15).map(r => s"  ${r.getString(0)}: ${r.getLong(1)} (~${formatBytes(r.getLong(2))})")))
+        rows.take(15).map(r => s"  ${r.getString(0)}: ${r.getLong(1)} (~${formatBytes(r.getLong(2))})")))
     }
   }
 
@@ -1679,10 +1770,12 @@ final class HeapAnalysis(t: HeapTables) {
     import graft.Json.{arr => jArr, obj => jObj, rowJson, rowsJson, str => jStr}
     def dfRows(dfOpt: Option[DataFrame]): String =
       dfOpt.fold("[]")(df => rowsJson(df.columns.toSeq, df.collect().toSeq))
+    def localRows(l: Option[Local]): String =
+      l.fold("[]")(l => rowsJson(l.schema.fieldNames.toSeq, l.rows))
     // reference shape (server.py analyze_heap): summary is ONE object,
     // not a row array, next to session/dir metadata
-    def dfRow(dfOpt: Option[DataFrame]): String =
-      dfOpt.flatMap(df => df.collect().headOption.map(rowJson(df.columns.toSeq, _))).getOrElse("null")
+    def localRow(l: Option[Local]): String =
+      l.flatMap(l => l.rows.headOption.map(rowJson(l.schema.fieldNames.toSeq, _))).getOrElse("null")
     // independent sections run concurrently, as in runWasteAnalysis:
     // each is a few small driver-blocking jobs, so a small pool
     // overlaps their waits. Names are assembled in declaration order,
@@ -1695,10 +1788,10 @@ final class HeapAnalysis(t: HeapTables) {
         "session_id" -> Future.successful(
           if (sessionId.nonEmpty) jStr(sessionId) else "null"),
         "parquet_dir" -> Future.successful(jStr(t.dir)),
-        "summary" -> Future(dfRow(summary)),
-        "top_types" -> Future(dfRows(topTypes(topN))),
-        "categories" -> Future(dfRows(categoryBreakdown)),
-        "byte_array_distribution" -> Future(dfRows(byteArrayDistribution)),
+        "summary" -> Future(localRow(summaryLocal)),
+        "top_types" -> Future(localRows(topTypesLocal(topN))),
+        "categories" -> Future(localRows(categoryBreakdownLocal)),
+        "byte_array_distribution" -> Future(localRows(byteArrayDistributionLocal)),
         "large_byte_arrays" -> Future(dfRows(largeByteArrays())))
       if (!waste) await(base) else {
         // the waste suite runs on ITS OWN pool inside runWasteAnalysis,
@@ -1783,6 +1876,26 @@ object HeapAnalysis {
   val ChmShell = 64L
   val ChmNode = 32L
   val StringObjOverhead = 40L
+
+  /** Spark's ascending order of strings: UTF-8 bytes, nulls first. */
+  private[heap] val SparkStringOrder: Ordering[String] = (a, b) =>
+    if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
+    else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** The report's category of a type name, by the first matching
+    * substring or prefix; a null name is "Other".
+    */
+  private[heap] def category(typeName: String): String = {
+    def has(subs: String*) = typeName != null && subs.exists(typeName.contains)
+    if (has("kafka", "Kafka")) "Kafka"
+    else if (has("MBean", "javax.management", "jmx")) "JMX/MBeans"
+    else if (has("netty", "Netty")) "Netty"
+    else if (has("rocksdb", "RocksDB")) "RocksDB"
+    else if (has("grpc", "Grpc")) "gRPC"
+    else if (has("guava", "google.common")) "Guava"
+    else if (typeName != null && Seq("java.", "sun.", "jdk.").exists(typeName.startsWith)) "JDK"
+    else "Other"
+  }
 
   def classifySeverity(wasteBytes: Long): String =
     if (wasteBytes > 100L * 1024 * 1024) "CRITICAL"

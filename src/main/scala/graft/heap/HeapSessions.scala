@@ -54,9 +54,7 @@ final class HeapSessions(spark: SparkSession) {
     dropBareViews() // a previous owner's tables must not survive the switch
     val heap = new HeapTables(spark, parquetDir)
     val views = HeapSql.register(heap)
-    views.keys.foreach { v =>
-      spark.table(v).createOrReplaceTempView(s"${id}__$v")
-    }
+    HeapSql.register(heap, s"${id}__")
     val sess = Session(id, parquetDir, views.keys.toSeq.sorted)
     sessions(id) = new Opened(sess, heap)
     HeapSessions.bareOwners(spark) = (id, sess.tables)

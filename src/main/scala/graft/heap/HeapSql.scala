@@ -19,14 +19,15 @@ object HeapSql {
     register(new HeapTables(spark, dir))
 
   /** Register every table of `t` as a view over the DataFrame `t`
-    * resolves it to; returns view-name → table-dir. Class tables with
-    * multiple loader copies union under one view (comma-joined dirs).
+    * resolves it to, named `prefix` + the table's view name; returns
+    * registered name → table-dir. Class tables with multiple loader
+    * copies union under one view (comma-joined dirs).
     */
-  def register(t: HeapTables): Map[String, String] = {
+  def register(t: HeapTables, prefix: String = ""): Map[String, String] = {
     val views = t.systemNames.map(d => (d, d, t.system(d))) ++
       t.classCopies.map { case (cls, copies) => (cls, copies.mkString(","), t.byClass(cls)) }
     views.map { case (table, dirs, df) =>
-      val v = viewName(table)
+      val v = prefix + viewName(table)
       df.get.createOrReplaceTempView(v)
       v -> dirs
     }.toMap

@@ -72,9 +72,10 @@ object Graph {
     // superlinear for a large-iters caller (r16 verdict #4). A no-op
     // below the threshold: the gates' plans are byte-identical.
     var r = nodes.select(col("v"), lit(init).as("r"))
+    var lastCut = Option.empty[DataFrame]
     for (i <- 1 to iters) {
       r = iterate(nodes, withDeg, r, base, d100)
-      if (i % checkpointEvery == 0 && i < iters) r = r.localCheckpoint()
+      if (i % checkpointEvery == 0 && i < iters) { r = cutLineage(r, lastCut); lastCut = Some(r) }
     }
     r.select(col("v").as("node"), col("r").as("rank_ppt"))
   }
@@ -636,6 +637,7 @@ object Graph {
     val isSeed = col("v").isin(seeds: _*)
     var r = nodes.select(col("v"),
       when(isSeed, init).otherwise(0L).cast("long").as("r"))
+    var lastCut = Option.empty[DataFrame]
     for (i <- 1 to iters) {
       val contrib = withDeg.join(r, withDeg("src") === r("v"))
         .select(col("dst").as("v"), expr("r div outdeg").as("c"))
@@ -645,7 +647,7 @@ object Graph {
           (when(isSeed, seedBase).otherwise(0L).cast("long") +
             expr(s"($d100 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
       // lineage-depth guard, same as pageRank (no-op at the gates' iters)
-      if (i % checkpointEvery == 0 && i < iters) r = r.localCheckpoint()
+      if (i % checkpointEvery == 0 && i < iters) { r = cutLineage(r, lastCut); lastCut = Some(r) }
     }
     r.select(col("v").as("node"), col("r").as("rank_ppt"))
   }
@@ -656,4 +658,18 @@ object Graph {
     * caller's plan depth at a constant.
     */
   private[graft] val checkpointEvery = 8
+
+  /** `r` checkpointed locally, with the rank loop's previous cut `prev`
+    * unpersisted. The checkpoint is eager, so the new cut no longer
+    * reads `prev`; left alone, every cut would stay cached until the
+    * ContextCleaner collects it.
+    */
+  private def cutLineage(r: DataFrame, prev: Option[DataFrame]): DataFrame = {
+    val cut = r.localCheckpoint()
+    prev.map(_.queryExecution.logical).foreach {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+    cut
+  }
 }

@@ -429,4 +429,24 @@ class GraphSpec extends AnyFunSuite {
         driverRanks(edges, Seq(1L, 4L), iters), s"parts=$parts")
     }
   }
+
+  test("pageRank and personalizedPageRank keep at most one lineage cut cached") {
+    val iters = 2 * Graph.checkpointEvery + 1 // cuts after two rounds
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L),
+      (2L, 5L), (5L, 6L), (7L, 1L), (1L, 2L))
+    val sc = spark.sparkContext
+    def ranks(d: org.apache.spark.sql.DataFrame) = d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for ((run, seeds) <- Seq[(org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame, Seq[Long])](
+        (Graph.pageRank(_, iters), Nil),
+        (Graph.personalizedPageRank(_, Seq(1L, 4L), iters), Seq(1L, 4L)))) {
+      val df = edges.toDF("src", "dst").repartition(2)
+      val before = sc.getPersistentRDDs.keySet
+      val out = run(df)
+      // the edges, the degree join and the node set are checkpointed
+      // inputs; of the two rank cuts, the first is freed by the second
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size <= 3 + 1, added)
+      assert(ranks(out) === driverRanks(edges, seeds, iters))
+    }
+  }
 }

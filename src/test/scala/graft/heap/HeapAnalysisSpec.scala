@@ -2,6 +2,7 @@ package graft.heap
 
 import graft.SparkTestSession
 import HprofModel._
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The 13-check waste suite against a synthetic heap with hand-
@@ -11,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class HeapAnalysisSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private lazy val fixtures: (HeapAnalysis, HeapAnalysis, String) = {
+  private lazy val fixtures: (HeapAnalysis, HeapAnalysis, String, String) = {
     val w = new HprofWriter()
     val objectCls = w.defineClass("java.lang.Object")
     val stringCls = w.defineClass("java.lang.String", objectCls,
@@ -91,12 +92,13 @@ class HeapAnalysisSpec extends AnyFunSuite {
     hd.writeParquet(resolvedDir, resolveRefs = true)
     (new HeapAnalysis(new HeapTables(spark, outDir)),
       new HeapAnalysis(new HeapTables(spark, resolvedDir)),
-      resolvedDir)
+      resolvedDir, outDir)
   }
 
   private lazy val analysis: HeapAnalysis = fixtures._1
   private lazy val resolvedAnalysis: HeapAnalysis = fixtures._2
   private lazy val resolvedDir: String = fixtures._3
+  private lazy val roboDir: String = fixtures._4
 
   test("summary and top types") {
     val s = analysis.summary.get.collect()(0)
@@ -741,5 +743,197 @@ class HeapAnalysisSpec extends AnyFunSuite {
     val deadline = System.nanoTime() + 30L * 1000000000L
     while (running.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
     assert(running.isEmpty, s"jobs still running after the failure: $running")
+  }
+
+  /** The ten driver-finished results as the Spark expressions that
+    * computed them before the census, footer counts and driver sorts.
+    * The category breakdown gains `category` as a tie-break: the old
+    * expression sorted on the count alone and left ties in plan order.
+    */
+  private def sparkFrames(t: HeapTables): Seq[(String, Option[DataFrame])] = {
+    import org.apache.spark.sql.functions._
+    import HeapAnalysis._
+    val oi = t.system("_object_index")
+    val cat = when(col("type_name").like("%kafka%") || col("type_name").like("%Kafka%"), "Kafka")
+      .when(col("type_name").like("%MBean%") || col("type_name").like("%javax.management%") ||
+        col("type_name").like("%jmx%"), "JMX/MBeans")
+      .when(col("type_name").like("%netty%") || col("type_name").like("%Netty%"), "Netty")
+      .when(col("type_name").like("%rocksdb%") || col("type_name").like("%RocksDB%"), "RocksDB")
+      .when(col("type_name").like("%grpc%") || col("type_name").like("%Grpc%"), "gRPC")
+      .when(col("type_name").like("%guava%") || col("type_name").like("%google.common%"), "Guava")
+      .when(col("type_name").like("java.%") || col("type_name").like("sun.%") ||
+        col("type_name").like("jdk.%"), "JDK")
+      .otherwise("Other")
+    def top(limit: Int) = oi.map(_.groupBy("type_name").agg(count(lit(1)).as("obj_count"))
+      .orderBy(col("obj_count").desc, col("type_name")).limit(limit))
+    val byteBuckets = t.system("_primitive_arrays_byte").map { b =>
+      val n = size(col("values"))
+      val bucket = when(n < 100, "0-99").when(n < 1000, "100-999")
+        .when(n < 10000, "1K-10K").when(n < 100000, "10K-100K").otherwise("100K+")
+      b.groupBy(bucket.as("bucket"))
+        .agg(count(lit(1)).as("count"), round(sum(n) / 1048576.0, 2).as("total_mb"))
+        .coalesce(1).orderBy(col("total_mb").desc, col("bucket"))
+    }
+    val collections = Seq(
+      ("ArrayList", "java.util.ArrayList", "size", ArrayListShell + ArrayHeader + 10 * RefSize,
+        ArrayListShell + ArrayHeader + 10 * RefSize - RefSize),
+      ("ConcurrentHashMap", "java.util.concurrent.ConcurrentHashMap", "baseCount",
+        ChmShell + ArrayHeader + 16 * RefSize, ChmShell + ArrayHeader + 16 * RefSize + ChmNode - 2 * RefSize),
+      ("HashMap", "java.util.HashMap", "size", HashMapShell + ArrayHeader + 16 * RefSize,
+        HashMapShell + ArrayHeader + 16 * RefSize + HashMapEntry - 2 * RefSize),
+      ("LinkedList", "java.util.LinkedList", "size", LinkedListShell,
+        LinkedListShell + LinkedListNode - RefSize),
+      ("TreeMap", "java.util.TreeMap", "size", 64L, 64L + TreeMapEntry - 2 * RefSize))
+      .flatMap { case (name, cls, sizeCol, kEmpty, kSingle) =>
+        t.byClass(cls).filter(_.columns.contains(sizeCol)).map { df =>
+          df.select(lit(name).as("coll_type"), lit(kEmpty).as("k_empty"),
+              lit(kSingle).as("k_single"), col(sizeCol).cast("long").as("n"))
+            .filter(col("n") === 0 || col("n") === 1)
+        }
+      }
+    val badCollections = collections.reduceOption(_ unionByName _).map(_
+      .groupBy("coll_type", "k_empty", "k_single")
+      .agg(count(when(col("n") === 0, 1)).as("empty_count"),
+        count(when(col("n") === 1, 1)).as("single_count"))
+      .select(col("coll_type"), col("empty_count"), col("single_count"),
+        (col("empty_count") * col("k_empty") + col("single_count") * col("k_single")).as("waste_bytes"))
+      .coalesce(1).orderBy("coll_type"))
+    val objectArrays = t.system("_object_arrays").map { oa =>
+      val n = size(col("elements"))
+      val nulls = size(filter(col("elements"), e => e === 0))
+      val pattern = when(n === 0, "zero_length").when(nulls === n, "all_null")
+        .when(n === 1, "single_element")
+        .when(n > 3 && nulls.cast("double") / n.cast("double") > 0.7, "sparse")
+      oa.select(pattern.as("pattern"), n.as("n")).filter(col("pattern").isNotNull)
+        .groupBy("pattern")
+        .agg(count(lit(1)).as("n_arrays"), sum("n").cast("long").as("total_slots"))
+        .coalesce(1).orderBy("pattern")
+    }
+    val prims = Seq(("boolean", 1), ("byte", 1), ("char", 2), ("short", 2),
+      ("int", 4), ("long", 8), ("float", 4), ("double", 8)).flatMap { case (pt, elemSize) =>
+      t.system(s"_primitive_arrays_$pt").map { df =>
+        val n = size(col("values"))
+        val allZero = if (pt == "boolean") !array_contains(col("values"), true)
+          else array_min(col("values")) === 0 && array_max(col("values")) === 0
+        val pattern = when(n === 0, "zero_length").when(n === 1, "single")
+          .when(n > 1 && allZero, "all_zero")
+        df.select(lit(pt).as("prim_type"), lit(elemSize.toLong).as("es"), pattern.as("pattern"),
+            (n * elemSize).cast("long").as("bytes"))
+          .filter(col("pattern").isNotNull)
+      }
+    }
+    val primPatterns = prims.reduceOption(_ unionByName _).map(_
+      .groupBy("prim_type", "es", "pattern")
+      .agg(count(lit(1)).as("n_arrays"), sum("bytes").as("data_bytes"))
+      .select(col("prim_type"), col("pattern"), col("n_arrays"), col("data_bytes"),
+        when(col("pattern") === "zero_length", col("n_arrays") * ArrayHeader)
+          .when(col("pattern") === "all_zero", col("data_bytes") + col("n_arrays") * ArrayHeader)
+          .otherwise(col("n_arrays") * (lit(ArrayHeader) - col("es"))).as("waste_bytes"))
+      .coalesce(1).orderBy("prim_type", "pattern"))
+    val boxed = Seq("Boolean", "Byte", "Character", "Double", "Float", "Integer", "Long", "Short")
+      .flatMap(w => t.byClass(s"java.lang.$w").map(_.select(lit(w).as("wrapper"))))
+      .reduceOption(_ unionByName _).map(_
+        .groupBy("wrapper").agg(count(lit(1)).as("n_objs"))
+        .select(col("wrapper"), col("n_objs"), (col("n_objs") * ObjectHeader).as("waste_bytes"))
+        .coalesce(1).orderBy("wrapper"))
+    Seq(
+      "summary" -> oi.map(_.agg(count(lit(1)).as("total_objects"),
+        countDistinct(col("type_name")).as("unique_classes"))),
+      "topTypes" -> top(30),
+      "topTypes(3)" -> top(3),
+      "categoryBreakdown" -> oi.map(_.groupBy(cat.as("category")).agg(count(lit(1)).as("obj_count"))
+        .coalesce(1).orderBy(col("obj_count").desc, col("category"))),
+      "classCountStats" -> oi.map(_.agg(countDistinct(col("type_name")).as("n_classes"))),
+      "shallowSizeTop" -> oi.map(_.groupBy("type_name").agg(count(lit(1)).as("n_objs"))
+        .orderBy(col("n_objs").desc, col("type_name")).limit(50)
+        .withColumn("est_bytes", col("n_objs") * (ObjectHeader + 32))),
+      "byteArrayDistribution" -> byteBuckets,
+      "badCollectionStats" -> badCollections,
+      "badObjectArrayPatterns" -> objectArrays,
+      "badPrimitiveArrayPatterns" -> primPatterns,
+      "boxedCounts" -> boxed)
+  }
+
+  private def driverFrames(an: HeapAnalysis): Seq[(String, Option[DataFrame])] = Seq(
+    "summary" -> an.summary, "topTypes" -> an.topTypes(), "topTypes(3)" -> an.topTypes(3),
+    "categoryBreakdown" -> an.categoryBreakdown, "classCountStats" -> an.classCountStats,
+    "shallowSizeTop" -> an.shallowSizeTop(), "byteArrayDistribution" -> an.byteArrayDistribution,
+    "badCollectionStats" -> an.badCollectionStats, "badObjectArrayPatterns" -> an.badObjectArrayPatterns,
+    "badPrimitiveArrayPatterns" -> an.badPrimitiveArrayPatterns, "boxedCounts" -> an.boxedCounts)
+
+  private def assertSparkParity(dir: String): Unit = {
+    val t = new HeapTables(spark, dir)
+    driverFrames(new HeapAnalysis(t)).zip(sparkFrames(t)).foreach { case ((name, got), (_, want)) =>
+      assert(got.isDefined === want.isDefined, s"$name in $dir")
+      for (g <- got; w <- want) {
+        assert(g.schema === w.schema, s"$name in $dir")
+        assert(g.collect().toSeq === w.collect().toSeq, s"$name in $dir")
+      }
+    }
+  }
+
+  test("driver-finished results equal their Spark expressions: schema, rows and order") {
+    // two loaders' copies of ArrayList and Integer; two type names tied
+    // on count whose UTF-8 order (Spark's) and UTF-16 order (Java's)
+    // differ; a non-ASCII category match; byte arrays in two buckets
+    // that both round to 0.0 MB
+    val w = new HprofWriter()
+    val obj = w.defineClass("java.lang.Object")
+    val loader = w.instance(w.defineClass("java.net.URLClassLoader", obj), Nil)
+    val alBoot = w.defineClass("java.util.ArrayList", obj,
+      instanceFields = Seq("size" -> BasicType.Int, "elementData" -> BasicType.Object))
+    val alApp = w.defineClass("java.util.ArrayList", obj,
+      instanceFields = Seq("size" -> BasicType.Int), loaderId = loader)
+    val intBoot = w.defineClass("java.lang.Integer", obj, instanceFields = Seq("value" -> BasicType.Int))
+    val intApp = w.defineClass("java.lang.Integer", obj, loaderId = loader)
+    val hm = w.defineClass("java.util.HashMap", obj,
+      instanceFields = Seq("size" -> BasicType.Int, "table" -> BasicType.Object))
+    val arr = w.defineClass("[Ljava.lang.Object;", obj)
+    w.instance(alBoot, Seq(BasicType.Int -> 1, BasicType.Object -> 0L))
+    w.instance(alApp, Seq(BasicType.Int -> 0))
+    w.instance(alApp, Seq(BasicType.Int -> 5))
+    w.instance(intBoot, Seq(BasicType.Int -> 7))
+    w.instance(intApp, Nil)
+    w.instance(hm, Seq(BasicType.Int -> 0, BasicType.Object -> 0L))
+    // arrays, not instances: an instance class is a table directory,
+    // and a non-ASCII file name needs a UTF-8 file-name encoding
+    Seq("com.acme.x\uFF21", "com.acme.x\uD83D\uDE00", "org.kafka.Gr\u00F6\u00DFe").foreach { n =>
+      val c = w.defineClass(s"[L$n;", obj)
+      (1 to 3).foreach(_ => w.objArray(c, Seq(0L)))
+    }
+    w.byteArray("hi")
+    w.primArray(BasicType.Byte, Seq.fill(500)(1.toByte))
+    w.primArray(BasicType.Int, Seq.empty)
+    w.primArray(BasicType.Long, Seq(0L))
+    w.primArray(BasicType.Boolean, Seq(false, false, false))
+    w.objArray(arr, Seq.empty)
+    w.objArray(arr, Seq(0L, 0L))
+    val dir = java.nio.file.Files.createTempDirectory("heapan_parity")
+    val hp = dir.resolve("h.hprof").toString
+    w.writeTo(hp)
+    val dumps = Seq(false, true).map { resolve =>
+      val out = dir.resolve(s"pq_$resolve").toString
+      new HeapDump(spark, hp).writeParquet(out, resolveRefs = resolve)
+      out
+    }
+    val tied = new HeapAnalysis(new HeapTables(spark, dumps.head)).topTypes().get.collect()
+      .map(_.getString(0)).filter(_.startsWith("com.acme.x")).toSeq
+    assert(tied === Seq("com.acme.x\uFF21[]", "com.acme.x\uD83D\uDE00[]"))
+    assert(new HeapTables(spark, dumps.head).classCopies("java.lang.Integer").size === 2)
+
+    // a dump without arrays: all eight primitive-array tables are empty
+    val noArrays = new HprofWriter()
+    val box = noArrays.defineClass("java.lang.Integer", noArrays.defineClass("java.lang.Object"),
+      instanceFields = Seq("value" -> BasicType.Int))
+    (1 to 3).foreach(i => noArrays.instance(box, Seq(BasicType.Int -> i)))
+    val noArraysDir = exportOf(noArrays, "heapan_noarrays")
+    assert(new HeapTables(spark, noArraysDir).rowCount("_primitive_arrays_int") === Some(0L))
+
+    // an export whose _object_index has a schema and no rows
+    val empty = dir.resolve("pq_empty").toString
+    new HeapTables(spark, roboDir).system("_object_index").get.limit(0)
+      .write.parquet(s"$empty/_object_index")
+
+    (Seq(roboDir, resolvedDir) ++ dumps ++ Seq(noArraysDir, empty)).foreach(assertSparkParity)
   }
 }

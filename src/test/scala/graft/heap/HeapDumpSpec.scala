@@ -416,4 +416,46 @@ class HeapDumpSpec extends AnyFunSuite {
     oneEach.keys.foreach(t => assert(rows(small, t) === rows(spread, t), t))
     assert(rows(small, "_object_index") === rows(roboDir, "_object_index"))
   }
+
+  test("rowCount equals count() for every table and class, loader copies and several files included") {
+    def assertCounts(dir: String): Unit = {
+      val t = new HeapTables(spark, dir)
+      t.systemNames.foreach(n => assert(t.rowCount(n) === Some(t.system(n).get.count()), s"$n in $dir"))
+      t.classCopies.keys.foreach(c => assert(t.rowCount(c) === Some(t.byClass(c).get.count()), s"$c in $dir"))
+      assert(t.rowCount("no.such.Class") === None)
+    }
+    assertCounts(roboDir)
+    assertCounts(resolvedDir)
+    // the fixture over one segment per core, exported with a lowered
+    // open cost: every scanned system table is several files
+    val cores = spark.sparkContext.defaultParallelism
+    val path = java.nio.file.Files.createTempDirectory("heap_rows").resolve("t.hprof").toString
+    val w = new HprofWriter()
+    // and a class defined by two loaders
+    val obj = new Fixture(w).objectCls
+    val loader = w.instance(w.defineClass("java.net.URLClassLoader", obj), Nil)
+    val boot = w.defineClass("java.util.ArrayList", obj, instanceFields = Seq("size" -> BasicType.Int))
+    val app = w.defineClass("java.util.ArrayList", obj, instanceFields = Seq("size" -> BasicType.Int),
+      loaderId = loader)
+    Seq(boot, app, app).foreach(c => w.instance(c, Seq(BasicType.Int -> 0)))
+    w.writeTo(path, segments = cores)
+    val key = "spark.sql.files.openCostInBytes"
+    val before = spark.conf.getOption(key)
+    val outs = try {
+      spark.conf.set(key, "1")
+      Seq(false, true).map { resolve =>
+        val out = java.nio.file.Files.createTempDirectory("heap_rows_pq").toString
+        new HeapDump(spark, path).writeParquet(out, resolveRefs = resolve)
+        out
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    outs.foreach { out =>
+      val t = new HeapTables(spark, out)
+      assert(t.classCopies("java.util.ArrayList").size === 2)
+      assert(t.rowCount("java.util.ArrayList") === Some(3L))
+      assert(t.systemNames.exists(n =>
+        new java.io.File(out, n).listFiles().count(_.getName.endsWith(".parquet")) > 1), out)
+      assertCounts(out)
+    }
+  }
 }

@@ -29,6 +29,42 @@ class HeapSessionsSpec extends AnyFunSuite {
     out
   }
 
+  /** A dump with a finding for every tier-1 check, exported to a fresh
+    * directory: duplicate strings, empty and single-element
+    * collections, wasteful object and byte arrays, boxed numbers.
+    */
+  private def wasteExport(tag: String): String = {
+    val w = new HprofWriter()
+    val obj = w.defineClass("java.lang.Object")
+    val str = w.defineClass("java.lang.String", obj,
+      instanceFields = Seq("value" -> BasicType.Object, "hash" -> BasicType.Int))
+    val al = w.defineClass("java.util.ArrayList", obj,
+      instanceFields = Seq("size" -> BasicType.Int, "elementData" -> BasicType.Object))
+    val hm = w.defineClass("java.util.HashMap", obj,
+      instanceFields = Seq("size" -> BasicType.Int, "table" -> BasicType.Object))
+    val int = w.defineClass("java.lang.Integer", obj, instanceFields = Seq("value" -> BasicType.Int))
+    val long = w.defineClass("java.lang.Long", obj, instanceFields = Seq("value" -> BasicType.Long))
+    val arr = w.defineClass("[Ljava.lang.Object;", obj)
+    Seq("hello", "hello", "world").foreach(t => w.instance(str, Seq(BasicType.Object -> w.byteArray(t), BasicType.Int -> 0)))
+    // byte[] only: every other primitive-array table is empty
+    w.primArray(BasicType.Byte, Seq.fill(2000)(1.toByte))
+    w.primArray(BasicType.Byte, Seq.empty)
+    w.primArray(BasicType.Byte, Seq(0.toByte, 0.toByte, 0.toByte))
+    Seq(0, 1, 3).foreach(n => w.instance(al, Seq(BasicType.Int -> n, BasicType.Object -> 0L)))
+    Seq(0, 1).foreach(n => w.instance(hm, Seq(BasicType.Int -> n, BasicType.Object -> 0L)))
+    (1 to 3).foreach(i => w.instance(int, Seq(BasicType.Int -> i)))
+    w.instance(long, Seq(BasicType.Long -> 9L))
+    w.objArray(arr, Seq.empty)
+    w.objArray(arr, Seq(0L, 0L))
+    w.objArray(arr, Seq(0L, 0L, 0L, 0L, 0L, 7L))
+    val dir = java.nio.file.Files.createTempDirectory(s"sess_$tag")
+    val hp = dir.resolve("waste.hprof").toString
+    w.writeTo(hp)
+    val out = dir.resolve("pq").toString
+    new HeapDump(spark, hp).writeParquet(out)
+    out
+  }
+
   /** Names of the first stage of every job `body` starts; a parquet
     * read's schema inference shows up as `parquet at <file>:<line>`.
     */
@@ -163,16 +199,32 @@ class HeapSessionsSpec extends AnyFunSuite {
 
   test("analyze on an open session reads no parquet footer; open reads each table once") {
     val hs = new HeapSessions(spark)
-    val dir = export("jobs", 5)
+    val dir = wasteExport("jobs")
     var sess: HeapSessions#Session = null
     val openJobs = jobNames { sess = hs.open(dir, "dump_jobs") }
     // each table's footer is read on the driver: open runs no Spark job
     assert(openJobs.isEmpty, openJobs)
     val first = jobNames(hs.analyze("dump_jobs", maxTier = 1, graph = false))
     assert(!first.exists(_.startsWith("parquet at")), first)
+    // one _object_index census, footer row counts, driver-sorted small results
+    assert(first.size <= 15, first)
     val second = jobNames(hs.analyze("dump_jobs", maxTier = 1, graph = false))
     assert(second.size <= first.size, (first, second))
     assert(!second.exists(_.startsWith("parquet at")), second)
+    hs.close(sess.id)
+  }
+
+  test("a repeated tier-1 analyze compiles no generated class") {
+    // Spark's cache of compiled classes keeps its default 100 entries
+    // here, as in any session the program did not build: a report whose
+    // classes do not fit recompiles part of them on every request
+    val hs = new HeapSessions(spark)
+    val sess = hs.open(wasteExport("codegen"), "dump_codegen")
+    val first = hs.analyze(sess.id, maxTier = 1, graph = false)
+    val before = org.apache.spark.CodegenCompiles()
+    val second = hs.analyze(sess.id, maxTier = 1, graph = false)
+    assert(org.apache.spark.CodegenCompiles() - before === 0L)
+    assert(second === first)
     hs.close(sess.id)
   }
 
