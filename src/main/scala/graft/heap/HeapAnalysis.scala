@@ -53,7 +53,7 @@ final class HeapTables(val spark: SparkSession, val dir: String) {
     * ("java.lang.String_4242" -> "java.lang.String").
     */
   val classCopies: Map[String, Seq[String]] =
-    entries.filterNot(_.startsWith("_")).groupBy(_.replaceAll("_\\d+$", ""))
+    entries.filterNot(_.startsWith("_")).groupBy(HeapDump.tableClass)
 
   private val systemTables: Map[String, Resolved] =
     systemNames.map(n => n -> new Resolved(Seq(n))).toMap

@@ -4,13 +4,16 @@ import HprofModel._
 import HprofParser.SubVisitor
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
+import scala.util.matching.Regex
 
 /** File access through the Hadoop FileSystem API so the same code
   * path serves file:// in tests and hdfs://;s3:// on a cluster.
@@ -30,8 +33,8 @@ object HeapIO {
 /** ONE open handle on a dump for a sequence of reads — a per-record
   * open/seek/close would cost more than the parse, above all for the
   * many small metadata records and on remote filesystems. Every reader
-  * of the format goes through here: the header + record walk at
-  * planning time and the executors' record-body reads.
+  * of the format goes through here: the driver's metadata read and the
+  * executors' segment reads.
   */
 final class HprofReader(pathStr: String) extends java.io.Closeable {
   private val path = new Path(pathStr)
@@ -44,11 +47,21 @@ final class HprofReader(pathStr: String) extends java.io.Closeable {
     buf
   }
 
-  /** Header parse + the sequential 9-byte record-header walk. */
-  def index(): (HprofParser.Header, Vector[RecordPtr]) = {
+  /** The driver's one read of a dump before any segment is parsed:
+    * the header, the sequential 9-byte record-header walk, and the
+    * bodies of the Utf8, LoadClass, StackFrame and StackTrace records.
+    */
+  def metadata(): HprofMetadata = {
     val len = fs.getFileStatus(path).getLen
     val header = HprofParser.parseHeader(read(0L, math.min(64L, len).toInt))
-    (header, HprofParser.indexRecords(read, len, header.bodyStart))
+    val records = HprofParser.indexRecords(read, len, header.bodyStart)
+    def parse[T](tag: Int)(f: (Array[Byte], Int) => T): Vector[T] =
+      records.filter(_.tag == tag).map(r => f(body(r), header.idSize))
+    HprofMetadata(header, records,
+      parse(Tag.Utf8)(HprofParser.parseUtf8).toMap,
+      parse(Tag.LoadClass)(HprofParser.parseLoadClass),
+      parse(Tag.StackFrame)(HprofParser.parseStackFrame),
+      parse(Tag.StackTrace)(HprofParser.parseStackTrace))
   }
 
   def body(r: RecordPtr): Array[Byte] = {
@@ -60,10 +73,82 @@ final class HprofReader(pathStr: String) extends java.io.Closeable {
   override def close(): Unit = in.close()
 }
 
-/** Driver-side metadata index built in pass 1 (SURVEY.md §2.A1-A3):
-  * strings, classes, stack frames/traces. Sized by class/method
-  * counts, not object counts, so it fits on the driver and broadcasts
-  * to executors — same shape as the reference's HprofIndex
+/** A dump's metadata (SURVEY.md §2.A1-A3), sized by class and method
+  * counts, not object counts, so it lives on the driver. The export's
+  * pass 1 and the `format("hprof")` scan both start from it.
+  */
+final case class HprofMetadata(
+    header: HprofParser.Header,
+    records: Vector[RecordPtr],
+    utf8: Map[Long, String],
+    loads: Vector[LoadClassInfo],
+    stackFrames: Vector[StackFrameRec],
+    stackTraces: Vector[StackTraceRec]) {
+  def segments: Vector[RecordPtr] = records.filter(r => Tag.isHeapSegment(r.tag))
+
+  def string(id: Long): String = utf8.getOrElse(id, "(missing utf8)")
+
+  /** The one class-name rule: a LOAD CLASS record's Utf8 name, '/' → '.'. */
+  private def loadedName(lc: LoadClassInfo): String = string(lc.nameId).replace('/', '.')
+
+  /** Class object id -> name: what every object is named by. */
+  lazy val classNames: Map[Long, String] = loads.map(lc => lc.classObjId -> loadedName(lc)).toMap
+
+  /** Class serial -> name, for stack frames. */
+  lazy val classSerialNames: Map[Int, String] = loads.map(lc => lc.serial -> loadedName(lc)).toMap
+}
+
+/** The one scan loop over heap segments: one open reader for a slice,
+  * each segment parsed by `HprofParser.scanSegment` with the visitor
+  * `visit` builds over that segment's output buffer. Output streams one
+  * segment at a time. The reader closes after the last segment, or on
+  * `close()` — which a Spark task's completion also calls, so a
+  * consumer that stops early (`take`) leaks no handle.
+  */
+final class SegmentScan[T](path: String, idSize: Int, slice: Seq[RecordPtr],
+    visit: mutable.Buffer[T] => SubVisitor) extends Iterator[T] with java.io.Closeable {
+  private val segments = slice.iterator
+  private var reader: HprofReader = _
+  private var out: Iterator[T] = Iterator.empty
+  Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+
+  override def hasNext: Boolean = {
+    while (!out.hasNext && segments.hasNext) {
+      if (reader == null) reader = new HprofReader(path)
+      val buf = mutable.ArrayBuffer.empty[T]
+      HprofParser.scanSegment(reader.body(segments.next()), idSize, visit(buf))
+      out = buf.iterator
+    }
+    if (!out.hasNext) close()
+    out.hasNext
+  }
+
+  override def next(): T = if (hasNext) out.next() else Iterator.empty.next()
+
+  override def close(): Unit = if (reader != null) { reader.close(); reader = null }
+}
+
+object SegmentScan {
+  /** The one segment split: `segs` as contiguous slices, one per scan
+    * task. One per core, but none that reads less than
+    * `spark.sql.files.openCostInBytes` (Spark's per-file scan charge,
+    * 4 MB by default). An export task writes its own file of every
+    * system table, and each file costs a scan task on every later read,
+    * so a 0.5 MB dump parses in one task and writes one file per table;
+    * a dump of cores × 4 MB or more keeps every core. The cut points are
+    * `SparkContext.parallelize`'s.
+    */
+  def slices(spark: SparkSession, segs: Vector[RecordPtr]): Seq[Vector[RecordPtr]] = {
+    val openCost = math.max(1L, spark.sessionState.conf.filesOpenCostInBytes)
+    val byBytes = (segs.iterator.map(_.bodyLength).sum + openCost - 1) / openCost
+    val n = math.max(1L, Seq(segs.size.toLong, spark.sparkContext.defaultParallelism.toLong, byBytes).min)
+    (0L until n).map(i => segs.slice((i * segs.size / n).toInt, ((i + 1) * segs.size / n).toInt))
+  }
+}
+
+/** Driver-side class index built in pass 1 (SURVEY.md §2.A1-A3): every
+  * class with a CLASS DUMP, named by [[HprofMetadata.classNames]], with
+  * its full instance layout — same shape as the reference's HprofIndex
   * (hprof_index.rs:34) but the per-object maps are left distributed.
   */
 final case class ClassInfo(
@@ -71,24 +156,7 @@ final case class ClassInfo(
     staticFields: Seq[StaticField], ownFields: Seq[FieldDesc],
     layout: Seq[LayoutField], loaderId: Long = 0L)
 
-final class HeapIndex(
-    val utf8: Map[Long, String],
-    val classes: Map[Long, ClassInfo],
-    val stackFrames: Seq[StackFrameRec],
-    val stackTraces: Seq[StackTraceRec],
-    val classSerialToName: Map[Int, String]) extends Serializable {
-
-  def className(classObjId: Long): String =
-    classes.get(classObjId).map(_.name).getOrElse("(unresolved)")
-
-  /** Reference appends "[]" to the array class's name
-    * (dump_to_parquet.rs:317); we additionally normalize JVM
-    * descriptor-style array class names ("[Ljava.lang.String;").
-    */
-  def arrayTypeName(arrayClassObjId: Long): String =
-    classes.get(arrayClassObjId).map(c => HeapIndex.normalizeArrayName(c.name))
-      .getOrElse("(unresolved)[]")
-}
+final class HeapIndex(val classes: Map[Long, ClassInfo])
 
 object HeapIndex {
   def normalizeArrayName(name: String): String =
@@ -96,22 +164,38 @@ object HeapIndex {
     else if (name.endsWith("[]")) name
     else name + "[]"
 
+  /** The one object-naming rule: a heap sub-record's (kind, type_name)
+    * under `classNames` ([[HprofMetadata.classNames]]). The reference
+    * appends "[]" to an array class's name (dump_to_parquet.rs:317); we
+    * additionally normalize JVM descriptor-style array class names
+    * ("[Ljava.lang.String;"). A class id no LOAD CLASS record names is
+    * "(unresolved)".
+    */
+  def kindAndType(ev: AnyRef, classNames: Map[Long, String]): (String, String) = {
+    def name(classObjId: Long): String = classNames.getOrElse(classObjId, "(unresolved)")
+    ev match {
+      case e: InstanceEv => ("instance", name(e.classObjId))
+      case e: ObjArrayEv => ("object_array", normalizeArrayName(name(e.arrayClassObjId)))
+      case e: PrimArrayEv => ("primitive_array", s"${BasicType.javaName(e.elemType)}[]")
+      case e: ClassDumpInfo => ("class", name(e.classObjId))
+    }
+  }
+
   /** Full-hierarchy instance layout: own fields first, then the super
     * chain (HPROF instance-dump value order). Shadowed names get a
     * `Declaring@name` prefix (reference util.rs:64-86).
     */
-  def buildLayout(classId: Long, dumps: Map[Long, ClassDumpInfo],
-      names: Map[Long, String], utf8: Map[Long, String]): Seq[LayoutField] = {
+  def buildLayout(classId: Long, dumps: Map[Long, ClassDumpInfo], meta: HprofMetadata): Seq[LayoutField] = {
     val out = mutable.ArrayBuffer.empty[LayoutField]
     val counts = mutable.Map.empty[String, Int]
     val visited = mutable.Set.empty[Long] // corrupt dumps can cycle
     var cur = classId
     while (cur != 0 && dumps.contains(cur) && visited.add(cur)) {
       val cd = dumps(cur)
-      val declaring = names.getOrElse(cur, "(unresolved)")
+      val declaring = meta.classNames.getOrElse(cur, "(unresolved)")
       val shortDecl = declaring.substring(declaring.lastIndexOf('.') + 1)
       cd.instanceFields.foreach { fd =>
-        val base = utf8.getOrElse(fd.nameId, "(missing utf8)")
+        val base = meta.string(fd.nameId)
         val n = counts.getOrElse(base, 0)
         counts(base) = n + 1
         out += LayoutField(if (n == 0) base else s"$shortDecl@$base", fd.typeTag)
@@ -123,13 +207,15 @@ object HeapIndex {
 }
 
 /** A parsed HPROF heap dump exposed as Spark DataFrames (SURVEY.md
-  * §2.A). Ingestion is two-pass: pass 1 walks record headers
-  * sequentially (9 bytes per record) and parses class/string metadata
-  * with distributed tasks; pass 2 (`writeParquet`) parses every heap
-  * segment exactly once, fully in parallel, keyed by (offset, length)
-  * ranges — elastic to cluster size, same shape as the reference's
-  * rayon parallelism (dump_to_parquet.rs:193) but not bound to one
-  * machine.
+  * §2.A). Ingestion is two-pass: pass 1 reads the metadata on the
+  * driver ([[HprofReader.metadata]]: the 9-byte record-header walk and
+  * the string, class-load and stack records) and collects the class
+  * dumps in one Spark job; pass 2 (`writeParquet`) parses every heap
+  * segment exactly once, fully in parallel — elastic to cluster size,
+  * same shape as the reference's rayon parallelism
+  * (dump_to_parquet.rs:193) but not bound to one machine. Every segment
+  * read goes through [[SegmentScan]] over [[SegmentScan.slices]], the
+  * same loop and split as the `format("hprof")` source.
   *
   * The one pass has two output modes. Robo mode (default) keeps object
   * references as bare longs; the id→type view is a join against
@@ -138,84 +224,38 @@ object HeapIndex {
   * robo tables with STRUCT{id,type} references.
   */
 final class HeapDump(spark: SparkSession, path: String) {
-  import HprofModel.Tag
-
-  val (header, records) = HeapIO.withReader(path)(_.index())
+  private val meta = HeapIO.withReader(path)(_.metadata())
+  val header: HprofParser.Header = meta.header
+  val records: Vector[RecordPtr] = meta.records
   val idSize: Int = header.idSize
 
-  private val segPtrs = records.filter(r => Tag.isHeapSegment(r.tag))
-
-  /** Tasks for a scan of `ptrs`: one per core, but none that reads
-    * less than `spark.sql.files.openCostInBytes` (Spark's per-file scan
-    * charge, 4 MB by default). A pass-2 task writes its own file of
-    * every system table, and each file costs a scan task on every
-    * later read, so a 0.5 MB dump parses in one task and writes one
-    * file per table; a dump of cores × 4 MB or more keeps every core.
-    */
-  private def parallelism(ptrs: Seq[RecordPtr]): Int = {
-    val openCost = math.max(1L, spark.sessionState.conf.filesOpenCostInBytes)
-    val bytes = ptrs.iterator.map(_.bodyLength).sum
-    val byBytes = (bytes + openCost - 1) / openCost
-    math.max(1L, Seq(ptrs.size.toLong, spark.sparkContext.defaultParallelism.toLong, byBytes).min).toInt
+  /** The heap segments as a scan RDD, one slice per partition. */
+  private def sliceRdd: RDD[Vector[RecordPtr]] = {
+    val slices = SegmentScan.slices(spark, meta.segments)
+    spark.sparkContext.parallelize(slices, slices.size)
   }
 
-  /** Parse a set of records on executors; `f` runs per record body,
-    * one file handle per partition.
+  /** Every heap segment scanned on executors with a visitor (pass-1
+    * class dumps, `renderObjects`).
     */
-  private def recordRdd[T: ClassTag](ptrs: Seq[RecordPtr])(f: Array[Byte] => Iterator[T]): RDD[T] = {
-    val p = path
-    spark.sparkContext.parallelize(ptrs, parallelism(ptrs))
-      .mapPartitions { it =>
-        HeapIO.withReader(p)(rd => it.flatMap(r => f(rd.body(r))).toVector.iterator)
-      }
+  private def scan[T: ClassTag](visit: mutable.Buffer[T] => SubVisitor): RDD[T] = {
+    val (p, idSz) = (path, idSize)
+    sliceRdd.mapPartitions(_.flatMap(slice => new SegmentScan(p, idSz, slice, visit)))
   }
 
-  /** Scan every heap segment with a visitor (pass-1 class dumps,
-    * `renderObjects`).
-    */
-  private def segmentRdd[T: ClassTag](mk: mutable.ArrayBuffer[T] => SubVisitor): RDD[T] = {
-    val idSz = idSize
-    recordRdd(segPtrs) { body =>
-      val buf = mutable.ArrayBuffer.empty[T]
-      HprofParser.scanSegment(body, idSz, mk(buf))
-      buf.iterator
-    }
-  }
-
-  /** Pass 1: distributed metadata parse, collected to the driver. */
+  /** Pass 1's one Spark job: the class dumps, collected to the driver. */
   val index: HeapIndex = {
-    val idSz = idSize
-    val utf8 = recordRdd(records.filter(_.tag == Tag.Utf8)) { b =>
-      Iterator.single(HprofParser.parseUtf8(b, idSz))
-    }.collect().toMap
-    val loads = recordRdd(records.filter(_.tag == Tag.LoadClass)) { b =>
-      Iterator.single(HprofParser.parseLoadClass(b, idSz))
-    }.collect()
-    val frames = recordRdd(records.filter(_.tag == Tag.StackFrame)) { b =>
-      Iterator.single(HprofParser.parseStackFrame(b, idSz))
-    }.collect()
-    val traces = recordRdd(records.filter(_.tag == Tag.StackTrace)) { b =>
-      Iterator.single(HprofParser.parseStackTrace(b, idSz))
-    }.collect()
-    val classDumps = segmentRdd[ClassDumpInfo] { buf =>
+    val dumps = scan[ClassDumpInfo] { buf =>
       new SubVisitor { override def onClassDump(cd: ClassDumpInfo): Unit = buf += cd }
-    }.collect()
-
-    val names: Map[Long, String] = loads.map { lc =>
-      lc.classObjId -> utf8.getOrElse(lc.nameId, "(missing utf8)").replace('/', '.')
-    }.toMap
-    val dumpMap = classDumps.map(cd => cd.classObjId -> cd).toMap
-    val classes = dumpMap.map { case (cid, cd) =>
-      cid -> ClassInfo(cid, names.getOrElse(cid, "(unresolved)"), cd.superClassObjId,
+    }.collect().map(cd => cd.classObjId -> cd).toMap
+    new HeapIndex(dumps.map { case (cid, cd) =>
+      cid -> ClassInfo(cid, meta.classNames.getOrElse(cid, "(unresolved)"), cd.superClassObjId,
         cd.instanceSize, cd.staticFields, cd.instanceFields,
-        HeapIndex.buildLayout(cid, dumpMap, names, utf8), cd.loaderObjId)
-    }
-    val serialToName = loads.map(lc => lc.serial ->
-      utf8.getOrElse(lc.nameId, "(missing utf8)").replace('/', '.')).toMap
-    new HeapIndex(utf8, classes, frames.toSeq, traces.toSeq, serialToName)
+        HeapIndex.buildLayout(cid, dumps, meta), cd.loaderObjId)
+    })
   }
 
-  private lazy val bcClassNames = spark.sparkContext.broadcast(index.classes.map { case (k, v) => k -> v.name })
+  private lazy val bcClassNames = spark.sparkContext.broadcast(meta.classNames)
 
   import spark.implicits._
 
@@ -268,7 +308,7 @@ final class HeapDump(spark: SparkSession, path: String) {
   def staticFields: DataFrame =
     index.classes.values.toSeq.sortBy(_.objId).flatMap { c =>
       c.staticFields.zipWithIndex.map { case (sf, i) =>
-        (c.objId, c.name, index.utf8.getOrElse(sf.nameId, "(missing utf8)"),
+        (c.objId, c.name, meta.string(sf.nameId),
           BasicType.javaName(sf.typeTag), sf.primitive, sf.refId, i)
       }
     }.toDF("class_obj_id", "class_name", "field_name",
@@ -276,17 +316,17 @@ final class HeapDump(spark: SparkSession, path: String) {
 
   // -- A10: stack frames / traces -------------------------------------
   def stackFrames: DataFrame =
-    index.stackFrames.map { f =>
+    meta.stackFrames.map { f =>
       (f.frameId,
-        index.classSerialToName.getOrElse(f.classSerial, "(unresolved)"),
-        index.utf8.getOrElse(f.methodNameId, "(missing utf8)"),
-        index.utf8.getOrElse(f.methodSigId, "(missing utf8)"),
-        index.utf8.getOrElse(f.sourceFileId, "(missing utf8)"),
+        meta.classSerialNames.getOrElse(f.classSerial, "(unresolved)"),
+        meta.string(f.methodNameId),
+        meta.string(f.methodSigId),
+        meta.string(f.sourceFileId),
         f.lineNum)
     }.toDF("frame_id", "class_name", "method_name", "method_signature", "source_file", "line_num")
 
   def stackTraces: DataFrame =
-    index.stackTraces.map(t => (t.serial, t.threadSerial, t.frameIds))
+    meta.stackTraces.map(t => (t.serial, t.threadSerial, t.frameIds))
       .toDF("stack_trace_serial", "thread_serial", "frame_ids")
 
   // -- A13: human-readable object rendering ---------------------------
@@ -298,10 +338,10 @@ final class HeapDump(spark: SparkSession, path: String) {
   def renderObjects(limit: Int): Seq[String] = {
     val classInfo = index.classes.map { case (k, v) =>
       k -> (v.name, v.layout, v.staticFields.map(sf =>
-        (index.utf8.getOrElse(sf.nameId, "(missing utf8)"), sf.typeTag, sf.primitive, sf.refId)))
+        (meta.string(sf.nameId), sf.typeTag, sf.primitive, sf.refId)))
     }
     val idSz = idSize
-    segmentRdd[String] { buf =>
+    scan[String] { buf =>
       new SubVisitor {
         override def onInstance(ev: InstanceEv): Unit = buf += (classInfo.get(ev.classObjId) match {
           case Some((name, layout, _)) =>
@@ -417,9 +457,9 @@ final class HeapDump(spark: SparkSession, path: String) {
 
   /** Pass 2 as ONE job over ONE parse: each segment task writes its
     * slice of the system tables to `outDir` directly (SystemTableWriter
-    * side files, deterministic names — retry-safe; `parallelism` sizes
-    * the tasks by bytes, so a small dump's system tables are one file
-    * each) while streaming
+    * side files, deterministic names — retry-safe; `SegmentScan.slices`
+    * sizes the tasks by bytes, so a small dump's system tables are one
+    * file each) while streaming
     * instance events into the (class, salt) exchange that feeds the
     * clustered per-class writers under `classDir`. Total dump reads:
     * pass-1 metadata + this — the same two-pass budget as the
@@ -433,31 +473,17 @@ final class HeapDump(spark: SparkSession, path: String) {
       }
     }
     val names = bcClassNames
-    val idSz = idSize
-    val p = path
-    val evRdd: RDD[InstanceEv] = spark.sparkContext
-      .parallelize(segPtrs, parallelism(segPtrs))
-      .mapPartitionsWithIndex { (pid, it) =>
-        val out = mutable.ArrayBuffer.empty[InstanceEv]
-        val writers = new SystemTableWriter(outDir, pid, names.value)
-        try {
-          HeapIO.withReader(p) { rd =>
-            it.foreach { r =>
-              HprofParser.scanSegment(rd.body(r), idSz, new SubVisitor {
-                override def onInstance(ev: InstanceEv): Unit = { writers.onInstance(ev); out += ev }
-                override def onPrimArray(ev: PrimArrayEv): Unit = writers.onPrimArray(ev)
-                override def onObjArray(ev: ObjArrayEv): Unit = writers.onObjArray(ev)
-                override def onGcRoot(ev: GcRootEv): Unit = writers.onGcRoot(ev)
-                override def onClassDump(cd: ClassDumpInfo): Unit = writers.onClassDump(cd)
-              })
-            }
-          }
-          writers.close()
-        } catch {
-          case e: Throwable => writers.abort(); throw e
-        }
-        out.iterator
+    val (p, idSz) = (path, idSize)
+    val evRdd: RDD[InstanceEv] = sliceRdd.mapPartitionsWithIndex { (pid, slices) =>
+      val writers = new SystemTableWriter(outDir, pid, names.value)
+      try {
+        val instances = slices.flatMap(s => new SegmentScan(p, idSz, s, writers.visitor)).toVector
+        writers.close()
+        instances.iterator
+      } catch {
+        case e: Throwable => writers.abort(); throw e
       }
+    }
     writeClassTables(classDir, evRdd)
   }
 
@@ -481,7 +507,7 @@ final class HeapDump(spark: SparkSession, path: String) {
     */
   private def writeClassTables(classDir: String, events: RDD[InstanceEv]): Unit = {
     val tables: Map[Long, (String, Seq[LayoutField])] =
-      index.classes.map { case (cid, ci) => cid -> (tableName(ci), ci.layout) }
+      index.classes.map { case (cid, ci) => cid -> (HeapDump.tableName(ci), ci.layout) }
     val bcTables = spark.sparkContext.broadcast(tables)
     val idSz = idSize
     val numParts = math.max(spark.sparkContext.defaultParallelism,
@@ -522,7 +548,7 @@ final class HeapDump(spark: SparkSession, path: String) {
       else Set.empty[String]
     }
     val tables = index.classes.values.toSeq.sortBy(_.objId)
-      .map(ci => tableName(ci) -> ci.layout.filter(_.typeTag == BasicType.Object).map(_.name))
+      .map(ci => HeapDump.tableName(ci) -> ci.layout.filter(_.typeTag == BasicType.Object).map(_.name))
       .filter { case (table, _) => staged.contains(table) }
     // a table without reference fields is already final: move it out
     tables.filter(_._2.isEmpty).foreach { case (table, _) =>
@@ -559,15 +585,13 @@ final class HeapDump(spark: SparkSession, path: String) {
   private def save(df: DataFrame, outDir: String, table: String): Unit =
     df.write.mode("overwrite").parquet(s"$outDir/$table")
 
-  private def tableName(ci: ClassInfo): String = s"${ci.name}_${ci.objId}"
-
   /** Metadata-only cleanup so a re-export to the same directory can't
     * leave stale part files from a previous layout behind.
     */
   private def dropExistingClassTables(outDir: String): Unit =
     HeapIO.withFs(outDir) { (fs, p) =>
       if (fs.exists(p)) {
-        val classDirs = index.classes.values.map(tableName).toSet
+        val classDirs = index.classes.values.map(HeapDump.tableName).toSet
         fs.listStatus(p).foreach { st =>
           if (st.isDirectory && classDirs.contains(st.getPath.getName))
             fs.delete(st.getPath, true)
@@ -584,6 +608,27 @@ object HeapDump {
   /** Class-table salting of `writeClassTables`. */
   private val SaltBuckets = 16
   private val RowsPerBucket = 1 << 16
+
+  /** A class table's directory, `<class>_<classObjId>`. Characters
+    * outside printable ASCII, and `%`, are written as `%XX` per UTF-8
+    * byte, so the name is a valid file name under any file-name
+    * encoding (a POSIX-locale JVM cannot create `Größe`); an ASCII name
+    * stays as it is, and so does every glob over the export.
+    */
+  private[heap] def tableName(ci: ClassInfo): String = {
+    val escaped = new StringBuilder
+    ci.name.getBytes(UTF_8).foreach { b =>
+      if (b >= 0x20 && b < 0x7f && b != '%') escaped += b.toChar else escaped ++= f"%%${b & 0xff}%02X"
+    }
+    s"${escaped}_${ci.objId}"
+  }
+
+  private val Escaped = "(%[0-9A-F]{2})+".r
+
+  /** The class name of a class table's directory: `tableName` undone. */
+  private[heap] def tableClass(dir: String): String =
+    Escaped.replaceAllIn(dir.replaceAll("_\\d+$", ""), m => Regex.quoteReplacement(new String(
+      m.matched.grouped(3).map(h => Integer.parseInt(h.substring(1), 16).toByte).toArray, UTF_8)))
 
   /** Re-lay an export as FLAT chunked files — the reference robo-mode
     * naming convention (`<table>_chunk<N>.parquet`,

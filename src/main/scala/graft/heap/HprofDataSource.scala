@@ -3,6 +3,7 @@ package graft.heap
 import HprofModel._
 import HprofParser.SubVisitor
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -14,20 +15,22 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.{Map => JMap}
-import scala.collection.mutable
 
 /** DataSource V2 for HPROF heap dumps:
   * `spark.read.format("hprof").load("/path/dump.hprof")` yields one
   * row per heap object (instances, object arrays, primitive arrays,
   * classes) with its resolved type name and payload size.
   *
-  * Spark-native ingestion shape (SURVEY.md §2.A3): planning walks the
-  * 9-byte record headers once on the driver (the only sequential part
-  * of the format) and resolves class names from the metadata records;
-  * heap segments are then bin-packed into byte-balanced
-  * `InputPartition`s, so a 100 GB dump parses with genuine cluster
-  * parallelism — no driver materialization, no shuffle. Column pruning
-  * is pushed into the reader.
+  * A thin view over the export's read path (SURVEY.md §2.A3):
+  * planning is `HeapDump`'s driver-side metadata read
+  * ([[HprofReader.metadata]]: the 9-byte record-header walk, the only
+  * sequential part of the format, and the class names); each input
+  * partition is one of `HeapDump`'s segment slices
+  * ([[SegmentScan.slices]]), read by the same scan loop
+  * ([[SegmentScan]]) and named by the same rule as `_object_index`
+  * ([[HeapIndex.kindAndType]]) — no driver materialization, no
+  * shuffle. Column pruning and `kind`/`type_name` filters are pushed
+  * into the reader.
   *
   * The richer per-class tables (typed field columns etc.) remain on
   * `HeapDump`/`HeapTables`; this source is the fast whole-heap object
@@ -102,7 +105,7 @@ final class HprofScanBuilder(path: String)
   override def build(): Scan = new HprofScan(path, required, pushed)
 }
 
-/** One byte-balanced bundle of heap-segment records. */
+/** One slice of heap-segment records ([[SegmentScan.slices]]). */
 final case class HprofSegmentsPartition(
     ptrs: Seq[RecordPtr], idSize: Int) extends InputPartition
 
@@ -118,59 +121,25 @@ final class HprofScan(path: String, required: StructType,
     * against other sources.
     */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val bytes = indexed._2
-      .filter(r => Tag.isHeapSegment(r.tag)).map(_.bodyLength).sum
+    private val bytes = meta.segments.map(_.bodyLength).sum
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
 
-  /** One driver-side pass shared by partition planning AND the reader
-    * factory: the sequential header walk is the format's intrinsic
-    * bottleneck, so it must not run twice per query. Metadata records
-    * (Utf8/LoadClass) are parsed in the same open-handle pass.
+  /** The export's driver-side metadata read, once per scan: partition
+    * planning and the reader factory share it, so the sequential
+    * header walk does not run twice per query.
     */
-  private lazy val indexed: (HprofParser.Header, Vector[RecordPtr], Map[Long, String]) =
-    HeapIO.withReader(path) { rd =>
-      val (header, records) = rd.index()
-      val idSz = header.idSize
-      val utf8 = records.filter(_.tag == Tag.Utf8)
-        .map(r => HprofParser.parseUtf8(rd.body(r), idSz)).toMap
-      val classNames = records.filter(_.tag == Tag.LoadClass)
-        .map(lc => HprofParser.parseLoadClass(rd.body(lc), idSz))
-        .map(lc => lc.classObjId ->
-          utf8.getOrElse(lc.nameId, "(missing utf8)").replace('/', '.')).toMap
-      (header, records, classNames)
-    }
+  private lazy val meta: HprofMetadata = HeapIO.withReader(path)(_.metadata())
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val (header, records, _) = indexed
-    val segs = records.filter(r => Tag.isHeapSegment(r.tag))
-    if (segs.isEmpty) return Array.empty
-    // byte-balanced bin packing into ~cluster-parallelism partitions
-    val slots = math.max(1, org.apache.spark.sql.SparkSession.active
-      .sparkContext.defaultParallelism)
-    val targetBytes = math.max(1L, segs.map(_.bodyLength).sum / slots)
-    val bins = mutable.ArrayBuffer(mutable.ArrayBuffer.empty[RecordPtr])
-    var binBytes = 0L
-    segs.foreach { r =>
-      if (binBytes >= targetBytes && bins.last.nonEmpty) {
-        bins += mutable.ArrayBuffer.empty[RecordPtr]
-        binBytes = 0L
-      }
-      bins.last += r
-      binBytes += r.bodyLength
-    }
-    bins.filter(_.nonEmpty)
-      .map(b => HprofSegmentsPartition(b.toSeq, header.idSize): InputPartition)
-      .toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    SegmentScan.slices(SparkSession.active, meta.segments)
+      .map(s => HprofSegmentsPartition(s, meta.header.idSize): InputPartition).toArray
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // class-name resolution: metadata records are class-count sized, so
-    // the map rides to executors inside the (serialized) factory
-    val (_, _, classNames) = indexed
-    new HprofReaderFactory(path, classNames, required, pushed)
-  }
+  // class names are class-count sized: the map rides to executors
+  // inside the (serialized) factory
+  override def createReaderFactory(): PartitionReaderFactory =
+    new HprofReaderFactory(path, meta.classNames, required, pushed)
 }
 
 final class HprofReaderFactory(path: String, classNames: Map[Long, String],
@@ -181,8 +150,9 @@ final class HprofReaderFactory(path: String, classNames: Map[Long, String],
   }
 }
 
-/** Parses its segment bundle with one open file handle, emitting one
-  * row per object sub-record, projected to the pruned schema.
+/** Scans its segment slice with [[SegmentScan]], emitting one row per
+  * object sub-record, named by the export's rule
+  * ([[HeapIndex.kindAndType]]) and projected to the pruned schema.
   */
 final class HprofPartitionReader(path: String, part: HprofSegmentsPartition,
     classNames: Map[Long, String], required: StructType,
@@ -191,74 +161,41 @@ final class HprofPartitionReader(path: String, part: HprofSegmentsPartition,
 
   // conjunction of the pushed kind / type_name constraints, evaluated
   // BEFORE a row (or its strings) is built; None = unconstrained
-  private val kindAllow: Option[Set[String]] = {
-    val sets = pushed.collect {
-      case EqualTo("kind", v: String) => Set(v)
-      case In("kind", vs) => vs.map(_.asInstanceOf[String]).toSet
-    }
-    if (sets.isEmpty) None else Some(sets.reduce(_ intersect _))
-  }
-  private val typeAllow: Option[Set[String]] = {
-    val sets = pushed.collect {
-      case EqualTo("type_name", v: String) => Set(v)
-      case In("type_name", vs) => vs.map(_.asInstanceOf[String]).toSet
-    }
-    if (sets.isEmpty) None else Some(sets.reduce(_ intersect _))
-  }
-  private def keep(kind: String, typeName: => String): Boolean =
-    kindAllow.forall(_.contains(kind)) && typeAllow.forall(_.contains(typeName))
+  private def allowed(column: String): Option[Set[String]] = pushed.collect {
+    case EqualTo(`column`, v: String) => Set(v)
+    case In(`column`, vs) => vs.map(_.asInstanceOf[String]).toSet
+  }.reduceOption(_ intersect _)
+  private val kindAllow = allowed("kind")
+  private val typeAllow = allowed("type_name")
 
   // column indexes of the pruned schema within the full schema
   private val proj: Array[Int] =
     required.fieldNames.map(HprofObjectsTable.schema.fieldIndex)
 
-  private def className(id: Long): String = classNames.getOrElse(id, "(unresolved)")
-  private def arrayName(id: Long): String =
-    HeapIndex.normalizeArrayName(className(id))
-
-  // ONE open handle for the whole partition
-  private val in = new HprofReader(path)
-
-  private val rows: Iterator[InternalRow] = {
-    val idSz = part.idSize
-    part.ptrs.iterator.flatMap { r =>
-      val buf = mutable.ArrayBuffer.empty[Array[Any]]
-      HprofParser.scanSegment(in.body(r), idSz, new SubVisitor {
-        override def onInstance(ev: InstanceEv): Unit =
-          if (keep("instance", className(ev.classObjId)))
-            buf += Array[Any](ev.objId, "instance", className(ev.classObjId),
-              ev.fields.length.toLong, null)
-        override def onObjArray(ev: ObjArrayEv): Unit =
-          if (keep("object_array", arrayName(ev.arrayClassObjId)))
-            buf += Array[Any](ev.objId, "object_array", arrayName(ev.arrayClassObjId),
-              ev.elements.length.toLong * idSz, ev.elements.length.toLong)
-        override def onPrimArray(ev: PrimArrayEv): Unit =
-          if (keep("primitive_array", BasicType.javaName(ev.elemType) + "[]")) {
-            val n = Seq(ev.booleans, ev.bytes, ev.chars, ev.shorts, ev.ints,
-              ev.longs, ev.floats, ev.doubles).find(_ != null).map(_.length).getOrElse(0)
-            buf += Array[Any](ev.objId,
-              "primitive_array", BasicType.javaName(ev.elemType) + "[]",
-              n.toLong * BasicType.size(ev.elemType, idSz), n.toLong)
-          }
-        override def onClassDump(ev: ClassDumpInfo): Unit =
-          if (keep("class", className(ev.classObjId)))
-            buf += Array[Any](ev.classObjId, "class", className(ev.classObjId),
-              ev.instanceSize.toLong, null)
-      })
-      buf.iterator.map { full =>
-        new GenericInternalRow(proj.map { i =>
-          full(i) match {
-            case s: String => UTF8String.fromString(s)
-            case v => v
-          }
-        }): InternalRow
+  private val rows = new SegmentScan[InternalRow](path, part.idSize, part.ptrs, buf => new SubVisitor {
+    private def add(ev: AnyRef, objId: Long, nBytes: => Long, nElems: => Any): Unit = {
+      val (kind, typeName) = HeapIndex.kindAndType(ev, classNames)
+      if (kindAllow.forall(_.contains(kind)) && typeAllow.forall(_.contains(typeName))) {
+        val full = Array[Any](objId, UTF8String.fromString(kind), UTF8String.fromString(typeName), nBytes, nElems)
+        buf += new GenericInternalRow(proj.map(full))
       }
     }
-  }
+    override def onInstance(ev: InstanceEv): Unit =
+      add(ev, ev.objId, ev.fields.length.toLong, null)
+    override def onObjArray(ev: ObjArrayEv): Unit =
+      add(ev, ev.objId, ev.elements.length.toLong * part.idSize, ev.elements.length.toLong)
+    override def onPrimArray(ev: PrimArrayEv): Unit = {
+      lazy val n = Seq(ev.booleans, ev.bytes, ev.chars, ev.shorts, ev.ints,
+        ev.longs, ev.floats, ev.doubles).find(_ != null).map(_.length).getOrElse(0).toLong
+      add(ev, ev.objId, n * BasicType.size(ev.elemType, part.idSize), n)
+    }
+    override def onClassDump(ev: ClassDumpInfo): Unit =
+      add(ev, ev.classObjId, ev.instanceSize.toLong, null)
+  })
 
   private var current: InternalRow = _
   override def next(): Boolean =
     if (rows.hasNext) { current = rows.next(); true } else false
   override def get(): InternalRow = current
-  override def close(): Unit = in.close()
+  override def close(): Unit = rows.close()
 }

@@ -34,18 +34,20 @@ final class HprofWriter(val idSize: Int = 8) {
     id
   })
 
-  /** LOAD_CLASS + (queued) CLASS_DUMP; returns the class obj id. */
+  /** LOAD_CLASS + (queued) CLASS_DUMP unless `dumped` is false;
+    * returns the class obj id.
+    */
   def defineClass(name: String, superId: Long = 0L,
       instanceFields: Seq[(String, Int)] = Nil,
       staticFields: Seq[(String, Int, Any)] = Nil,
-      instanceSize: Int = 16, loaderId: Long = 0L): Long = {
+      instanceSize: Int = 16, loaderId: Long = 0L, dumped: Boolean = true): Long = {
     val classId = freshId()
     val serial = nextClassSerial; nextClassSerial += 1
     val nameId = stringId(name)
     rec(Tag.LoadClass) { d =>
       d.writeInt(serial); wid(d, classId); d.writeInt(0); wid(d, nameId)
     }
-    classDumps += { d =>
+    if (dumped) classDumps += { d =>
       d.writeByte(Sub.ClassDump)
       wid(d, classId); d.writeInt(0); wid(d, superId)
       wid(d, loaderId); wid(d, 0L); wid(d, 0L); wid(d, 0L); wid(d, 0L)

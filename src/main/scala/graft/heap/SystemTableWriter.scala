@@ -1,12 +1,14 @@
 package graft.heap
 
 import HprofModel._
+import HprofParser.SubVisitor
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import scala.collection.mutable
 
 /** Executor-side multiplexed writer for the SYSTEM tables
   * (`_object_index`, `_object_arrays`, `_gc_roots`, the 8
@@ -52,57 +54,63 @@ final class SystemTableWriter(
       tag -> open(s"_primitive_arrays_${BasicType.javaName(tag)}", primArraySchema(tag))
     }.toMap
 
-  private def writeIndexRow(objId: Long, typeName: String): Unit = {
+  /** The `_object_index` row of an object: its type name under the one
+    * naming rule, with a `class ` prefix for a class.
+    */
+  private def index(objId: Long, ev: AnyRef): Unit = {
+    val (kind, typeName) = HeapIndex.kindAndType(ev, classNames)
     val g = objIndex._2.newGroup()
     g.add(0, objId)
-    g.add(1, typeName)
+    g.add(1, if (kind == "class") s"class $typeName" else typeName)
     objIndex._1.write(g)
   }
 
-  def onInstance(ev: InstanceEv): Unit =
-    writeIndexRow(ev.objId, classNames.getOrElse(ev.classObjId, "(unresolved)"))
+  /** The scan's visitor: every sub-record goes to its system tables, and
+    * each instance also to `instances`, for the class tables.
+    */
+  def visitor(instances: mutable.Buffer[InstanceEv]): SubVisitor = new SubVisitor {
+    override def onInstance(ev: InstanceEv): Unit = { index(ev.objId, ev); instances += ev }
 
-  def onClassDump(cd: ClassDumpInfo): Unit =
-    writeIndexRow(cd.classObjId, s"class ${classNames.getOrElse(cd.classObjId, "(unresolved)")}")
+    override def onClassDump(cd: ClassDumpInfo): Unit = index(cd.classObjId, cd)
 
-  def onObjArray(ev: ObjArrayEv): Unit = {
-    writeIndexRow(ev.objId, classNames.get(ev.arrayClassObjId)
-      .map(HeapIndex.normalizeArrayName).getOrElse("(unresolved)[]"))
-    val g = objArrays._2.newGroup()
-    g.add(0, ev.objId)
-    g.add(1, classNames.getOrElse(ev.arrayClassObjId, "(unresolved)"))
-    val list = g.addGroup(2)
-    ev.elements.foreach(e => list.addGroup("list").add("element", e))
-    objArrays._1.write(g)
-  }
-
-  def onPrimArray(ev: PrimArrayEv): Unit = {
-    writeIndexRow(ev.objId, s"${BasicType.javaName(ev.elemType)}[]")
-    val (w, f) = primByTag(ev.elemType)
-    val g = f.newGroup()
-    g.add(0, ev.objId)
-    val list = g.addGroup(1)
-    def el: Group = list.addGroup("list")
-    ev.elemType match {
-      case BasicType.Boolean => ev.booleans.foreach(v => el.add("element", v))
-      case BasicType.Byte => ev.bytes.foreach(v => el.add("element", v.toInt))
-      case BasicType.Char => ev.chars.foreach(v => el.add("element", v))
-      case BasicType.Short => ev.shorts.foreach(v => el.add("element", v.toInt))
-      case BasicType.Int => ev.ints.foreach(v => el.add("element", v))
-      case BasicType.Long => ev.longs.foreach(v => el.add("element", v))
-      case BasicType.Float => ev.floats.foreach(v => el.add("element", v))
-      case _ => ev.doubles.foreach(v => el.add("element", v))
+    override def onObjArray(ev: ObjArrayEv): Unit = {
+      index(ev.objId, ev)
+      val g = objArrays._2.newGroup()
+      g.add(0, ev.objId)
+      g.add(1, classNames.getOrElse(ev.arrayClassObjId, "(unresolved)"))
+      val list = g.addGroup(2)
+      ev.elements.foreach(e => list.addGroup("list").add("element", e))
+      objArrays._1.write(g)
     }
-    w.write(g)
-  }
 
-  def onGcRoot(ev: GcRootEv): Unit = {
-    val g = gcRoots._2.newGroup()
-    g.add(0, ev.rootType)
-    g.add(1, ev.objId)
-    ev.threadSerial.foreach(v => g.add(2, v))
-    ev.frameIndex.foreach(v => g.add(3, v))
-    gcRoots._1.write(g)
+    override def onPrimArray(ev: PrimArrayEv): Unit = {
+      index(ev.objId, ev)
+      val (w, f) = primByTag(ev.elemType)
+      val g = f.newGroup()
+      g.add(0, ev.objId)
+      val list = g.addGroup(1)
+      def el: Group = list.addGroup("list")
+      ev.elemType match {
+        case BasicType.Boolean => ev.booleans.foreach(v => el.add("element", v))
+        case BasicType.Byte => ev.bytes.foreach(v => el.add("element", v.toInt))
+        case BasicType.Char => ev.chars.foreach(v => el.add("element", v))
+        case BasicType.Short => ev.shorts.foreach(v => el.add("element", v.toInt))
+        case BasicType.Int => ev.ints.foreach(v => el.add("element", v))
+        case BasicType.Long => ev.longs.foreach(v => el.add("element", v))
+        case BasicType.Float => ev.floats.foreach(v => el.add("element", v))
+        case _ => ev.doubles.foreach(v => el.add("element", v))
+      }
+      w.write(g)
+    }
+
+    override def onGcRoot(ev: GcRootEv): Unit = {
+      val g = gcRoots._2.newGroup()
+      g.add(0, ev.rootType)
+      g.add(1, ev.objId)
+      ev.threadSerial.foreach(v => g.add(2, v))
+      ev.frameIndex.foreach(v => g.add(3, v))
+      gcRoots._1.write(g)
+    }
   }
 
   private def allWriters: Seq[ClassTableWriter.AtomicGroupWriter] =

@@ -1054,14 +1054,18 @@ object Heap {
     resolvedAnalysis(s).collectionSizingStats.get
   }
 
-  /** A15: the DataSource V2 binary scan vs the export — TWO fully
-    * independent code paths over the same dump (the DSv2 partition
-    * reader streaming `format("hprof")` rows, and the SystemTableWriter
-    * export that `_object_index` came from) must agree object-for-
-    * object. The oracle reconstructs the DSv2 (kind, type_name) view
-    * from the index's naming convention (classes carry a `class `
-    * prefix there; the 8 primitive `<t>[]` names are the primitive
-    * arrays; other `[]` names are object arrays).
+  /** A15: the DataSource V2 binary scan vs the export. Both read the
+    * dump through one path — the same metadata read, segment split,
+    * scan loop and (kind, type_name) naming rule — but end in different
+    * consumers: the DSv2 partition reader streams `format("hprof")`
+    * rows into a Spark aggregation, and the SystemTableWriter writes
+    * the `_object_index` parquet that DuckDB reads. The gate checks
+    * that their object counts agree per (kind, type_name), so a reader
+    * that drops, duplicates or misnames objects, or an index writer
+    * that encodes them wrongly, fails it. The oracle reconstructs the
+    * DSv2 view from the index's naming convention (classes carry a
+    * `class ` prefix there; the 8 primitive `<t>[]` names are the
+    * primitive arrays; other `[]` names are object arrays).
     */
   val qHeapDsv2: GateQuery = GateQuery(
     "q_heap_dsv2",

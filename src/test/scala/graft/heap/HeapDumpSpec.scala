@@ -117,6 +117,49 @@ class HeapDumpSpec extends AnyFunSuite {
     assert(messages(viaSource).contains(expected), messages(viaSource))
   }
 
+  test("opening a dump runs one Spark job: the class-dump scan") {
+    val w = new HprofWriter()
+    new Fixture(w)
+    val hp = w.writeTo(java.nio.file.Files.createTempDirectory("heap_open").resolve("t.hprof").toString)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    val hd = try {
+      val hd = new HeapDump(spark, hp)
+      org.apache.spark.ListenerDrain(sc)
+      hd
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() === 1)
+    assert(hd.index.classes.size === 8)
+  }
+
+  test("classes with non-ASCII names export in both modes, whatever the file-name encoding") {
+    val w = new HprofWriter()
+    val obj = w.defineClass("java.lang.Object")
+    val names = Seq("org.kafka.Gr\u00F6\u00DFe", "com.acme.x\uFF21")
+    names.foreach { n =>
+      val c = w.defineClass(n, obj, instanceFields = Seq("n" -> BasicType.Int))
+      (1 to 3).foreach(i => w.instance(c, Seq(BasicType.Int -> i)))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("heap_non_ascii")
+    val hp = w.writeTo(dir.resolve("t.hprof").toString)
+    for (resolve <- Seq(false, true)) {
+      val out = dir.resolve(s"pq_$resolve").toString
+      new HeapDump(spark, hp).writeParquet(out, resolveRefs = resolve)
+      val t = new HeapTables(spark, out)
+      names.foreach { n =>
+        assert(t.classCopies(n).size === 1, t.classCopies.keys)
+        assert(t.byClass(n).get.select("n").collect().map(_.getInt(0)).sorted.toSeq === Seq(1, 2, 3), n)
+        assert(t.rowCount(n) === Some(3L), n)
+      }
+    }
+  }
+
   test("countRecords tallies record types") {
     val (hd, _) = fixture
     val counts = hd.countRecords.collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -118,8 +118,38 @@ class HprofDataSourceSpec extends AnyFunSuite {
   }
 
   test("segments spread across input partitions") {
+    // the export's split: three segments far below the open cost are
+    // one partition; at an open cost of 1 byte, one per segment and core
     val df = spark.read.format("hprof").load(path)
-    assert(df.rdd.getNumPartitions >= 1)
+    assert(df.rdd.getNumPartitions === 1)
+    val key = "spark.sql.files.openCostInBytes"
+    val before = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "1")
+      val spread = spark.read.format("hprof").load(path)
+      assert(spread.rdd.getNumPartitions === math.min(3, spark.sparkContext.defaultParallelism))
+      assert(spread.count() === df.count())
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(df.count() > 0)
+  }
+
+  test("a class with a LOAD CLASS record but no CLASS DUMP names its objects alike in both paths") {
+    val w = new HprofWriter()
+    val obj = w.defineClass("java.lang.Object")
+    val ghost = w.instance(w.defineClass("com.acme.Ghost", obj, dumped = false), Nil)
+    val ghosts = w.objArray(w.defineClass("[Lcom.acme.Ghost;", obj, dumped = false), Seq(ghost))
+    val dir = java.nio.file.Files.createTempDirectory("dsv2_ghost")
+    val hp = w.writeTo(dir.resolve("g.hprof").toString)
+    val viaSource = spark.read.format("hprof").load(hp).collect()
+      .map(r => r.getAs[Long]("obj_id") -> (r.getAs[String]("kind"), r.getAs[String]("type_name"))).toMap
+    assert(viaSource(ghost) === ("instance", "com.acme.Ghost"))
+    assert(viaSource(ghosts) === ("object_array", "com.acme.Ghost[]"))
+    val out = dir.resolve("pq").toString
+    new HeapDump(spark, hp).writeParquet(out)
+    val index = spark.read.parquet(s"$out/_object_index").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(index(ghost) === "com.acme.Ghost")
+    assert(index(ghosts) === "com.acme.Ghost[]")
+    assert(index.keySet === viaSource.keySet)
   }
 }
