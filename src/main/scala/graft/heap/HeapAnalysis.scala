@@ -101,17 +101,26 @@ object HeapTables {
     * driver from one data file's footer. Spark's own inference
     * (`mergeSchema` off) converts the same footer the same way, but in
     * a Spark job per read: a fixed cost per table that every session
-    * open paid. A missing directory, or one without a data file,
-    * keeps Spark's inference, and so its error.
+    * open paid. The read names the data files rather than the
+    * directory: Spark takes a `_`-prefixed directory (every system
+    * table) for a hidden path and warns on each read. Past Spark's
+    * parallel-listing threshold (32 paths by default) the files would
+    * be listed in a Spark job, so such a table is read by directory. A
+    * missing directory, or one without a data file, keeps Spark's
+    * inference, and so its error.
     */
   def read(spark: SparkSession, tableDir: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    dataFiles(conf, tableDir).minByOption(_.getPath.getName) match {
+    val files = dataFiles(conf, tableDir)
+    files.minByOption(_.getPath.getName) match {
       case None => spark.read.parquet(tableDir)
       case Some(st) =>
         val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer(conf, st)),
           new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-        spark.read.schema(schema).parquet(tableDir)
+        val paths =
+          if (files.size > spark.sessionState.conf.parallelPartitionDiscoveryThreshold) Seq(tableDir)
+          else files.map(_.getPath.toString)
+        spark.read.schema(schema).parquet(paths: _*)
     }
   }
 

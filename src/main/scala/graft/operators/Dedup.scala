@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines (SURVEY.md
@@ -58,11 +59,6 @@ object Dedup {
     docs.join(survivors, docs(idCol) === col("__sid"), "left_semi")
   }
 
-  /** The hash index a continuously-updated corpus keeps alongside its
-    * data: one fixed-width row per distinct content hash. At 100 TB
-    * of text this is the ONLY corpus-side state incremental dedup
-    * ever touches — new batches never rescan corpus content.
-    */
   /** Content hash with NULL text coalesced to the empty string: a
     * NULL hash would never match in joins (NULL != NULL), so null-text
     * rows would silently pass every anti-join and accumulate across
@@ -73,6 +69,11 @@ object Dedup {
   private def contentHash(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     md5(coalesce(text, lit("")).cast("binary"))
 
+  /** The hash index a continuously-updated corpus keeps alongside its
+    * data: one fixed-width row per distinct content hash. At 100 TB
+    * of text this is the ONLY corpus-side state incremental dedup
+    * ever touches — new batches never rescan corpus content.
+    */
   def corpusHashIndex(corpus: DataFrame, textCol: String): DataFrame =
     corpus.select(contentHash(col(textCol)).as("content_hash")).distinct()
 
@@ -80,20 +81,36 @@ object Dedup {
     * corpus. Drops batch rows whose content hash is already in the
     * corpus index (anti-join on fixed-width hashes — shuffles only
     * the batch, broadcastable when the batch is small relative to the
-    * index), then keep-first deduplicates WITHIN the batch. Output:
-    * the rows to append to the corpus.
+    * index), then keep-first deduplicates WITHIN the batch
+    * ([[keepFirst]]). The index is not `distinct`-ed first: an
+    * anti-join's result does not depend on duplicates on its right
+    * side. Output: the rows to append to the corpus.
     */
   def incremental(batch: DataFrame, corpusHashes: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val hashed = batch.withColumn("content_hash", contentHash(col(textCol)))
-    val fresh = hashed.join(
-      corpusHashes.select(col("content_hash").as("__known")).distinct(),
-      col("content_hash") === col("__known"), "left_anti")
-    val survivors = fresh
-      .groupBy("content_hash").agg(min(col(idCol)).as("__sid"))
-      .select("__sid")
-    fresh.join(survivors, fresh(idCol) === col("__sid"), "left_semi")
+    keepFirst(notIn(hashed, corpusHashes), idCol)
   }
+
+  /** `hashed`'s rows whose content_hash is not in `corpusHashes`. */
+  private def notIn(hashed: DataFrame, corpusHashes: DataFrame): DataFrame =
+    hashed.join(corpusHashes.select(col("content_hash").as("__known")),
+      col("content_hash") === col("__known"), "left_anti")
+
+  /** Keep-first: a row survives iff its id is the minimum id of its
+    * content hash (rows tied on that minimum all survive; a null id
+    * never does). One exchange on content_hash and a window, so no
+    * aggregate and no join back: a join back on the id alone would
+    * also keep a row whose id is the minimum of a DIFFERENT hash. The
+    * trade-off: every copy of one text meets in one task, where an
+    * aggregate joined back on (content_hash, id) would combine
+    * map-side and so tolerate a text with millions of copies, at the
+    * cost of a second exchange or a broadcast job.
+    */
+  private def keepFirst(fresh: DataFrame, idCol: String): DataFrame =
+    fresh.withColumn("__min", min(col(idCol)).over(Window.partitionBy("content_hash")))
+      .filter(col(idCol) === col("__min"))
+      .drop("__min")
 
   /** Serialized Bloom filter over the corpus hash index (probed via
     * [[mightContainBloom]]). Built with Spark's own
@@ -153,15 +170,8 @@ object Dedup {
         val hashed = batch.withColumn("content_hash", contentHash(col(textCol)))
         val suspect = mightContainBloom(bloom, col("content_hash"))
         val definitelyFresh = hashed.filter(!suspect)
-        val verifiedFresh = hashed.filter(suspect).join(
-          corpusHashes.select(col("content_hash").as("__known")).distinct(),
-          col("content_hash") === col("__known"), "left_anti")
-          .drop("__known")
-        val fresh = definitelyFresh.unionByName(verifiedFresh)
-        val survivors = fresh
-          .groupBy("content_hash").agg(min(col(idCol)).as("__sid"))
-          .select("__sid")
-        fresh.join(survivors, fresh(idCol) === col("__sid"), "left_semi")
+        val verifiedFresh = notIn(hashed.filter(suspect), corpusHashes)
+        keepFirst(definitelyFresh.unionByName(verifiedFresh), idCol)
     }
 
   /** D4 — exact n-gram Jaccard near-dup pairs. The shingle inverted-
@@ -413,7 +423,6 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, thresholdPct: Int): DataFrame = {
     require(thresholdPct > 0 && thresholdPct <= 100, s"invalid pct $thresholdPct")
-    import org.apache.spark.sql.expressions.Window
     val ex = shingleIndexPlan(docs, idCol, textCol, n).localCheckpoint()
     val dfreq = ex.groupBy("shingle").agg(count(lit(1)).as("df"))
     val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
@@ -620,7 +629,6 @@ object Dedup {
   private def prefixMachinery(docs: DataFrame, idCol: String, textCol: String,
       n: Int, tNum: Int, tDen: Int): (DataFrame, DataFrame, DataFrame) = {
     require(tNum > 0 && tNum <= tDen, "threshold must be in (0, 1]")
-    import org.apache.spark.sql.expressions.Window
     // materialize the exploded index ONCE: df count, size count, the
     // ranked join, and verification all consume it, and recomputing
     // the CPU-bound tokenize→shingle→explode chain per consumer costs
@@ -774,7 +782,6 @@ object Dedup {
   def sortedNeighborhoodPairs(docs: DataFrame, idCol: String, textCol: String,
       window: Int, n: Int, tNum: Int, tDen: Int): DataFrame = {
     require(window >= 1, s"invalid window $window")
-    import org.apache.spark.sql.expressions.Window
     val keyed = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .withColumn("ck", canonicalKey(col("text")))
       .withColumn("__b", substring(col("ck"), 1, 1))
@@ -2226,7 +2233,6 @@ object Dedup {
       k: Int, w: Int): (DataFrame, DataFrame) = {
     require(k > 0, s"invalid k-gram size $k")
     require(w > 0, s"invalid window size $w")
-    import org.apache.spark.sql.expressions.Window
     val toks = split(coalesce(col(textCol), lit("")), " ")
     val base = docs.select(col(idCol).as("doc_id"), toks.as("__toks"),
       size(toks).as("n_tok"))

@@ -1084,6 +1084,24 @@ object StreamingOps {
       .start()
   }
 
+  /** E15 — continuous corpus curation: each micro-batch is exact-
+    * deduped against the corpus's hash index ([[graft.operators.Dedup.incremental]])
+    * and its survivors are appended under `corpusDir`:
+    *  - `docs/`, the survivors, partitioned by (stream_id, batch_id);
+    *  - `hashes/`, the hash index: parquet with the fixed schema
+    *    (content_hash string, stream_id string, batch_id long). It is
+    *    read with that schema, so no batch runs an inference job; a
+    *    missing directory is an empty index.
+    *
+    * A batch's hashes append lands last, so it is the batch's commit
+    * marker: a batch whose (stream_id, batch_id) is already in the
+    * index was committed before a restart and is skipped. Only the
+    * first batch a query run executes checks (the flag lives in the
+    * `foreachBatch` closure, which runs on the driver, one batch at a
+    * time): on restart Spark re-runs at most one batch, the last one in
+    * the offset log with no commit-log entry, and that is always the
+    * run's first batch; inside a run a failing batch stops the query.
+    */
   def curateStream(docs: DataFrame, idCol: String, textCol: String,
       corpusDir: String, checkpointDir: String):
       org.apache.spark.sql.streaming.StreamingQuery = {
@@ -1095,26 +1113,25 @@ object StreamingOps {
     val streamId = java.security.MessageDigest.getInstance("MD5")
       .digest(checkpointDir.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)
+    var firstOfRun = true
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val hashesDir = s"$corpusDir/hashes"
         import spark.implicits._
-        val known: DataFrame =
-          try {
-            val h = spark.read.parquet(hashesDir)
-            // replay guard: the hashes append is the COMMIT MARKER —
-            // it lands last, so its presence means the whole batch
-            // (docs included) committed before the restart
-            if (h.filter(col("batch_id") === batchId &&
-                col("stream_id") === streamId).limit(1).count() > 0) null
-            else h.select("content_hash")
-          } catch {
-            case _: org.apache.spark.sql.AnalysisException => // first batch
-              Seq.empty[String].toDF("content_hash")
-          }
-        if (known != null) {
+        val hp = new org.apache.hadoop.fs.Path(hashesDir)
+        val index =
+          if (hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp))
+            Some(spark.read.schema("content_hash STRING, stream_id STRING, batch_id BIGINT")
+              .parquet(hashesDir))
+          else None
+        val replay = firstOfRun && index.exists(h =>
+          !h.filter(col("batch_id") === batchId && col("stream_id") === streamId).isEmpty)
+        firstOfRun = false
+        if (!replay) {
+          val known = index.map(_.select("content_hash"))
+            .getOrElse(Seq.empty[String].toDF("content_hash"))
           // localCheckpoint: `fresh` feeds two writes and must not
           // re-read the hash index mid-append
           val fresh = graft.operators.Dedup

@@ -65,6 +65,21 @@ class BloomDedupSpec extends AnyFunSuite {
     assert(got === Set(1L, 3L))
   }
 
+  test("keep-first keeps one row per text when an id repeats across texts") {
+    val batch = Seq((5L, "A"), (5L, "B"), (3L, "B"), (7L, "C")).toDF("doc_id", "text")
+    val empty = Seq.empty[String].toDF("content_hash")
+    // a non-empty index that matches nothing: bloomIncremental's own path
+    val other = Dedup.corpusHashIndex(Seq("Z").toDF("text"), "text")
+    for (index <- Seq(empty, other)) {
+      for ((name, out) <- Seq(
+          "incremental" -> Dedup.incremental(batch, index, "doc_id", "text"),
+          "bloomIncremental" -> Dedup.bloomIncremental(batch, index, "doc_id", "text", 100L))) {
+        val got = out.select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+        assert(got === Seq((3L, "B"), (5L, "A"), (7L, "C")), name)
+      }
+    }
+  }
+
   test("bloom bytes are deterministic for a given index") {
     val corpus = Dedup.corpusHashIndex(docs.filter(col("doc_id") % 3 === 0), "text")
     val a = Dedup.corpusBloom(corpus, 10000L).get

@@ -460,6 +460,49 @@ class HeapDumpSpec extends AnyFunSuite {
     assert(rows(small, "_object_index") === rows(roboDir, "_object_index"))
   }
 
+  test("a table is read by its data files, and by directory past the listing threshold, with no job") {
+    val cores = spark.sparkContext.defaultParallelism
+    assume(cores > 1)
+    val dir = java.nio.file.Files.createTempDirectory("heap_listing")
+    val w = new HprofWriter()
+    new Fixture(w)
+    val path = w.writeTo(dir.resolve("t.hprof").toString, segments = cores)
+    val out = dir.resolve("pq").toString
+    def withConf[T](key: String, value: String)(f: => T): T = {
+      val before = spark.conf.getOption(key)
+      try { spark.conf.set(key, value); f } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    withConf("spark.sql.files.openCostInBytes", "1")(new HeapDump(spark, path).writeParquet(out))
+    val tableDir = s"$out/_object_index"
+    val files = new java.io.File(tableDir).listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    assert(files.size === cores)
+    val sc = spark.sparkContext
+    // at the file count the read names the files (no `_` directory for
+    // Spark to warn about); under it, the directory (no listing job)
+    for ((threshold, roots) <- Seq(cores -> files, 1 -> Set("_object_index"))) {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerDrain(sc)
+      sc.addSparkListener(listener)
+      val df = try withConf("spark.sql.sources.parallelPartitionDiscovery.threshold", threshold.toString) {
+        val df = HeapTables.read(spark, tableDir)
+        org.apache.spark.ListenerDrain(sc)
+        df
+      } finally sc.removeSparkListener(listener)
+      assert(jobs.get() === 0, s"threshold $threshold")
+      val rootPaths = df.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+            .location.rootPaths.map(_.getName)
+      }.flatten.toSet
+      assert(rootPaths === roots, s"threshold $threshold")
+      assert(df.count() === spark.read.parquet(tableDir).count())
+    }
+  }
+
   test("rowCount equals count() for every table and class, loader copies and several files included") {
     def assertCounts(dir: String): Unit = {
       val t = new HeapTables(spark, dir)
