@@ -805,26 +805,34 @@ final class HeapAnalysis(t: HeapTables) {
 
   // -- B20: referrer-graph analytics ----------------------------------
 
-  /** Class names whose super chain reaches java.lang.ref.Reference —
-    * weak/soft/phantom reference types and their subclasses (incl.
-    * shapes like WeakHashMap$Entry that extend WeakReference outside
-    * the java.lang.ref package, which a name-prefix test would miss).
-    * Driver-walked over the class-count-sized hierarchy table, the
-    * same bounded-metadata budget refEdges already spends on
-    * `_fields`. Names from several loaders merge (supers union), so
-    * one reference-typed copy marks the name.
+  /** The object-typed `_fields` slots as (class, field), split into
+    * STRONG slots and the `referent` slots of Reference subtypes (a
+    * slot named `referent` or `…@referent` in a class whose super chain
+    * reaches java.lang.ref.Reference — incl. shapes like
+    * WeakHashMap$Entry that extend WeakReference outside the
+    * java.lang.ref package, which a name-prefix test would miss). Both
+    * tables are class-count-sized metadata, collected and walked on
+    * the driver once per instance; names from several loaders merge
+    * (supers union), so one reference-typed copy marks the name.
+    * Without `_class_hierarchy` every slot is strong.
     */
-  private def referenceTypeNames: Option[Set[String]] =
-    t.system("_class_hierarchy").map { ch =>
-      val sup = ch.select("class_name", "super_class_name").collect()
-        .groupBy(_.getString(0)).map { case (n, rows) =>
-          n -> rows.flatMap(r => Option(r.getString(1))).toSet
-        }
-      val root = "java.lang.ref.Reference"
-      def reaches(n: String, seen: Set[String]): Boolean =
-        n == root || (!seen(n) &&
-          sup.getOrElse(n, Set.empty[String]).exists(p => reaches(p, seen + n)))
-      sup.keySet.filter(n => reaches(n, Set.empty)).toSet
+  private lazy val objectSlots: Option[(Seq[(String, String)], Seq[(String, String)])] =
+    t.system("_fields").map { fm =>
+      val refTypes = t.system("_class_hierarchy").fold(Set.empty[String]) { ch =>
+        val sup = ch.select("class_name", "super_class_name").collect()
+          .groupBy(_.getString(0)).map { case (n, rows) =>
+            n -> rows.flatMap(r => Option(r.getString(1))).toSet
+          }
+        val root = "java.lang.ref.Reference"
+        def reaches(n: String, seen: Set[String]): Boolean =
+          n == root || (!seen(n) &&
+            sup.getOrElse(n, Set.empty[String]).exists(p => reaches(p, seen + n)))
+        sup.keySet.filter(n => reaches(n, Set.empty)).toSet
+      }
+      fm.filter(col("field_type") === "object")
+        .select("class_name", "field_name")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+        .partition { case (c, f) => !(refTypes(c) && (f == "referent" || f.endsWith("@referent"))) }
     }
 
   /** Every object→object reference edge in the heap: instance ref
@@ -852,15 +860,8 @@ final class HeapAnalysis(t: HeapTables) {
     */
   lazy val refEdges: Option[DataFrame] = refEdgesImpl.map(_.localCheckpoint())
 
-  private def refEdgesImpl: Option[DataFrame] = t.system("_fields").map { fm =>
-    val refTypes = referenceTypeNames.getOrElse(Set.empty)
-    def isReferent(cls: String, fld: String): Boolean =
-      refTypes(cls) && (fld == "referent" || fld.endsWith("@referent"))
-    val refFields = fm.filter(col("field_type") === "object")
-      .select("class_name", "field_name")
-      .collect().map(r => (r.getString(0), r.getString(1)))
-      .filterNot((isReferent _).tupled)
-    val fieldEdges = refFields.toSeq.flatMap { case (cls, fld) =>
+  private def refEdgesImpl: Option[DataFrame] = objectSlots.map { case (strong, _) =>
+    val fieldEdges = strong.flatMap { case (cls, fld) =>
       t.byClass(cls).map { df =>
         df.select(col("obj_id").as("src"),
           HeapTables.refField(df, fld).as("dst"),
@@ -890,6 +891,54 @@ final class HeapAnalysis(t: HeapTables) {
       .reduceOption(_ unionByName _)
       .map(_.filter(col("dst") =!= 0L))
   }.flatten
+
+  /** The distinct (src, dst) pairs of [[refEdges]]: the reference graph
+    * every liveness pass walks (B22 ownership, B23/B24/B31 root BFS,
+    * B33 dominators), derived and checkpointed once per instance. B20
+    * and B21 count in-degree over the raw edges instead, where two
+    * slots of one object pointing at one target are two references.
+    */
+  private lazy val refGraph: Option[DataFrame] =
+    refEdges.map(_.select("src", "dst").distinct().localCheckpoint())
+
+  /** Frontier BFS over [[refGraph]] from `seeds` (label columns…,
+    * obj_id): the distinct seeds at dist 0, plus every (labels…,
+    * object) first reached within `maxHops` with its hop count. Each
+    * round expands only the NEWLY reached rows (the delta), so total
+    * exchange is O(reachable edges), not O(rounds × reachable); labels
+    * ride along, so one pass answers every label at once and an
+    * object reachable under two labels appears under both.
+    */
+  private def reachFrom(ref: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
+    val labels = seeds.columns.toSeq.filterNot(_ == "obj_id")
+    var reach = seeds.distinct().withColumn("dist", lit(0)).localCheckpoint()
+    var frontier = reach
+    for (h <- 1 to maxHops) {
+      val nxt = frontier.join(ref, frontier("obj_id") === ref("src"))
+        .select(labels.map(col) :+ col("dst").as("obj_id"): _*).distinct()
+        .join(reach, labels :+ "obj_id", "left_anti")
+        .withColumn("dist", lit(h)).localCheckpoint()
+      reach = reach.unionByName(nxt).localCheckpoint()
+      frontier = nxt
+    }
+    reach
+  }
+
+  /** Bounded owner chase: each object of `oi` starts at its owner in
+    * `own` (o, p), or itself when it has none, then follows `own`
+    * `rounds - 1` more steps. Returns (o, r), r being where the chase
+    * stopped: an object with no owner, or the end of a chain (or
+    * cycle) deeper than `rounds` — both deterministic. Each step is
+    * one hash join of fixed-width rows against the owner table.
+    */
+  private def chaseOwners(oi: DataFrame, own: DataFrame, rounds: Int): DataFrame = {
+    var p = oi.select(col("obj_id").as("o")).join(own, Seq("o"), "left")
+      .select(col("o"), coalesce(col("p"), col("o")).as("r"))
+    for (_ <- 1 until rounds)
+      p = p.join(own.select(col("o").as("r"), col("p").as("__p2")), Seq("r"), "left")
+        .select(col("o"), coalesce(col("__p2"), col("r")).as("r"))
+    p
+  }
 
   /** B20 — shared-object census: the in-degree distribution of the
     * reference graph rolled up by REFERENCED type. High max_in_deg on
@@ -925,19 +974,14 @@ final class HeapAnalysis(t: HeapTables) {
     * driver-bounded class metadata), one dimension-keyed aggregate.
     */
   def referenceCensus: Option[DataFrame] = for {
-    refTypes <- referenceTypeNames
-    fm <- t.system("_fields")
+    _ <- t.system("_class_hierarchy")
+    (_, referent) <- objectSlots
   } yield {
-    val slots = fm.filter(col("field_type") === "object")
-      .select("class_name", "field_name")
-      .collect().map(r => (r.getString(0), r.getString(1)))
-      .filter { case (c, f) =>
-        refTypes(c) && (f == "referent" || f.endsWith("@referent")) }
-    val frames = slots.toSeq.flatMap { case (cls, fld) =>
+    val frames = referent.flatMap { case (cls, fld) =>
       t.byClass(cls).map(df => df.select(lit(cls).as("ref_class"),
         HeapTables.refField(df, fld).as("referent")))
     }
-    import fm.sparkSession.implicits._
+    import t.spark.implicits._
     frames.reduceOption(_ unionByName _)
       .map(_.groupBy("ref_class").agg(
         count(lit(1)).as("n_total"),
@@ -971,20 +1015,12 @@ final class HeapAnalysis(t: HeapTables) {
     oi <- t.system("_object_index")
   } yield {
     val own = edges.groupBy("dst")
-      .agg(count(lit(1)).as("__deg"), min("src").as("owner"))
+      .agg(count(lit(1)).as("__deg"), min("src").as("p"))
       .filter(col("__deg") === 1)
-      .select(col("dst").as("o"), col("owner"))
+      .select(col("dst").as("o"), col("p"))
       .localCheckpoint() // consumed once per round
-    var p = oi.select(col("obj_id").as("o"))
-      .join(own, Seq("o"), "left")
-      .select(col("o"), coalesce(col("owner"), col("o")).as("p"))
-    for (_ <- 1 until rounds) {
-      p = p.join(own.select(col("o").as("p"), col("owner").as("__p2")),
-          Seq("p"), "left")
-        .select(col("o"), coalesce(col("__p2"), col("p")).as("p"))
-    }
-    val sizes = p.groupBy("p").agg(count(lit(1)).as("owned"))
-    sizes.join(oi, sizes("p") === oi("obj_id"))
+    val sizes = chaseOwners(oi, own, rounds).groupBy("r").agg(count(lit(1)).as("owned"))
+    sizes.join(oi, sizes("r") === oi("obj_id"))
       .groupBy("type_name")
       .agg(count(lit(1)).as("n_roots"), sum("owned").as("total_owned"),
         max("owned").as("max_owned"))
@@ -1044,30 +1080,6 @@ final class HeapAnalysis(t: HeapTables) {
     .agg(count(lit(1)).as("n_objects"),
       sum(coalesce(col("bytes"), lit(0L))).as("shallow_bytes"))
 
-  /** B22 — dominator-approximate retained size: "what does deleting X
-    * free?" answered per root type. The exact answer is a dominator
-    * tree (Lengauer–Tarjan); this is the bounded-round distributed
-    * approximation over the B20 edge set, strictly tighter than B21:
-    *
-    *  1. unique-referrer targets (distinct in-degree 1) are owned by
-    *     that referrer — chased `chaseRounds` owner steps upward;
-    *  2. a SHARED target whose referrers ALL collapse to one common
-    *     root is owned by that root (the diamond case: A→B→D, A→C→D
-    *     gives D to A — the dominator answer first-order ownership
-    *     misses); referrers with differing roots keep the target a
-    *     root of its own ("kept alive by multiple", the conservative
-    *     MAT answer);
-    *  3. one more `chaseRounds` chase folds adopted subtrees in, and
-    *     every object's shallow bytes roll up to its final root.
-    *
-    * Approximation contract (stated, deterministic): chains deeper
-    * than `chaseRounds` and diamonds-of-diamonds beyond one adoption
-    * pass stay put (under-collapse, never over-attribution); cycles
-    * resolve by bounded unroll exactly as B21. Scale shape: every
-    * step is an aggregate or hash join of fixed-width (o, p) rows —
-    * the label-propagation discipline of Components.scala — and the
-    * only driver-resident state is the bounded `_fields` metadata.
-    */
   /** Shared B22/B27 core: the (r, owned, retained) per-final-root
     * frame — every object assigned to the root its ownership chain
     * (unique-owner collapse + one diamond-adoption pass) ends at,
@@ -1085,25 +1097,16 @@ final class HeapAnalysis(t: HeapTables) {
     * one diamond-adoption pass, bounded chase.
     */
   private def finalOwnership(chaseRounds: Int): Option[DataFrame] = for {
-    edges <- refEdges
+    ref <- refGraph
     oi <- t.system("_object_index")
   } yield {
-    val ref = edges.select("src", "dst").distinct().localCheckpoint()
     val deg = ref.groupBy("dst")
       .agg(count(lit(1)).as("__deg"), min("src").as("__only"))
       .localCheckpoint() // consumed by own1 and the shared-node prune
     val own1 = deg.filter(col("__deg") === 1)
       .select(col("dst").as("o"), col("__only").as("p"))
       .localCheckpoint() // consumed once per chase round, twice
-    def chase(own: DataFrame): DataFrame = {
-      var p = oi.select(col("obj_id").as("o")).join(own, Seq("o"), "left")
-        .select(col("o"), coalesce(col("p"), col("o")).as("r"))
-      for (_ <- 1 until chaseRounds)
-        p = p.join(own.select(col("o").as("r"), col("p").as("__p2")), Seq("r"), "left")
-          .select(col("o"), coalesce(col("__p2"), col("r")).as("r"))
-      p
-    }
-    val r0 = chase(own1).localCheckpoint()
+    val r0 = chaseOwners(oi, own1, chaseRounds).localCheckpoint()
     val shared = deg.filter(col("__deg") >= 2).select(col("dst").as("o"))
     val adopt = ref.join(shared, ref("dst") === shared("o"))
       .select(shared("o"), ref("src"))
@@ -1113,7 +1116,7 @@ final class HeapAnalysis(t: HeapTables) {
       .filter(col("__nr") === 1 && col("__r") =!= col("o"))
       .select(col("o"), col("__r").as("p"))
     val own2 = own1.unionByName(adopt).localCheckpoint()
-    chase(own2)
+    chaseOwners(oi, own2, chaseRounds)
   }
 
   /** B30 — retained-attribution MATRIX: retained bytes grouped by
@@ -1138,6 +1141,30 @@ final class HeapAnalysis(t: HeapTables) {
     .groupBy("root_type", "owned_type")
     .agg(count(lit(1)).as("n_objects"), sum("bytes").as("bytes"))
 
+  /** B22 — dominator-approximate retained size: "what does deleting X
+    * free?" answered per root type. The exact answer is a dominator
+    * tree (Lengauer–Tarjan); this is the bounded-round distributed
+    * approximation over the B20 edge set, strictly tighter than B21:
+    *
+    *  1. unique-referrer targets (distinct in-degree 1) are owned by
+    *     that referrer — chased `chaseRounds` owner steps upward;
+    *  2. a SHARED target whose referrers ALL collapse to one common
+    *     root is owned by that root (the diamond case: A→B→D, A→C→D
+    *     gives D to A — the dominator answer first-order ownership
+    *     misses); referrers with differing roots keep the target a
+    *     root of its own ("kept alive by multiple", the conservative
+    *     MAT answer);
+    *  3. one more `chaseRounds` chase folds adopted subtrees in, and
+    *     every object's shallow bytes roll up to its final root.
+    *
+    * Approximation contract (stated, deterministic): chains deeper
+    * than `chaseRounds` and diamonds-of-diamonds beyond one adoption
+    * pass stay put (under-collapse, never over-attribution); cycles
+    * resolve by bounded unroll exactly as B21. Scale shape: every
+    * step is an aggregate or hash join of fixed-width (o, p) rows —
+    * the label-propagation discipline of Components.scala — and the
+    * only driver-resident state is the bounded `_fields` metadata.
+    */
   def retainedSize(chaseRounds: Int = 4): Option[DataFrame] = for {
     perRoot <- retainedPerRoot(chaseRounds)
     oi <- t.system("_object_index")
@@ -1196,7 +1223,7 @@ final class HeapAnalysis(t: HeapTables) {
     */
   def exactDominatorTop(limit: Int = 25,
       maxNodes: Int = 16000000): Option[DataFrame] = for {
-    edges <- refEdges
+    ref <- refGraph
     oi <- t.system("_object_index")
     gcr <- t.system("_gc_roots")
     sizes <- perObjectShallowSizes
@@ -1247,7 +1274,7 @@ final class HeapAnalysis(t: HeapTables) {
     // rows on the driver)
     val (eSrc, eDst) = {
       val parts: Array[(Array[Long], Array[Long])] =
-        edges.select("src", "dst").distinct().rdd.mapPartitions { it =>
+        ref.rdd.mapPartitions { it =>
           val bs = new scala.collection.mutable.ArrayBuilder.ofLong
           val bd = new scala.collection.mutable.ArrayBuilder.ofLong
           it.foreach { r => bs += r.getLong(0); bd += r.getLong(1) }
@@ -1467,73 +1494,45 @@ final class HeapAnalysis(t: HeapTables) {
     * type (1 = root-adjacent), max_dist how deep its liveness chains
     * run.
     *
-    * Frontier BFS: each round expands only NEWLY reached objects (the
-    * delta), so total exchange is O(reachable edges), not
-    * O(rounds × reachable) — the scale shape Bellman-style
-    * re-relaxation lacks. First-reach depth IS the minimum distance,
-    * so the result equals a `maxHops`-round Bellman unroll (the form
-    * the SQL oracle replays) exactly. Approximation contract: objects
+    * Frontier BFS ([[reachFrom]]): total exchange is O(reachable
+    * edges) — the scale shape Bellman-style re-relaxation lacks.
+    * First-reach depth IS the minimum distance, so the result equals
+    * a `maxHops`-round Bellman unroll (the form the SQL oracle
+    * replays) exactly. Approximation contract: objects
     * whose shortest root path exceeds `maxHops` report unreached —
     * deterministic, never over-claimed.
     */
   def rootReachability(maxHops: Int = 8): Option[DataFrame] = for {
-    edges <- refEdges
+    ref <- refGraph
     roots <- t.system("_gc_roots")
     oi <- t.system("_object_index")
-  } yield {
-    val ref = edges.select("src", "dst").distinct().localCheckpoint()
-    var dist = roots.select(col("obj_id")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint()
-    var frontier = dist
-    for (h <- 1 to maxHops) {
-      val nxt = frontier.join(ref, frontier("obj_id") === ref("src"))
-        .select(col("dst").as("obj_id")).distinct()
-        .join(dist, Seq("obj_id"), "left_anti")
-        .withColumn("dist", lit(h)).localCheckpoint()
-      dist = dist.unionByName(nxt).localCheckpoint()
-      frontier = nxt
-    }
-    oi.join(dist, Seq("obj_id"), "left")
-      .groupBy("type_name")
-      .agg(count(lit(1)).as("n_objects"),
-        sum(when(col("dist").isNotNull, 1L).otherwise(0L)).as("n_reached"),
-        coalesce(min("dist").cast("long"), lit(-1L)).as("min_dist"),
-        coalesce(max("dist").cast("long"), lit(-1L)).as("max_dist"))
-  }
+  } yield oi.join(reachFrom(ref, roots.select("obj_id"), maxHops), Seq("obj_id"), "left")
+    .groupBy("type_name")
+    .agg(count(lit(1)).as("n_objects"),
+      sum(when(col("dist").isNotNull, 1L).otherwise(0L)).as("n_reached"),
+      coalesce(min("dist").cast("long"), lit(-1L)).as("min_dist"),
+      coalesce(max("dist").cast("long"), lit(-1L)).as("max_dist"))
 
   /** B31 — per-root-KIND reachable census: for each GC-root kind
     * (JNI global, sticky class, thread object, Java frame, …), the
     * objects and shallow bytes reachable within `maxHops` from THAT
     * kind's roots — "how much memory is pinned via JNI vs threads vs
     * classes", the attribution that says which retention CHANNEL to
-    * investigate before any per-type drilldown. Labeled frontier BFS:
-    * the frontier key is (root_kind, obj), so one pass answers every
-    * kind at once; per-kind totals overlap by design (an object
+    * investigate before any per-type drilldown. Labeled frontier BFS
+    * ([[reachFrom]]) keyed by (root_type, obj), so one pass answers
+    * every kind at once; per-kind totals overlap by design (an object
     * reachable from two kinds counts in both — attribution, not
     * partition). Same bounded-hop contract as B23.
     */
   def rootKindReachability(maxHops: Int = 8): Option[DataFrame] = for {
-    edges <- refEdges
+    ref <- refGraph
     roots <- t.system("_gc_roots")
     sizes <- perObjectShallowSizes
-  } yield {
-    val ref = edges.select("src", "dst").distinct().localCheckpoint()
-    var reach = roots.select(col("root_type"), col("obj_id")).distinct()
-      .localCheckpoint()
-    var frontier = reach
-    for (_ <- 1 to maxHops) {
-      val nxt = frontier.join(ref, frontier("obj_id") === ref("src"))
-        .select(col("root_type"), col("dst").as("obj_id")).distinct()
-        .join(reach, Seq("root_type", "obj_id"), "left_anti")
-        .localCheckpoint()
-      reach = reach.unionByName(nxt).localCheckpoint()
-      frontier = nxt
-    }
-    reach.join(sizes, Seq("obj_id"), "left")
-      .groupBy("root_type")
-      .agg(count(lit(1)).as("n_reached"),
-        sum(coalesce(col("bytes"), lit(0L))).as("reached_bytes"))
-  }
+  } yield reachFrom(ref, roots.select("root_type", "obj_id"), maxHops)
+    .join(sizes, Seq("obj_id"), "left")
+    .groupBy("root_type")
+    .agg(count(lit(1)).as("n_reached"),
+      sum(coalesce(col("bytes"), lit(0L))).as("reached_bytes"))
 
   /** B24 — exemplar shortest PATH to a GC root, per type: B23 answers
     * "how far from a root"; the question an investigation acts on is
@@ -1549,22 +1548,11 @@ final class HeapAnalysis(t: HeapTables) {
     * unroll joins never replay the BFS.
     */
   def rootPathExemplars(maxHops: Int = 8): Option[DataFrame] = for {
-    edges <- refEdges
+    ref <- refGraph
     roots <- t.system("_gc_roots")
     oi <- t.system("_object_index")
   } yield {
-    val ref = edges.select("src", "dst").distinct().localCheckpoint()
-    var dist = roots.select(col("obj_id")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint()
-    var frontier = dist
-    for (h <- 1 to maxHops) {
-      val nxt = frontier.join(ref, frontier("obj_id") === ref("src"))
-        .select(col("dst").as("obj_id")).distinct()
-        .join(dist, Seq("obj_id"), "left_anti")
-        .withColumn("dist", lit(h)).localCheckpoint()
-      dist = dist.unionByName(nxt).localCheckpoint()
-      frontier = nxt
-    }
+    val dist = reachFrom(ref, roots.select("obj_id"), maxHops)
     val ds = dist.select(col("obj_id").as("src"), col("dist").as("sd"))
     val dd = dist.select(col("obj_id").as("pdst"), col("dist").as("dd"))
     val parent = ref.join(ds, Seq("src"))
@@ -1766,13 +1754,13 @@ final class HeapAnalysis(t: HeapTables) {
     * byte_array_distribution / large_byte_arrays / waste_findings /
     * total_estimated_waste) as a JSON string — the machine-readable
     * counterpart of renderReport.
-    */
-  /** @param graph include the B20-B23 graph sections (referrers /
+    *
+    * @param graph include the B20-B28 graph sections (referrers /
     *              ownership / retained / reachability / exemplars /
-    *              classloaders / references) — the expensive closure
-    *              passes; `false` = summary + waste checks only, the
-    *              reference tool's exact surface at a fraction of the
-    *              cost (the HTTP gate's setting).
+    *              classloaders / top retained / references) — the
+    *              expensive closure passes; `false` = summary + waste
+    *              checks only, the reference tool's exact surface at a
+    *              fraction of the cost (the HTTP gate's setting).
     */
   def analyzeJson(topN: Int = 30, waste: Boolean = true, maxTier: Int = 2,
       sessionId: String = "", graph: Boolean = true): String = {

@@ -49,14 +49,18 @@ object Dedup {
   /** D1 apply-step: the deduplicated corpus itself — keep the
     * smallest id per content hash. Window-free: a self-join against
     * the survivor set keeps the plan a hash-aggregate + semi-join,
-    * both map-side-partial and skew-tolerant at 100 TB.
+    * both map-side-partial and skew-tolerant at 100 TB. The semi-join
+    * matches on (content hash, id): on the id alone a row would also
+    * survive when its id is the minimum of a DIFFERENT text. The hash
+    * compares null-safe, so null-text rows form one group like any
+    * other text.
     */
   def dropExactDuplicates(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val hash = md5(col(textCol).cast("binary"))
     val survivors = docs
-      .select(col(idCol).as("__id"), md5(col(textCol).cast("binary")).as("__h"))
+      .select(col(idCol).as("__id"), hash.as("__h"))
       .groupBy("__h").agg(min("__id").as("__sid"))
-      .select("__sid")
-    docs.join(survivors, docs(idCol) === col("__sid"), "left_semi")
+    docs.join(survivors, docs(idCol) === col("__sid") && hash <=> col("__h"), "left_semi")
   }
 
   /** Content hash with NULL text coalesced to the empty string: a

@@ -839,20 +839,19 @@ object StreamingOps {
       .outputMode(OutputMode.Append())
       .start()
 
-  /** Continuous corpus curation: every micro-batch is incrementally
-    * exact-deduped against the PERSISTED corpus (batch content whose
-    * hash the corpus already holds is dropped, then keep-first within
-    * the batch) and the survivors appended — the streaming shape of a
-    * training corpus that grows by daily crawls.
-    *
-    * State is the on-disk hash index `corpusDir/hashes` (fixed-width
-    * rows, the only corpus-side data the batch ever joins), written
-    * with the batch id so a replayed micro-batch after a restart is
-    * filtered out rather than double-appended (foreachBatch is
-    * at-least-once; the batch-id guard restores effective
-    * exactly-once for this sink, same discipline as the reference's
-    * idempotent chunk files).
+  /** The identity of a stream, stamped into the names of the per-batch
+    * directories and commit markers its sinks write: the first 12 hex
+    * digits of the MD5 of its checkpoint directory. Batch ids are only
+    * unique WITHIN a checkpoint, so a restarted query (same checkpoint)
+    * replays onto its own names idempotently, while a NEW query over
+    * the same output gets its own id space instead of colliding with
+    * batch 0.
     */
+  def streamId(checkpointDir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(checkpointDir.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(12)
+
   /** E43 — INGEST-TIME decontamination guard: the D20 benchmark-
     * overlap check running as a stream-static pass at arrival, so an
     * eval doc never enters the training corpus in the first place
@@ -868,9 +867,7 @@ object StreamingOps {
   def decontaminateStream(docs: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, shingleN: Int, outDir: String, checkpointDir: String):
       org.apache.spark.sql.streaming.StreamingQuery = {
-    val streamId = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val streamId = StreamingOps.streamId(checkpointDir)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -883,19 +880,6 @@ object StreamingOps {
       .start()
   }
 
-  /** E44 — streaming quantile monitor: each micro-batch reduces to
-    * its (shard, bin, cnt) histogram rows (the D65 sketch algebra)
-    * and lands them as ONE per-epoch shard directory beside the
-    * persisted sketch — so a live p50/p95/p99 dashboard reads a tiny
-    * fixed-width table, never the stream's history, and the answer
-    * after any prefix of batches is EXACTLY the batch sketch over
-    * those batches' rows (bin counts are merge-associative; nothing
-    * is approximate at bin resolution). Replay-safe: the epoch
-    * directory is overwritten idempotently, so a re-delivered batch
-    * re-lands the same rows instead of double-counting (the
-    * curateStream stream-id discipline). Query side:
-    * `Sketches.quantilesFromSketchDirs(spark, epochDirs(spark, dir), ...)`.
-    */
   /** The epoch directories a sketch stream has landed so far, as
     * CONCRETE paths for a batch read. Reading `"$dir/epoch_*"` as one
     * glob string instead makes FileStreamSink.hasMetadata
@@ -913,12 +897,23 @@ object StreamingOps {
       .map(_.getPath.toString).sorted.toSeq
   }
 
+  /** E44 — streaming quantile monitor: each micro-batch reduces to
+    * its (shard, bin, cnt) histogram rows (the D65 sketch algebra)
+    * and lands them as ONE per-epoch shard directory beside the
+    * persisted sketch — so a live p50/p95/p99 dashboard reads a tiny
+    * fixed-width table, never the stream's history, and the answer
+    * after any prefix of batches is EXACTLY the batch sketch over
+    * those batches' rows (bin counts are merge-associative; nothing
+    * is approximate at bin resolution). Replay-safe: the epoch
+    * directory is overwritten idempotently, so a re-delivered batch
+    * re-lands the same rows instead of double-counting (the
+    * curateStream stream-id discipline). Query side:
+    * `Sketches.quantilesFromSketchDirs(spark, epochDirs(spark, dir), ...)`.
+    */
   def histogramSketchStream(docs: DataFrame, valueCol: String,
       shardCol: String, sketchDir: String, binWidth: Long,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val streamId = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val streamId = StreamingOps.streamId(checkpointDir)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -944,9 +939,7 @@ object StreamingOps {
   def kmvSketchStream(docs: DataFrame, groupCol: String, valueCol: String,
       k: Int, sketchDir: String, checkpointDir: String):
       org.apache.spark.sql.streaming.StreamingQuery = {
-    val streamId = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val streamId = StreamingOps.streamId(checkpointDir)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -971,9 +964,7 @@ object StreamingOps {
   def countSketchStream(docs: DataFrame, valueCol: String, width: Int,
       depth: Int, sketchDir: String, checkpointDir: String):
       org.apache.spark.sql.streaming.StreamingQuery = {
-    val streamId = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val streamId = StreamingOps.streamId(checkpointDir)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1002,9 +993,7 @@ object StreamingOps {
       depth: Int, sketchDir: String, checkpointDir: String):
       org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val streamId = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val streamId = StreamingOps.streamId(checkpointDir)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1037,9 +1026,7 @@ object StreamingOps {
   def centroidStatsStream(docs: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Long]], dim: Int, statsDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val streamId = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val streamId = StreamingOps.streamId(checkpointDir)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1066,9 +1053,7 @@ object StreamingOps {
   def spanGuardStream(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, outDir: String, checkpointDir: String):
       org.apache.spark.sql.streaming.StreamingQuery = {
-    val streamId = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val streamId = StreamingOps.streamId(checkpointDir)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1105,14 +1090,7 @@ object StreamingOps {
   def curateStream(docs: DataFrame, idCol: String, textCol: String,
       corpusDir: String, checkpointDir: String):
       org.apache.spark.sql.streaming.StreamingQuery = {
-    // stream identity: batch ids are only unique WITHIN a checkpoint,
-    // so commit markers and docs partitions are stamped with a digest
-    // of the checkpoint dir — a restarted query (same checkpoint)
-    // replays idempotently, while a NEW query over the same corpus
-    // gets its own id space instead of colliding with batch 0
-    val streamId = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val streamId = StreamingOps.streamId(checkpointDir)
     var firstOfRun = true
     docs.writeStream
       .option("checkpointLocation", checkpointDir)

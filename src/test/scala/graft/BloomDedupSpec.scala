@@ -73,7 +73,8 @@ class BloomDedupSpec extends AnyFunSuite {
     for (index <- Seq(empty, other)) {
       for ((name, out) <- Seq(
           "incremental" -> Dedup.incremental(batch, index, "doc_id", "text"),
-          "bloomIncremental" -> Dedup.bloomIncremental(batch, index, "doc_id", "text", 100L))) {
+          "bloomIncremental" -> Dedup.bloomIncremental(batch, index, "doc_id", "text", 100L),
+          "dropExactDuplicates" -> Dedup.dropExactDuplicates(batch, "doc_id", "text"))) {
         val got = out.select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
         assert(got === Seq((3L, "B"), (5L, "A"), (7L, "C")), name)
       }

@@ -475,6 +475,93 @@ class HeapAnalysisSpec extends AnyFunSuite {
     assert(deepest.toSeq === Seq(r, math.min(a, b), c, d))
   }
 
+  /** Exports the hprof `w` writes and opens an analysis of it. */
+  private def analyze(w: HprofWriter, name: String): HeapAnalysis = {
+    val dir = java.nio.file.Files.createTempDirectory(s"heapan_$name")
+    val hprof = dir.resolve(s"$name.hprof").toString
+    w.writeTo(hprof, segments = 1)
+    val out = dir.resolve("parquet").toString
+    new HeapDump(spark, hprof).writeParquet(out)
+    new HeapAnalysis(new HeapTables(spark, out))
+  }
+
+  test("B21 ownership collapse: hand-worked chains, a double slot and a shared target") {
+    // chain A -> B -> C -> D: each has ONE incoming reference, so all
+    // collapse to A. Dbl holds E in BOTH slots: B21 counts references,
+    // not referrers, so E has in-degree 2 and stays its own root. Z is
+    // shared by X and Y: its own root. The String owns its byte[].
+    val w = new HprofWriter()
+    val obj = w.defineClass("java.lang.Object")
+    val node = w.defineClass("com.example.Node", obj,
+      instanceFields = Seq("left" -> BasicType.Object,
+        "right" -> BasicType.Object, "payload" -> BasicType.Int))
+    val strCls = w.defineClass("java.lang.String", obj,
+      instanceFields = Seq("value" -> BasicType.Object, "hash" -> BasicType.Int))
+    def mk(l: Long, r: Long, p: Int) =
+      w.instance(node, Seq(BasicType.Object -> l, BasicType.Object -> r, BasicType.Int -> p))
+    val d = mk(0L, 0L, 4)
+    val c = mk(d, 0L, 3)
+    val b = mk(c, 0L, 2)
+    mk(b, 0L, 1) // A
+    val e = mk(0L, 0L, 6)
+    mk(e, e, 5) // Dbl
+    val z = mk(0L, 0L, 9)
+    mk(z, 0L, 7) // X
+    mk(z, 0L, 8) // Y
+    w.instance(strCls, Seq(BasicType.Object -> w.byteArray("abc"), BasicType.Int -> 1))
+    val an = analyze(w, "ownership")
+    def collapse(rounds: Int) = an.ownershipCollapse(rounds).get.collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    val got = collapse(8)
+    // Node roots A {A,B,C,D}, Dbl, E, X, Y, Z: 6 roots owning all 9
+    assert(got("com.example.Node") === ((6L, 9L, 4L)))
+    assert(got("java.lang.String") === ((1L, 2L, 2L)))
+    // class objects have no referrers: each its own root
+    Seq("class java.lang.Object", "class com.example.Node", "class java.lang.String")
+      .foreach(cls => assert(got(cls) === ((1L, 1L, 1L)), cls))
+    assert(got.size === 5, "byte[] is owned, never a root")
+    // two chase steps stop D at B: A {A,B,C} and B {D} are both roots
+    assert(collapse(2)("com.example.Node") === ((7L, 9L, 3L)))
+  }
+
+  test("B31 root-kind reachability: an object reachable from two kinds counts under both") {
+    // ThreadObj R1 -> M -> S -> L; JniGlobal R2 -> S and R3 -> S;
+    // BusyMonitor pins a String and its byte[]. S and L are reachable
+    // from both kinds and count under each, once per kind although two
+    // JniGlobal roots reach them; U is reachable from none.
+    // Node = 16 + 4 + 4 + 4 = 28 bytes, String 24, byte[3] 19.
+    val w = new HprofWriter()
+    val obj = w.defineClass("java.lang.Object")
+    val node = w.defineClass("com.example.Node", obj,
+      instanceFields = Seq("left" -> BasicType.Object,
+        "right" -> BasicType.Object, "payload" -> BasicType.Int))
+    val strCls = w.defineClass("java.lang.String", obj,
+      instanceFields = Seq("value" -> BasicType.Object, "hash" -> BasicType.Int))
+    def mk(l: Long, p: Int) =
+      w.instance(node, Seq(BasicType.Object -> l, BasicType.Object -> 0L, BasicType.Int -> p))
+    val l = mk(0L, 4)
+    val s = mk(l, 3)
+    val m = mk(s, 2)
+    val r1 = mk(m, 1)
+    val r2 = mk(s, 5)
+    val r3 = mk(s, 6)
+    mk(0L, 7) // U
+    val str = w.instance(strCls, Seq(BasicType.Object -> w.byteArray("abc"), BasicType.Int -> 1))
+    w.gcRoot(Sub.RootThreadObject, r1, threadSerial = 1)
+    w.gcRoot(Sub.RootJniGlobal, r2)
+    w.gcRoot(Sub.RootJniGlobal, r3)
+    w.gcRoot(Sub.RootMonitorUsed, str)
+    val an = analyze(w, "rootkinds")
+    def reach(hops: Int) = an.rootKindReachability(hops).get.collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    // ThreadObj {R1, M, S, L}; JniGlobal {R2, R3, S, L}
+    assert(reach(8) === Map("ThreadObj" -> ((4L, 112L)), "JniGlobal" -> ((4L, 112L)),
+      "BusyMonitor" -> ((2L, 43L))))
+    // two hops: L (3 hops from R1) drops from ThreadObj only
+    assert(reach(2) === Map("ThreadObj" -> ((3L, 84L)), "JniGlobal" -> ((4L, 112L)),
+      "BusyMonitor" -> ((2L, 43L))))
+  }
+
   test("B25 heap diff: hand-worked growth, birth, and death deltas") {
     def export(nStrings: Int, withNew: Boolean): String = {
       val w = new HprofWriter()
